@@ -170,17 +170,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — runtime conf overrides for A/B runs
-    // (e.g. graft.vocab_broadcast.max_corpus_bytes=1 forces the
-    // unbounded-corpus fallbacks without a code edit)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k.trim, v.trim)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_CONF entries must be k=v, got '$kv'")
-        }
-      })
+    SparkEntry.applyConfOverrides(spark)
 
     // Warmup: touch every table once (filesystem cache + codegen + shuffle machinery).
     Seq("lineitem", "orders", "customer", "supplier", "nation", "region",

@@ -19,17 +19,9 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — same A/B override hook as Bench (r17:
     // lets a plan dump disable the driver gates to show the distributed
-    // shape, e.g. graft.cc.driver_max_edges=0)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k.trim, v.trim)
-          case _ => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_CONF entries must be k=v, got '$kv'")
-        }
-      })
+    // shape, e.g. SPARK_GRAFT_CONF=graft.cc.driver_max_edges=0
+    SparkEntry.applyConfOverrides(spark)
     names.foreach { n =>
       println(s"\n========== $n ==========")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -11,6 +11,22 @@ import graft.queries._
   */
 object SparkEntry {
 
+  /** Runtime conf overrides for the mains (Bench, Verify, Explain):
+    * `SPARK_GRAFT_CONF="k=v;k2=v2"` sets each entry on the session, e.g.
+    * `graft.cc.driver_max_edges=0` runs a distributed fallback, or
+    * `graft.vocab_broadcast.max_corpus_bytes=1` the unbounded-corpus plans,
+    * without a code edit. A malformed entry fails loudly.
+    */
+  def applyConfOverrides(spark: SparkSession,
+      spec: Option[String] = sys.env.get("SPARK_GRAFT_CONF")): Unit =
+    spec.foreach(_.split(';').filter(_.nonEmpty).foreach { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => spark.conf.set(k.trim, v.trim)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entries must be k=v, got '$kv'")
+      }
+    })
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     QueriesTpch.queries("q5_region")(spark, "/root/testdata/sf0.001")

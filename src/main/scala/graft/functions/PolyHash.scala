@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -59,16 +58,11 @@ case class PolyHash(child: Expression) extends UnaryExpression {
 }
 
 object PolyHash {
-  /** Register `poly_hash` in a session's function registry and return a
-    * column-builder (the public Column constructor no longer accepts raw
-    * expressions in Spark 4; SQL-registry + expr is the supported route).
+  /** Register `poly_hash` in a session's function registry (the public
+    * Column constructor no longer accepts raw expressions in Spark 4;
+    * SQL-registry + expr is the supported route).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "poly_hash", exprs => PolyHash(exprs.head), "built-in")
-
-  def polyHash(spark: org.apache.spark.sql.SparkSession, colName: String): Column = {
-    register(spark)
-    org.apache.spark.sql.functions.expr(s"poly_hash($colName)")
-  }
 }

@@ -277,7 +277,22 @@ object Classifier {
     // corpus per GD round. Lazy: the first action over it (the feature
     // take or the feats checkpoint) computes it in the same pass
     val train = docs.filter(p).localCheckpoint(eager = false)
-    val featsPlan = features(train, idCol, textCol, buckets)
+    fitGated(features(train, idCol, textCol, buckets), train, idCol, label,
+      buckets, iters, eta)
+  }
+
+  /** GD over the feature relation `featsPlan` built from the training docs
+    * `train` (`label` is evaluated against `train`'s columns): a driver
+    * loop when the features fit the driver gate, distributed rounds
+    * otherwise — same weights either way.
+    */
+  private[graft] def fitGated(featsPlan: DataFrame, train: DataFrame,
+                              idCol: String, label: Column, buckets: Int,
+                              iters: Int, eta: Double): Array[Double] = {
+    // checkpointed lazily BEFORE the gate's take: on overflow the
+    // distributed rounds read the blocks the take materialized, so the
+    // tokenize/bucket/aggregate feature pass runs once, not twice
+    val feats = featsPlan.localCheckpoint(eager = false)
     // Driver-loop gate (guide §1.2/§5 — the CC/host-graph bounded-collect
     // discipline): the sample is cap-bounded by construction, and under
     // the feature-row ceiling the GD rounds run as a driver loop over ONE
@@ -285,15 +300,11 @@ object Classifier {
     // cached checkpoint) instead of a checkpoint plus one join+aggregate
     // job per round. fitLogRegLocal replicates the relational rounding
     // chain bit for bit (ClassifierSpec pins driver == distributed).
-    val maxRows = scala.util.Try(docs.sparkSession.conf
-      .get("graft.classifier.driver_max_feature_rows").toLong)
-      .getOrElse(DriverMaxFeatureRows.toLong)
-    val idIsLong = featsPlan.schema(idCol).dataType ==
+    val idIsLong = feats.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
-    if (maxRows > 0 && idIsLong) {
-      val taken = featsPlan
-        .limit(math.min(maxRows, Int.MaxValue - 2L).toInt + 1).collect()
-      if (taken.length <= maxRows) {
+    if (idIsLong) DriverGate.take(feats,
+        "graft.classifier.driver_max_feature_rows", DriverMaxFeatureRows)
+      .foreach { taken =>
         // cast the label to double HERE (a non-double label works on the
         // distributed path via implicit cast but would ClassCastException
         // on getDouble), and take the driver path only when every label is
@@ -309,14 +320,12 @@ object Classifier {
             labels, buckets, iters, eta, nDocs = labelRows.length.toLong)
         }
       }
-    }
     // NOT pre-partitioned by id: the r16 A/B (ProbeR16, alternating
     // variants in one JVM, 4 reps) measured the repartition-at-checkpoint
     // layout consistently SLOWER (min 3.75 vs 3.34 s) — the one-time
     // repartition exchanges plus a labels checkpoint cost more than the
     // per-round exchanges they remove, because AQE already broadcasts the
     // cap-bounded per-round joins. Kept the plain checkpoints.
-    val feats = featsPlan.localCheckpoint()
     val labels = train.select(col(idCol), label.as("y"))
     fitLogReg(feats, labels, idCol, buckets, iters, eta,
       nDocs = train.count())

@@ -425,38 +425,30 @@ object Crawl {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** Drive an iterated-rounds result eagerly (one localCheckpoint action —
-    * the rounds' lazy checkpoints materialize through it), then drop the
-    * loop-invariant pinned frames so no cache outlives the operator call.
-    * The caller gets an RDD-backed frame; results are unchanged, only the
-    * moment of computation moves inside the operator — which is where the
-    * pinned frames' lifetime must end.
+  /** Build the iterated rounds over the `pinned` loop-invariant frames and
+    * drive their result eagerly (one localCheckpoint action — the rounds'
+    * lazy checkpoints materialize through it), then drop the pinned frames
+    * so no cache outlives the operator call — also when a round or the
+    * final action throws. The caller gets an RDD-backed frame; results are
+    * unchanged, only the moment of computation moves inside the operator —
+    * which is where the pinned frames' lifetime must end.
     */
-  private def finishRounds(result: DataFrame,
-                           pinned: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(eager = true)
+  private[graft] def finishRounds(pinned: DataFrame*)(
+      rounds: => DataFrame): DataFrame =
+    try rounds.localCheckpoint(eager = true)
     // blocking: the cleanup belongs to THIS operator call, not to whatever
     // the caller times next
-    pinned.foreach(_.unpersist(blocking = true))
-    out
-  }
+    finally pinned.foreach(_.unpersist(blocking = true))
 
   /** Bounded take of the host edge list: Some(edges) when the graph fits
     * the driver ceiling, None when it doesn't (or the gate is disabled).
     */
   private def boundedHostEdges(
-      edges: DataFrame): Option[Array[(String, String, Long)]] = {
-    val cap = scala.util.Try(
-      edges.sparkSession.conf.get("graft.graph.driver_max_edges").toLong)
-      .getOrElse(GraphDriverMaxEdges.toLong)
-    if (cap <= 0) return None
-    val taken = edges.select(col("src_host").cast("string"),
-        col("dst_host").cast("string"), col("weight").cast("long"))
-      .limit(math.min(cap, Int.MaxValue - 2L).toInt + 1).collect()
-    if (taken.length <= cap)
-      Some(taken.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
-    else None
-  }
+      edges: DataFrame): Option[Array[(String, String, Long)]] =
+    DriverGate.take(edges.select(col("src_host").cast("string"),
+        col("dst_host").cast("string"), col("weight").cast("long")),
+      "graft.graph.driver_max_edges", GraphDriverMaxEdges)
+      .map(_.map(r => (r.getString(0), r.getString(1), r.getLong(2))))
 
   def pageRankHosts(edges: DataFrame, iters: Int,
                     initMicros: Long = 1000000L, baseMicros: Long = 150000L,
@@ -502,20 +494,22 @@ object Crawl {
         .unionByName(e.select(col("dst_host").as("host")))
         .distinct(),
       "host")
-    var ranks = hosts.select(col("host"), lit(initMicros).as("rank_micros"))
-    for (_ <- 1 to iters) {
-      val inflow = e.join(ranks, col("src_host") === col("host"))
-        .selectExpr("dst_host", "rank_micros * weight div out_w AS contrib")
-        .groupBy(col("dst_host")).agg(sum(col("contrib")).as("inflow"))
-      ranks = hosts
-        .join(inflow, col("host") === col("dst_host"), "left")
-        .select(col("host"), coalesce(col("inflow"), lit(0L)).as("inflow"))
-        .selectExpr("host",
-          s"CAST($baseMicros + ($dampNum * inflow div $dampDen) AS BIGINT)" +
-            " AS rank_micros")
-        .localCheckpoint(eager = false)
+    finishRounds(e, hosts) {
+      var ranks = hosts.select(col("host"), lit(initMicros).as("rank_micros"))
+      for (_ <- 1 to iters) {
+        val inflow = e.join(ranks, col("src_host") === col("host"))
+          .selectExpr("dst_host", "rank_micros * weight div out_w AS contrib")
+          .groupBy(col("dst_host")).agg(sum(col("contrib")).as("inflow"))
+        ranks = hosts
+          .join(inflow, col("host") === col("dst_host"), "left")
+          .select(col("host"), coalesce(col("inflow"), lit(0L)).as("inflow"))
+          .selectExpr("host",
+            s"CAST($baseMicros + ($dampNum * inflow div $dampDen) AS BIGINT)" +
+              " AS rank_micros")
+          .localCheckpoint(eager = false)
+      }
+      ranks
     }
-    finishRounds(ranks, e, hosts)
   }
 
   /** HITS hubs & authorities over the weighted host graph — the second

@@ -186,20 +186,6 @@ object Dedup {
     }
   }
 
-  /** MinHash signature (array<bigint> of length numPerm) over word-shingle
-    * sets. Shingle → portable 60-bit hash mod p → min over the universal
-    * hash family (a*x+b) mod p. Pure higher-order functions.
-    */
-  def minhashSignature(text: Column, shingleSize: Int = 3,
-                       numPerm: Int = 64): Column = {
-    val sh = array_distinct(Text.shingles(Text.tokens(text), shingleSize))
-    val hs = transform(sh, t => pmod(Text.portableHash(t), lit(MersennePrime)))
-    val perms = permParams(numPerm)
-    array(perms.map { case (a, b) =>
-      array_min(transform(hs, h => pmod(h * a + b, lit(MersennePrime))))
-    }: _*)
-  }
-
   /** Fold a signature band slice into one BIGINT bucket key:
     * acc*31 + h mod 1e9+7 — the same portable fold the oracle reproduces
     * with `list_reduce` (an engine-murmur of the slice would not be).
@@ -592,16 +578,13 @@ object Dedup {
     // at or under the ceiling, label with a driver union-find and
     // broadcast the labels back — same fixpoint, one job. Over the
     // ceiling (the 100 TB posture), fall through to the distributed loop.
-    val ccMax = scala.util.Try(
-      spark.conf.get("graft.cc.driver_max_edges").toLong)
-      .getOrElse(CcDriverMaxEdges.toLong)
-    if (ccMax > 0) {
-      // clamp like the Crawl/Classifier gates: a conf above Int.MaxValue
-      // must not truncate to a small limit and union-find a PARTIAL edge
-      // set (r16 advice — silent wrong labels)
-      val taken = edges.select(col("id_a"), col("id_b"))
-        .limit(math.min(ccMax, Int.MaxValue - 2L).toInt + 1).collect()
-      if (taken.length <= ccMax) {
+    // The gated edges checkpoint lazily BEFORE the take: on overflow the
+    // loop reads the blocks the take materialized, so the edge lineage
+    // (minhash, banding, verify shuffles) runs once, not twice.
+    val gated = edges.select(col("id_a"), col("id_b"))
+      .localCheckpoint(eager = false)
+    DriverGate.take(gated, "graft.cc.driver_max_edges", CcDriverMaxEdges)
+      .foreach { taken =>
         val labels = unionFindMinLabels(
           taken.map(r => (r.getLong(0), r.getLong(1))))
         import spark.implicits._
@@ -615,7 +598,6 @@ object Dedup {
           .select(col(idCol),
             coalesce(col("__cc_label"), col(idCol)).as("cluster_id"))
       }
-    }
     // Distributed path (the 100 TB posture): alternating LARGE-STAR /
     // SMALL-STAR edge contraction (Kiveris et al., "Connected Components
     // in MapReduce and Beyond", SoCC 2014) replaces the r15 min-label
@@ -664,7 +646,7 @@ object Dedup {
         bit_xor(xxhash64(col("u"), col("v"))).as("h")).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var cur = edges
+    var cur = gated
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .where(col("u") =!= col("v"))

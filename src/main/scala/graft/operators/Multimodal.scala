@@ -93,12 +93,6 @@ object Multimodal {
     }
   }
 
-  /** Kept name from the plumbing-only era; now just the raw-byte path of
-    * [[decode]] (same output on `format = "raw"` tables).
-    */
-  def decodeStub(spark: SparkSession, media: DataFrame): Dataset[MediaFeatures] =
-    decode(spark, media)
-
   /** True first payload byte as an int (hex of the 1-byte slice → base-10);
     * 0 for an empty payload. Unlike `ascii(cast(payload as string))` this is
     * byte-exact for any payload, not only ASCII.

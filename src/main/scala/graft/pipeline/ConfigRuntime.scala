@@ -245,11 +245,14 @@ object ConfigRuntime {
     // --- series projection per referenced stream, then union: every scalar
     // vector becomes (series_id, time, value, keys…) rows. Sample keys must
     // belong to each referenced stream's partition identity (reference rule);
-    // the remaining partition fields suffix the series id.
+    // the remaining partition fields suffix the series id. The id and value
+    // columns are renamed by position to reserved names: a sample key may
+    // itself be called `series_id` or `value`.
     val projections = scalarVectors.groupBy(_.stream).toSeq.sortBy(_._1).map {
       case (streamId, vs) =>
         Series.project(res.stream(streamId), checkSampleKeys(streamId),
           ds.sampleKeys, "time", vs.map(v => Series.SeriesConfig(v.id, v.field)))
+          .toDF(("__series_id" +: "time" +: "__series_value" +: ds.sampleKeys): _*)
     }
 
     // --- assembly: one shuffle on (sample_time, keys); wide via pivot. When
@@ -268,9 +271,10 @@ object ConfigRuntime {
         val grouped = bucketed.groupBy(
           (col("sample_time") +: ds.sampleKeys.map(col)): _*)
         Some(
-          (if (suffixFree) grouped.pivot(col("series_id"), scalarVectors.map(_.id))
-           else grouped.pivot(col("series_id")))
-            .agg(max(col("value"))))
+          (if (suffixFree)
+             grouped.pivot(col("__series_id"), scalarVectors.map(_.id))
+           else grouped.pivot(col("__series_id")))
+            .agg(max(col("__series_value"))))
       }
 
     // --- sequenced vectors (reference SequenceConfig → sequence_series,

@@ -66,9 +66,6 @@ object Plugins {
     registered = registered :+ p
   }
 
-  /** Test-only: drop programmatic registrations. */
-  def clearRegistered(): Unit = synchronized { registered = Nil }
-
   def all: Seq[GraftPlugin] = discovered ++ registered
 
   def loader(format: String): Option[(SparkSession, String, Map[String, String]) => DataFrame] =

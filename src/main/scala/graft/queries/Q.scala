@@ -93,21 +93,6 @@ object Q {
   def sumDecSql(expr: String, scale: Int = 4): String =
     s"CAST(SUM(CAST($expr AS DECIMAL(30,$scale))) AS DOUBLE)"
 
-  /** Exact mean: decimal sum cast to double, divided by count (one IEEE
-    * division — identical in both engines).
-    */
-  def avgDec(c: Column, scale: Int = 4): Column =
-    sumDec(c, scale) / count(c)
-
-  def avgDecSql(expr: String, scale: Int = 4): String =
-    s"${sumDecSql(expr, scale)} / COUNT($expr)"
-
-  /** Floor epoch-µs to a step (both engines: positive epochs, % == pmod). */
-  def floorUs(c: Column, stepUs: Long): Column = {
-    val us = eu(c)
-    us - pmod(us, lit(stepUs))
-  }
-
   val HourUs: Long = 3600L * 1000000L
 
   // --- table access -------------------------------------------------------

@@ -692,10 +692,13 @@ object QueriesMining {
     // vocabulary never ships to the driver) and fall back to the
     // collect-free string-key plan when the cap trips; results are
     // hash-identical either way (MiningSpec pins the equality).
-    val capped = words.select(explode(col("w")).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      .limit(maxVocab + 1).collect()
-    if (capped.length > maxVocab) return coocPpmiStringKey(words)
+    val capped = graft.operators.DriverGate.take(
+        words.select(explode(col("w")).as("tok"))
+          .groupBy(col("tok")).agg(count(lit(1)).as("c")),
+        maxVocab.toLong) match {
+      case Some(rows) => rows
+      case None => return coocPpmiStringKey(words)
+    }
     val uniRows = capped.map(r => (r.getString(0), r.getLong(1)))
       .sortBy { case (t, c) => (-c, t) }
     val fn = graft.functions.PackedSkipPairs

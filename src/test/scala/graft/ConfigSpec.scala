@@ -209,6 +209,46 @@ class ConfigSpec extends SparkSpec {
       ("holdout", "test", "u1", z(40.0)), ("holdout", "test", "u2", z(70.0))))
   }
 
+  test("dataset runtime: a sample key named series_id or value is an ordinary key") {
+    // the long series projection inside assembly has its own id and value
+    // columns; sample keys carrying those names must not collide with them
+    val ticks = spark.read.parquet(s"$dataDir/ticks.parquet")
+    ticks.withColumnRenamed("user_id", "series_id")
+      .write.mode("overwrite").parquet(s"$dataDir/ticks_series_id.parquet")
+    ticks.withColumnRenamed("value", "v").withColumnRenamed("user_id", "value")
+      .write.mode("overwrite").parquet(s"$dataDir/ticks_value.parquet")
+    def doc(file: String, key: String, field: String) =
+      s"""sources:
+         |  - id: ticks
+         |    loader: { transport: fs, path: $file, reader: { format: parquet } }
+         |streams:
+         |  - id: base
+         |    from: { source: ticks }
+         |    map: { time: ts }
+         |    partition_by: [$key]
+         |    tiebreak: [event_id]
+         |    transforms:
+         |      - { operation: collapse, keep: last }
+         |dataset:
+         |  sample: { cadence: 1h, keys: [$key] }
+         |  features:
+         |    - { id: val, stream: base, field: $field }
+         |""".stripMargin
+    def run(file: String, key: String, field: String) =
+      ConfigRuntime.dataset(spark, dataDir, Config.parseProject(doc(file, key, field)))
+    val byUser = run("ticks.parquet", "user_id", "value")
+    val expected = rows(byUser.orderBy("sample_time", "user_id"))
+    for ((file, key, field) <- Seq(("ticks_series_id.parquet", "series_id", "value"),
+                                   ("ticks_value.parquet", "value", "v"))) {
+      val ds = run(file, key, field)
+      assert(ds.columns.toSeq == byUser.columns.toSeq.map {
+        case "user_id" => key
+        case c => c
+      })
+      assert(rows(ds.orderBy("sample_time", key)) == expected)
+    }
+  }
+
   test("strictness: unknown ops, unknown fields, env refs are rejected") {
     def bad(yaml: String, needle: String): Unit = {
       val e = intercept[IllegalArgumentException](Config.parseProject(yaml))

@@ -244,6 +244,24 @@ class CrawlSpec extends SparkSpec {
     } finally spark.conf.unset("graft.graph.driver_max_edges")
   }
 
+  test("finishRounds releases the pinned frames when the eager checkpoint throws") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pinned = spark.range(0, 100, 1, 4).toDF("id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pinned.count()
+    val pinnedRdds = sc.getPersistentRDDs.keySet -- before
+    assert(pinnedRdds.nonEmpty, "the pinned frame must hold cached blocks")
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("checkpoint failed"); id
+    }
+    intercept[org.apache.spark.SparkException](
+      Crawl.finishRounds(pinned)(pinned.select(boom(col("id")).as("id"))))
+    assert(sc.getPersistentRDDs.keySet.intersect(pinnedRdds).isEmpty,
+      "a pinned frame's cached RDD outlived the failed call")
+    assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("frontier: per-host cap then global budget, (priority desc, url) order") {
     val cand = Seq(
       ("https://a/1", "a", 900L), ("https://a/2", "a", 900L),
