@@ -2,57 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Bench main: times every SparkEntry query at SPARK_GRAFT_SF_DIR, prints one
-  * JSON line. A warmup pass (table reads + a tiny agg) is excluded from the
-  * timings so JVM/codegen startup isn't attributed to the first query.
+/** Bench main: times every SparkEntry query at SPARK_GRAFT_SF_DIR on
+  * [[SparkEntry.session]] and prints two JSON lines (the full record, then a
+  * compact summary). A warmup pass (table reads + a tiny agg) is excluded
+  * from the timings so JVM/codegen startup isn't attributed to the first
+  * query.
+  *
+  * One timing rule: every head runs SPARK_GRAFT_RUNS times (default 2) in
+  * a single pass and keeps its best run. Noise defence lives outside the
+  * run, in a same-host A/B with alternating order; the record carries
+  * /proc/loadavg at start and end so a noisy run self-identifies.
   *
   * Streaming queries run in a separate final pass: each leaves behind
   * checkpoint/state-store machinery that polluted the alphabetically-following
   * batch queries in round 1 (where_filter 2.9 s vs plan-identical floor_time
   * 0.14 s — see BASELINE.md anomalies).
-  *
-  * Outlier self-defense: the shared host has bursty co-tenant load (the r6
-  * end-of-round snapshot showed pinned-plan trivial queries 3-4x their
-  * floor). After the main pass, any query landing over 2x its BASELINE.md
-  * floor gets ONE more best-of-2 pass and keeps the minimum; anything
-  * STILL over 2x after that gets a solo best-of-2 from a re-settled
-  * machine with both numbers recorded under "solo_confirm" (r14 ask #2 —
-  * the artifact itself proves or exonerates every >2x row). The JSON
-  * carries /proc/loadavg at start and end so a noisy snapshot
-  * self-identifies in the record.
   */
 object Bench {
-
-  /** Per-query floors from BASELINE.md's "Per-query floor" table (two
-    * name/seconds pairs per row). Missing file or section → empty map and
-    * the outlier pass is skipped.
-    */
-  private[graft] def baselineFloors(path: java.nio.file.Path =
-      java.nio.file.Paths.get("BASELINE.md")): Map[String, Double] = {
-    if (!java.nio.file.Files.exists(path)) return Map.empty
-    val lines = java.nio.file.Files.readAllLines(path)
-    import scala.jdk.CollectionConverters._
-    val section = lines.asScala
-      .dropWhile(!_.startsWith("## Per-query floor")).drop(1)
-      .takeWhile(!_.startsWith("## "))
-    section.filter(_.trim.startsWith("|")).flatMap { line =>
-      val cells = line.split("\\|").map(_.trim).filter(_.nonEmpty)
-      cells.grouped(2).collect {
-        case Array(name, sec) if sec.matches("""\d+(\.\d+)?""") &&
-          name.nonEmpty && !name.startsWith("-") && name != "query" =>
-          name -> sec.toDouble
-      }
-    }.toMap
-  }
-
-  /** The outlier re-run pass arms only when the data dir IS the sf0.1
-    * directory the floors were measured at — matched on the terminal path
-    * component, not a substring (a `sf0.15` or `sf0.1_backup` dir must not
-    * get min-of-rerun flattery against floors from a different scale).
-    */
-  private[graft] def isFloorScale(sfDir: String): Boolean =
-    try java.nio.file.Paths.get(sfDir).getFileName.toString == "sf0.1"
-    catch { case _: Exception => false }
 
   private def loadAvg(): Double =
     try java.nio.file.Files.readString(
@@ -117,16 +83,11 @@ object Bench {
     * write-back behind), then wait — bounded — for the 1-minute load
     * average to fall under `targetLoad`. Returns seconds waited.
     * SPARK_GRAFT_NO_SETTLE=1 skips (A/B and in-sweep group runs that
-    * manage settling themselves) — unless `force` is set: the
-    * solo-confirm pass exists to certify a number from a settled
-    * machine, so it must settle even inside a NO_SETTLE sweep (r15
-    * advice: an unsettled "solo_confirm" entry overstates what the solo
-    * number proves).
+    * manage settling themselves).
     */
   private def settleMachine(targetLoad: Double = 3.0,
-                            maxWaitSec: Int = 240,
-                            force: Boolean = false): Double = {
-    if (!force && sys.env.contains("SPARK_GRAFT_NO_SETTLE")) return 0.0
+                            maxWaitSec: Int = 240): Double = {
+    if (sys.env.contains("SPARK_GRAFT_NO_SETTLE")) return 0.0
     reapStrayGraftJvms()
     try Runtime.getRuntime.exec(Array("sync")).waitFor()
     catch { case _: Throwable => () }
@@ -148,29 +109,15 @@ object Bench {
     // pages flush, and the timed sweep starts on a quiet machine
     val settleWait = settleMachine()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // AQE initial-partition posture is PER-PLAN by default (the round-10
-    // sf100 lesson, pipeline/Posture.scala): sort-dominated plans get
-    // core-count reduce parallelism (256 was a measured ~2x map-fanout tax
-    // on the §2.3 ordered family), wide aggregate/join plans get
-    // volume-scaled fan-out (scan bytes / 64MB, clamped) so spill relief
-    // tracks data the way a cluster sizes it. The AMBIENT default between
-    // queries is core count — journeys that materialize ordered
-    // checkpoints at plan-build time (config_sequence) need the tuned
-    // posture for those inner jobs too. SPARK_GRAFT_INITIAL_PARTITIONS
-    // forces one global value (the old sweep knob, kept for A/B runs).
-    val forcedParts = sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS")
-    val initialKey = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config(initialKey, forcedParts.getOrElse(cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.applyConfOverrides(spark)
+    val spark = SparkEntry.session()
+    val cpus = spark.sparkContext.defaultParallelism
+    // AQE initial-partition posture is PER-PLAN (pipeline/Posture.scala):
+    // sort-dominated plans get core-count reduce parallelism, wide
+    // aggregate/join plans get volume-scaled fan-out. The AMBIENT value
+    // between heads is core count — journeys that materialize ordered
+    // checkpoints at plan-build time (config_sequence) need it for those
+    // inner jobs too.
+    val initialKey = graft.pipeline.Posture.InitialPartitionsKey
 
     // Warmup: touch every table once (filesystem cache + codegen + shuffle machinery).
     Seq("lineitem", "orders", "customer", "supplier", "nation", "region",
@@ -216,14 +163,12 @@ object Bench {
         val t0 = System.nanoTime()
         try {
           // ambient core-count posture for plan-build-time jobs, then the
-          // per-plan posture for the measured action (a forced global value
-          // disables both — the A/B knob)
-          if (forcedParts.isEmpty) spark.conf.set(initialKey, cpus)
+          // per-plan posture for the measured action
+          spark.conf.set(initialKey, cpus.toString)
           val df = fn(spark, sfDir)
           // Posture.applyTo logs classification failures (a silent core-count
-          // fallback would read as an unexplained benchmark shift) and
-          // honors the SPARK_GRAFT_INITIAL_PARTITIONS A/B override itself
-          graft.pipeline.Posture.applyTo(df, cpus.toInt, label = name)
+          // fallback would read as an unexplained benchmark shift)
+          graft.pipeline.Posture.applyTo(df, cpus, label = name)
           df.write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
@@ -264,59 +209,13 @@ object Bench {
       q.awaitTermination()
     }
     val loadStart = loadAvg()
-    val firstPass = (batchQ ++ streamingQ).map { case (name, fn) => name -> time(name, fn) }
-
-    // outlier pass: anything over 2x its recorded floor is more likely
-    // co-tenant noise than a plan regression — one more best-of-2, keep min.
-    // The floors are sf0.1 measurements, so the pass only arms at the sf0.1
-    // dir (at sf1 every query is legitimately past 2x floor and the pass
-    // would just triple the sweep); SPARK_GRAFT_NO_RERUN=1 disables it.
-    val floors =
-      if (sys.env.contains("SPARK_GRAFT_NO_RERUN") || !isFloorScale(sfDir))
-        Map.empty[String, Double]
-      else baselineFloors()
-    val byName = (batchQ ++ streamingQ).toMap
-    val outliers = firstPass.collect {
-      case (name, v) if v > 0 && floors.get(name).exists(v > 2 * _) => name
-    }
-    val results = firstPass.map { case (name, v) =>
-      if (outliers.contains(name)) {
-        val again = time(name, byName(name))
-        name -> (if (again > 0) math.min(v, again) else v)
-      } else name -> v
-    }
-    // solo-confirm pass (r14 verdict ask #2): any head STILL over 2x its
-    // floor after the in-sweep re-run gets one solo best-of-2 from a
-    // re-settled machine — the sweep-fold discipline applied INSIDE the
-    // artifact: the JSON records both numbers, so a >2x row is either
-    // confirmed (solo agrees → a real plan cost) or exonerated (solo
-    // lands under → co-tenant noise, min kept) without leaving the file.
-    val soloRuns = results.collect {
-      case (name, v) if v > 0 && floors.get(name).exists(v > 2 * _) =>
-        settleMachine(targetLoad = 3.0, maxWaitSec = 120, force = true)
-        val solo = time(name, byName(name))
-        (name, v, solo)
-    }
-    val soloKept = soloRuns.map { case (n, swept, solo) =>
-      n -> (if (solo > 0) math.min(swept, solo) else swept)
-    }.toMap
-    val finalResults = results.map { case (n, v) =>
-      n -> soloKept.getOrElse(n, v)
-    }
+    val results = (batchQ ++ streamingQ).map { case (name, fn) => name -> time(name, fn) }
     val loadEnd = loadAvg()
 
-    val qs = finalResults.map { case (k, v) => "\"" + k + "\":" + v }
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = finalResults.collect { case (_, v) if v >= 0 => v }.sum
-    // a query whose outlier RE-RUN failed but whose first-pass time was
-    // kept is healthy — only queries with no successful run count as failed
-    val trulyFailed = failed.distinct.filter(n =>
-      finalResults.find(_._1 == n).forall(_._2 < 0))
-    val failedJson = trulyFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val rerunJson = outliers.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val soloJson = soloRuns.map { case (n, swept, solo) =>
-      "\"" + n + "\":{\"swept\":" + swept + ",\"solo\":" + solo + "}"
-    }.mkString("{", ",", "}")
+    val total = results.collect { case (_, v) if v >= 0 => v }.sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val refusedJson = refused.map("\"" + _ + "\"").mkString("[", ",", "]")
     // fixture-staging transparency (r16 verdict ask #5): which heads paid a
     // fixture BUILD inside this run's timed region (cold pass) vs hit the
@@ -328,7 +227,7 @@ object Bench {
         .map { case (p, built) => "\"" + p + "\":" + built }
         .mkString("{", ",", "}")
     }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"refused_by_design":$refusedJson,"rerun":$rerunJson,"solo_confirm":$soloJson,"fixture_builds":$fixtureJson,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"settle_wait_sec":${math.round(settleWait)},"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"refused_by_design":$refusedJson,"fixture_builds":$fixtureJson,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"settle_wait_sec":${math.round(settleWait)},"sf":"$sfDir"}"""
     println(json)
     // The round driver archives only a ~2000-char stdout TAIL: at 229 heads
     // the full line above is ~10 KB, so it truncates mid-map and the
@@ -338,9 +237,9 @@ object Bench {
     // the tail whole so the driver can always parse at least the total.
     // The full per-query map stays in the first line and in bench_full.json.
     val sentinelHeads = Seq("where_filter", "token_count", "lang_id")
-    val sentinelsJson = finalResults.filter(r => sentinelHeads.contains(r._1))
+    val sentinelsJson = results.filter(r => sentinelHeads.contains(r._1))
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${finalResults.size},"failed":$failedJson,"refused_by_design":$refusedJson,"sentinels":$sentinelsJson,"fixture_builds":$fixtureJson,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"settle_wait_sec":${math.round(settleWait)},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"failed":$failedJson,"refused_by_design":$refusedJson,"sentinels":$sentinelsJson,"fixture_builds":$fixtureJson,"load_avg_start":$loadStart,"load_avg_end":$loadEnd,"settle_wait_sec":${math.round(settleWait)},"sf":"$sfDir"}""")
     // the driver's round artifact keeps only the tail of stdout, which
     // truncated the first ~44 per-query timings out of the permanent record
     // in round 7 — persist the full map to a file as well

@@ -31,8 +31,6 @@ object Cli {
     * action — the engine default (pipeline/Posture.scala), not a harness
     * nicety: a `graft.Cli run` over a 600M-row project deserves the same
     * sort-at-core-count / wide-at-volume rule Bench measures under.
-    * SPARK_GRAFT_INITIAL_PARTITIONS still forces one global value (applyTo
-    * honors it).
     */
   private def posture(df: org.apache.spark.sql.DataFrame,
                       label: String): Unit =
@@ -308,27 +306,6 @@ object Cli {
       } finally Observability.finish(spark, obs, metricsPath)
     }
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AMBIENT initial-partition default only: every materialize/task action
-    // re-sets the knob PER PLAN via Posture.applyTo (sort-dominated → core
-    // count, wide → volume-scaled) — the same engine rule Bench measures
-    // under. SPARK_GRAFT_INITIAL_PARTITIONS forces one global value for
-    // A/B runs (applyTo honors it; it is also the ambient value here so
-    // plan-build-time jobs see it too)
-    val initialParts = sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", cpus)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initialParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Library version tag — bumped per round; the JVM twin of the
     * reference's importlib-metadata dist version.
     */
@@ -404,7 +381,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = args.toList match {
     case "materialize" :: config :: dataDir :: serveRoot :: rest =>
-      val spark = session()
+      val spark = SparkEntry.session()
       val positional = rest.zipWithIndex.filterNot { case (a, i) =>
         a.startsWith("--") || (i > 0 && rest(i - 1) == "--artifacts")
       }.map(_._1)
@@ -447,25 +424,25 @@ object Cli {
           case Seq("--older-than", v) => v
         })
     case "stream" :: config :: streamId :: dataDir :: rest =>
-      val spark = session()
+      val spark = SparkEntry.session()
       try streamPreview(spark, config, streamId, dataDir,
         limit = rest.headOption.map(_.toInt).getOrElse(20))
       finally spark.stop()
     case "materialize-streams" :: config :: dataDir :: serveRoot :: Nil =>
-      val spark = session()
+      val spark = SparkEntry.session()
       try materializeStreams(spark, config, dataDir, serveRoot)
       finally spark.stop()
     case "run" :: config :: profileId :: dataDir :: rest =>
-      val spark = session()
+      val spark = SparkEntry.session()
       try runProfile(spark, config, profileId, dataDir, rest.headOption)
       finally spark.stop()
     case "build" :: config :: dataDir :: artifactsRoot :: rest =>
-      val spark = session()
+      val spark = SparkEntry.session()
       try build(spark, config, dataDir, artifactsRoot,
         force = rest.contains("--force"))
       finally spark.stop()
     case "inspect" :: config :: dataDir :: rest if rest.contains("--stage") =>
-      val spark = session()
+      val spark = SparkEntry.session()
       def flagValue(flag: String): Option[String] = rest.sliding(2)
         .collectFirst { case Seq(`flag`, v) => v }
       val positional = rest.zipWithIndex.filterNot { case (a, i) =>
@@ -479,7 +456,7 @@ object Cli {
         outDir = flagValue("--out"))
       finally spark.stop()
     case "task" :: config :: taskId :: dataDir :: rest =>
-      val spark = session()
+      val spark = SparkEntry.session()
       val cache = rest.sliding(2).collectFirst {
         case Seq("--cache", dir) => Paths.get(dir)
       }

@@ -11,7 +11,37 @@ import graft.queries._
   */
 object SparkEntry {
 
-  /** Runtime conf overrides for the mains (Bench, Verify, Explain):
+  /** The local session every main (Bench, Verify, Cli, Explain, ScaleUp)
+    * runs on: `local[cpus]` with `cpus` shuffle partitions, UTC, no UI,
+    * WARN logs, then [[applyConfOverrides]]. AQE is on by default and its
+    * initial partition count defaults to the shuffle partitions, so no
+    * main needs a different session.
+    */
+  def session(): SparkSession = {
+    val n = cpus(sys.env.get("SPARK_GRAFT_CPUS"))
+    val s = SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    applyConfOverrides(s)
+    s
+  }
+
+  /** Worker threads for [[session]]: `SPARK_GRAFT_CPUS`, or the host's core
+    * count when unset. Anything but a positive integer fails naming the
+    * variable.
+    */
+  private[graft] def cpus(spec: Option[String]): Int = spec match {
+    case None => Runtime.getRuntime.availableProcessors()
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'"))
+  }
+
+  /** Runtime conf overrides for every main's session ([[session]]):
     * `SPARK_GRAFT_CONF="k=v;k2=v2"` sets each entry on the session, e.g.
     * `graft.cc.driver_max_edges=0` runs a distributed fallback, or
     * `graft.vocab_broadcast.max_corpus_bytes=1` the unbounded-corpus plans,

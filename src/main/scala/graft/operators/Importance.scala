@@ -238,29 +238,29 @@ object Importance {
   // the sha256-ratio filter). Domains are JSON-escaped; rates round-trip
   // through Double.toString exactly.
 
+  import org.json4s._
+  import org.json4s.jackson.JsonMethods
+
   def saveRates(path: String, rates: Map[String, Double]): Unit = {
     val p = java.nio.file.Paths.get(path)
     Option(p.getParent).foreach(java.nio.file.Files.createDirectories(_))
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val body = rates.toSeq.sortBy(_._1)
-      .map { case (d, r) => s""""${esc(d)}": $r""" }.mkString(", ")
+      .map { case (d, r) => s"${graft.sources.Runs.jsonStr(d)}: $r" }
+      .mkString(", ")
     java.nio.file.Files.writeString(p, s"{$body}")
   }
 
-  def loadRates(path: String): Map[String, Double] = {
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(path))
-    val entry = """"((?:[^"\\]|\\.)*)"\s*:\s*(-?[\d.eE+]+)""".r
-    entry.findAllMatchIn(json).map { m =>
-      val d = m.group(1)
-        .replace("\\\"", "\"").replace("\\\\", "\\")
-      d -> m.group(2).toDouble
-    }.toMap
-  }
+  def loadRates(path: String): Map[String, Double] =
+    JsonMethods.parse(java.nio.file.Files.readString(
+      java.nio.file.Paths.get(path))) match {
+      case JObject(fields) => fields.map {
+        case (d, JDouble(r)) => d -> r
+        case (d, other) => throw new IllegalArgumentException(
+          s"mix rate for domain '$d' is not a number: $other ($path)")
+      }.toMap
+      case _ => throw new IllegalArgumentException(
+        s"not a mix-rates object: $path")
+    }
 
   /** The per-row mixture gate under a HYDRATED rate table: keep iff
     * sha256-ratio(id) < rate(domain), rates entering the plan as a literal

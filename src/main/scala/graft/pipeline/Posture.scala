@@ -145,19 +145,16 @@ object Posture {
   /** AQE initial-partition knob the posture sets. */
   val InitialPartitionsKey =
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-  /** Forcing env var: one global value for A/B runs, disables per-plan. */
-  val ForceEnv = "SPARK_GRAFT_INITIAL_PARTITIONS"
 
   /** Apply the per-plan posture to `df`'s session just before an action —
     * the one-call pattern every entry point (Bench, Cli) shares. A
     * classification failure LOGS and falls back to core count (a silent
-    * fallback would surface only as an unexplained benchmark shift), and
-    * [[ForceEnv]] pins one global value for A/B runs. Returns the applied
-    * partition count.
+    * fallback would surface only as an unexplained benchmark shift).
+    * Returns the applied partition count.
     */
   def applyTo(df: DataFrame, cores: Int,
               label: String = "plan"): Int = {
-    val parts = sys.env.get(ForceEnv).map(_.toInt).getOrElse {
+    val parts =
       try initialShufflePartitions(df, cores)
       catch {
         case e: Exception =>
@@ -165,7 +162,6 @@ object Posture {
             s"[posture] $label: classification failed (${e.getClass.getSimpleName}: ${e.getMessage}); falling back to $cores")
           cores
       }
-    }
     df.sparkSession.conf.set(InitialPartitionsKey, parts.toString)
     parts
   }

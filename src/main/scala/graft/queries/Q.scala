@@ -55,9 +55,10 @@ object Q {
     val out = java.nio.file.Paths.get(outPath)
     val dir = out.getParent
     java.nio.file.Files.createDirectories(dir)
-    // Serialize the check-build-write sequence across processes (r16
-    // advice): without the lock, a concurrent builder could read a marker
-    // another process is mid-way through re-earning.
+    // The check-build-write sequence runs under a FAIL-FAST lock: a second
+    // process (or thread) staging the same fixture dir throws
+    // ExecutionBusyException at once instead of waiting, so it can never
+    // read a marker another builder is mid-way through re-earning.
     val marker = dir.resolve("_graft_fixture.json")
     graft.sources.Hygiene.withFileLock(dir.resolve("_graft_fixture.lock"),
       s"Another graft process is staging fixture '$outPath'.") {

@@ -103,6 +103,15 @@ class CorpusOpsSpec extends SparkSpec {
     assert(k1.sameElements(k2))
   }
 
+  test("mix-rates artifact round-trips control, quote, backslash and non-ASCII domains") {
+    val rates = Map("a\tb" -> 0.25, "q\"uote" -> 0.5, "back\\slash" -> 1.0E-4,
+      "ü" -> 1.0)
+    val path = java.nio.file.Files.createTempDirectory("graft_rates")
+      .resolve("rates.json").toString
+    Importance.saveRates(path, rates)
+    assert(Importance.loadRates(path) == rates)
+  }
+
   test("mix-rates artifact round-trips (escaped domains); hydrated gate == join gate") {
     val docs = (1L to 100L).map(i => (i, "big", ("tok " * 50).trim))
       .union(Seq((101L, "sm\"all\\x", "tok tok tok")))

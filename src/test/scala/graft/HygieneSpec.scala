@@ -28,6 +28,24 @@ class HygieneSpec extends SparkSpec {
     assert(Hygiene.withExecutionLock(root) { 42 } == 42)
   }
 
+  test("fixture staging fails fast while another holder has the fixture lock") {
+    val data = tmpRoot()
+    val out = tmpRoot().resolve("fixture").resolve("docs.parquet")
+    Files.createDirectories(out.getParent)
+    val ch = java.nio.channels.FileChannel.open(
+      out.getParent.resolve("_graft_fixture.lock"),
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.WRITE)
+    val held = ch.lock()
+    try {
+      val e = intercept[Hygiene.ExecutionBusyException] {
+        graft.queries.Q.ensureFixture(data.toString, "documents",
+          out.toString, "p") { fail("must not build under a held lock") }
+      }
+      assert(e.getMessage.contains(out.toString), e.getMessage)
+    } finally { held.release(); ch.close() }
+  }
+
   test("execution lock is released when the body throws") {
     val root = tmpRoot()
     intercept[RuntimeException] {

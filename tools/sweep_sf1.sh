@@ -14,7 +14,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF1_DIR=${SF1_DIR:-data/sf1}
-CPUS=${SPARK_GRAFT_CPUS:-32}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 
 if [ ! -d "$SF1_DIR" ]; then
   echo "[sweep] generating $SF1_DIR (10x sf0.1) via graft.ScaleUp" >&2

@@ -17,7 +17,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF10_DIR=${SF10_DIR:-data/sf10}
-CPUS=${SPARK_GRAFT_CPUS:-32}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 
 HEADS="q1_pricing,q3_topk,q5_region,q6_forecast,dedup_exact,dedup_minhash,dedup_cluster,dedup_semantic,dedup_incremental,dedup_incremental_semantic,ann_lsh,ann_ivf,ann_ivf_trained,ann_bruteforce,decontam_fuzzy,vocab_topk,tfidf_topterms,bpe_merges,bpe_encode,bpe_artifact,config_corpus,curation_kmeans,curation_diversity,stream_corpus_dedup"
 

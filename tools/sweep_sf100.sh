@@ -17,7 +17,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 SF100_DIR=${SF100_DIR:-data/sf100}
-CPUS=${SPARK_GRAFT_CPUS:-32}
+CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
 # Size the single local JVM to the data, the way a cluster sizes executor
 # memory: at 600M fact rows the 8g default is permanently spill-bound on
 # the wide shuffles (and with the AQE initial-partition discipline the
@@ -27,8 +27,6 @@ export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g}
 # Reduce parallelism is PER-PLAN by default since round 11
 # (pipeline/Posture.scala): sort-dominated plans run at core count, wide
 # aggregate/join plans at volume-scaled fan-out — no global export needed.
-# Set SPARK_GRAFT_INITIAL_PARTITIONS to force one global value for A/B runs
-# (256 was the pre-round-11 sweep posture).
 
 # The sf10 standing set minus the journey heads whose sf100 cost is pure
 # row-linear repetition already priced by their stages (stream_corpus_*,
