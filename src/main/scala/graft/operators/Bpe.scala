@@ -219,12 +219,12 @@ object Bpe {
 
   /** The tf-compressed encode join shared by [[encodeStats]] and
     * [[encodeStatsWith]] (see encodeStats's scale posture).
-    * `private[operators]` because WordPiece's encode path is the SAME
-    * join — the vocab frame's `syms` convention (## markers or not) never
-    * enters it: only the segment COUNT does.
+    * WordPiece's encode path is the SAME join — the vocab frame's `syms`
+    * convention (## markers or not) never enters it: only the segment
+    * COUNT does.
     */
-  private[operators] def encodeJoin(df: DataFrame, idCol: String, textCol: String,
-                                    vocab: DataFrame): DataFrame = {
+  private[graft] def encodeJoin(df: DataFrame, idCol: String, textCol: String,
+                                vocab: DataFrame): DataFrame = {
     val tokMap = vocab.select(col("w"),
       size(split(col("syms"), " ")).cast("long").as("wtoks"))
     val tf = df

@@ -16,13 +16,16 @@ import graft.queries.Q.sumDec
   * DISCRIMINATIVE model fitted by iterated optimization — the two-pillar
   * pairing real curation stacks deploy.
   *
-  * Scale posture (the curation_kmeans discipline, applied to GD):
-  *  - the sparse feature relation `(id, pos, x)` is built ONCE — one
-  *    doc-keyed aggregation — and checkpointed; every round reuses it;
-  *  - per round: scores are one doc-keyed aggregate with the weight vector
-  *    entering as a constant-folded array LITERAL (no weight join), and the
-  *    gradient is one partial-aggregated `buckets+1`-row aggregate — only
-  *    the bounded weight/gradient vectors ever cross the driver;
+  * Scale posture: every training doc's sparse features sit in ONE row
+  * (`array<struct<pos, x>>`, the native [[graft.functions.ClsFeatures]]
+  * kernel), so nothing in the fit regroups a doc's rows by id:
+  *  - the training rows `(id, y, f)` are built once — a per-row pass, no
+  *    exchange — and checkpointed; the driver gate and every round read it;
+  *  - per round: one per-row fold of `f` to the doc's error (weights enter
+  *    as a constant-folded array LITERAL), then ONE partial-aggregated
+  *    gradient aggregate grouped by pos — at most `buckets+1` groups, the
+  *    only shuffle; only the bounded weight/gradient vectors ever cross the
+  *    driver;
   *  - scoring under a trained model is a broadcast-free per-row fold —
   *    the shape that gates a crawl at ingest.
   *
@@ -38,33 +41,27 @@ object Classifier {
   /** Bias feature position = `buckets` (its x is 1.0 on every doc). */
   def biasPos(buckets: Int): Int = buckets
 
-  /** The sparse hashed-feature relation `(idCol, pos, x)` of a corpus:
+  /** One doc's sparse feature row, `array<struct<pos:int, x:double>>`:
     * x = round6(bucket token count / doc token count) for OBSERVED buckets
-    * only, plus the bias row — at most `min(n_tokens, buckets) + 1` rows
-    * per doc. Zero-count buckets contribute nothing to any score or
-    * gradient, so sparsity is free (and is the realistic posture: real
-    * vocabularies hash into 2^20 buckets, docs touch a few hundred).
+    * only, plus the bias `(buckets, 1.0)` — at most
+    * `min(n_tokens, buckets) + 1` entries. Zero-count buckets contribute
+    * nothing to any score or gradient, so sparsity is free (and is the
+    * realistic posture: real vocabularies hash into 2^20 buckets, docs
+    * touch a few hundred). Native one-pass kernel
+    * ([[graft.functions.ClsFeatures]]).
+    */
+  def featureRow(text: Column, buckets: Int): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(graft.functions.ClsFeatures(
+      org.apache.spark.sql.GraftColumnBridge.expression(Text.tokens(text)),
+      buckets))
+
+  /** The sparse hashed-feature relation `(idCol, pos, x)` of a corpus: the
+    * [[featureRow]] of every doc, exploded — per-row, no exchange.
     */
   def features(df: DataFrame, idCol: String, textCol: String,
-               buckets: Int): DataFrame = {
-    val tok = df.select(col(idCol),
-      explode(Text.tokens(col(textCol))).as("tok"))
-      .select(col(idCol), Importance.bucket(col("tok"), buckets).as("pos"))
-    val cnt = tok.groupBy(col(idCol), col("pos"))
-      .agg(count(lit(1)).as("c"))
-    // the doc-total denominator rides a window over the doc's own
-    // aggregated buckets — a cnt⋈perDoc self-join here re-scans (and
-    // re-tokenizes) the corpus for the denominator branch; the window
-    // pays one id-hash exchange instead
-    val sparse = cnt
-      .withColumn("n", sum(col("c"))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))))
-      .select(col(idCol), col("pos"),
-        round(col("c").cast("double") / col("n").cast("double"), 6).as("x"))
-    val bias = df.select(col(idCol), lit(biasPos(buckets)).as("pos"),
-      lit(1.0).as("x"))
-    sparse.unionByName(bias)
-  }
+               buckets: Int): DataFrame =
+    df.select(col(idCol), explode(featureRow(col(textCol), buckets)).as("f"))
+      .select(col(idCol), col("f.pos").as("pos"), col("f.x").as("x"))
 
   /** Per-doc decision score under a weight vector: order-free exact-decimal
     * sum of round12(w_pos * x) over the doc's feature rows (products of two
@@ -73,8 +70,8 @@ object Classifier {
     * — no double-rounding boundary can disagree across engines. The weights
     * enter as one constant-folded array literal.
     */
-  private def scores(feats: DataFrame, idCol: String,
-                     w: Array[Double]): DataFrame = {
+  private[graft] def scores(feats: DataFrame, idCol: String,
+                             w: Array[Double]): DataFrame = {
     val wLit = array(w.map(lit(_)): _*)
     feats
       .withColumn("wx", round(element_at(wLit, col("pos") + 1) * col("x"), 12))
@@ -96,38 +93,6 @@ object Classifier {
     val pMicros = least(lit(1000000L),
       greatest(lit(0L), lit(500000L) + floor(sMicros / 4.0).cast("long")))
     pMicros.cast("double") / 1e6
-  }
-
-  /** Fit by `iters` rounds of full-batch gradient descent (start w = 0,
-    * rate `eta`): per round ONE doc-keyed score aggregate and ONE bounded
-    * gradient aggregate; `buckets+1` doubles cross the driver. `labels` is
-    * `(idCol, y)` with y in {0.0, 1.0}; `nDocs` its row count (metadata-
-    * scale, computed once by the caller). `eta` must be a whole number so
-    * `eta * gradient` stays on the 1e-6 grid and the weight update needs no
-    * cross-engine rounding (a fractional eta puts updates exactly ON round6
-    * boundaries — the half-ulp coin-flip the replay gate cannot tolerate).
-    */
-  def fitLogReg(feats: DataFrame, labels: DataFrame, idCol: String,
-                buckets: Int, iters: Int, eta: Double,
-                nDocs: Long): Array[Double] = {
-    require(eta == math.rint(eta) && eta > 0,
-      s"eta must be a positive whole number for grid-exact updates, got $eta")
-    var w = Array.fill(buckets + 1)(0.0)
-    for (_ <- 0 until iters) {
-      val err = scores(feats, idCol, w)
-        .join(labels, Seq(idCol))
-        .select(col(idCol), (sigmoid(col("s")) - col("y")).as("err"))
-      val grad = feats.join(err, Seq(idCol))
-        .withColumn("ex", round(col("err") * col("x"), 12))
-        .groupBy(col("pos"))
-        .agg(round(sumDec(col("ex"), 12) / nDocs.toDouble, 6).as("g"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      w = w.zipWithIndex.map { case (wj, j) =>
-        BigDecimal(java.lang.Double.toString(wj - eta * grad.getOrElse(j, 0.0)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-    }
-    w
   }
 
   // ------------------------------------------------ driver-loop GD twin
@@ -161,7 +126,27 @@ object Classifier {
     pMicros.toDouble / 1e6
   }
 
-  /** [[fitLogReg]] as a driver loop over a COLLECTED sample — every
+  /** One GD weight update: w - eta * g, rounded to 6 decimals (whole eta
+    * keeps it on the 1e-6 grid); a position without a gradient keeps its
+    * weight.
+    */
+  private[graft] def step(w: Array[Double], grad: collection.Map[Int, Double],
+                          eta: Double): Array[Double] =
+    w.zipWithIndex.map { case (wj, j) =>
+      BigDecimal(java.lang.Double.toString(wj - eta * grad.getOrElse(j, 0.0)))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    }
+
+  /** `eta` must be a whole number so `eta * gradient` stays on the 1e-6
+    * grid and the weight update needs no cross-engine rounding (a
+    * fractional eta puts updates exactly ON round6 boundaries — the
+    * half-ulp coin-flip the replay gate cannot tolerate).
+    */
+  private[graft] def requireWholeEta(eta: Double): Unit =
+    require(eta == math.rint(eta) && eta > 0,
+      s"eta must be a positive whole number for grid-exact updates, got $eta")
+
+  /** The GD rounds as a driver loop over a COLLECTED sample — every
     * rounding step replicates the relational chain operator for operator
     * (Round(double,12) = BigDecimal.valueOf + HALF_UP, the
     * decimal(30,12) cast, the scale-6 decimal round for scores, the
@@ -175,8 +160,7 @@ object Classifier {
                                     labels: scala.collection.Map[Long, Double],
                                     buckets: Int, iters: Int, eta: Double,
                                     nDocs: Long): Array[Double] = {
-    require(eta == math.rint(eta) && eta > 0,
-      s"eta must be a positive whole number for grid-exact updates, got $eta")
+    requireWholeEta(eta)
     var w = Array.fill(buckets + 1)(0.0)
     for (_ <- 0 until iters) {
       // scores: per doc, decimal(30,12) sum of round12(w_pos * x),
@@ -198,13 +182,9 @@ object Classifier {
         val ex = dec12(roundD(err(id) * x, 12))
         gacc(pos) = gacc.get(pos).map(_.add(ex)).getOrElse(ex)
       }
-      val grad = gacc.map { case (pos, sum) =>
+      w = step(w, gacc.map { case (pos, sum) =>
         pos -> roundD(sum.doubleValue() / nDocs.toDouble, 6)
-      }
-      w = w.zipWithIndex.map { case (wj, j) =>
-        BigDecimal(java.lang.Double.toString(wj - eta * grad.getOrElse(j, 0.0)))
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
+      }, eta)
     }
     w
   }
@@ -236,99 +216,92 @@ object Classifier {
     Curation.hashRatio(col(idCol), TrainSampleSeed) <
       lit(math.min(1.0, cap.toDouble / nAll))
 
-  /** [[fitLogReg]] on the deterministic subsample: counts the corpus,
-    * filters features and labels by [[trainSamplePredicate]], normalizes
-    * gradients by the SAMPLE size. Two metadata-scale counts; training
-    * cost is bounded by the cap however large the corpus.
-    *
-    * Use [[fitSampled]] unless full-corpus features already exist for
-    * another reason: filtering PRE-BUILT features bounds the GD rounds but
-    * still paid the full-corpus feature pass to build them.
-    */
-  def fitLogRegSampled(feats: DataFrame, labels: DataFrame, idCol: String,
-                       buckets: Int, iters: Int, eta: Double,
-                       cap: Long = TrainSampleCap): Array[Double] = {
-    val nAll = labels.count()
-    val p = trainSamplePredicate(idCol, nAll, cap)
-    val trainLabels = labels.filter(p)
-    fitLogReg(feats.filter(p), trainLabels, idCol, buckets, iters, eta,
-      nDocs = trainLabels.count())
-  }
-
   /** The sampled fit END TO END: the sample predicate is pushed BEFORE
-    * feature construction, so the tokenize/bucket/aggregate feature pass
-    * is bounded by the cap too — the r11 shape built (and checkpointed)
-    * full-corpus features and then filtered them, which left a ~85 s/head
-    * full-corpus pass inside every fit at the 1000× decade. `label` is
-    * evaluated against `docs`' columns. Weight-identical to
-    * [[fitLogRegSampled]] over full-corpus features: the feature relation
-    * is per-doc independent, so features(docs.filter(p)) ≡
-    * features(docs).filter(p) row for row, and the gradient normalizer is
-    * the same sample count (ClassifierSpec pins it; the oracle replays
-    * the identical sampled rounds).
+    * feature construction, so the feature pass is bounded by the cap too —
+    * the r11 shape built full-corpus features and then filtered them,
+    * which left a ~85 s/head full-corpus pass inside every fit at the
+    * 1000× decade. `label` is evaluated against `docs`' columns; the
+    * gradient normalizer is the SAMPLE size. One metadata-scale count;
+    * training cost is bounded by the cap however large the corpus. Doc ids
+    * must be unique and non-null (every caller's are).
     */
   def fitSampled(docs: DataFrame, idCol: String, textCol: String,
                  label: Column, buckets: Int, iters: Int, eta: Double,
                  cap: Long = TrainSampleCap): Array[Double] = {
     val nAll = docs.count()
-    val p = trainSamplePredicate(idCol, nAll, cap)
-    // bounded by the cap: one checkpoint of the sampled docs feeds the
-    // feature build and the label/count passes without re-scanning the
-    // corpus per GD round. Lazy: the first action over it (the feature
-    // take or the feats checkpoint) computes it in the same pass
-    val train = docs.filter(p).localCheckpoint(eager = false)
-    fitGated(features(train, idCol, textCol, buckets), train, idCol, label,
-      buckets, iters, eta)
+    fitGated(docs.filter(trainSamplePredicate(idCol, nAll, cap)), idCol,
+      textCol, label, buckets, iters, eta)
   }
 
-  /** GD over the feature relation `featsPlan` built from the training docs
-    * `train` (`label` is evaluated against `train`'s columns): a driver
-    * loop when the features fit the driver gate, distributed rounds
-    * otherwise — same weights either way.
+  /** GD over the training docs `train` (`label` is evaluated against its
+    * columns, cast to double): a driver loop when the feature rows fit the
+    * driver gate, distributed rounds otherwise — same weights either way.
+    * Doc ids must be unique and non-null.
     */
-  private[graft] def fitGated(featsPlan: DataFrame, train: DataFrame,
-                              idCol: String, label: Column, buckets: Int,
+  private[graft] def fitGated(train: DataFrame, idCol: String,
+                              textCol: String, label: Column, buckets: Int,
                               iters: Int, eta: Double): Array[Double] = {
-    // checkpointed lazily BEFORE the gate's take: on overflow the
-    // distributed rounds read the blocks the take materialized, so the
-    // tokenize/bucket/aggregate feature pass runs once, not twice
-    val feats = featsPlan.localCheckpoint(eager = false)
+    requireWholeEta(eta)
+    // one row per training doc, features included — a per-row pass, no
+    // exchange. Checkpointed lazily BEFORE the gate's take: on overflow the
+    // rounds read the blocks the take materialized, so the feature kernel
+    // runs once per doc, not twice
+    val rows = train.select(col(idCol), label.cast("double").as("y"),
+        featureRow(col(textCol), buckets).as("f"))
+      .localCheckpoint(eager = false)
     // Driver-loop gate (guide §1.2/§5 — the CC/host-graph bounded-collect
     // discipline): the sample is cap-bounded by construction, and under
     // the feature-row ceiling the GD rounds run as a driver loop over ONE
-    // collected copy — two jobs total (feature take + label read off the
-    // cached checkpoint) instead of a checkpoint plus one join+aggregate
-    // job per round. fitLogRegLocal replicates the relational rounding
+    // collected copy of the exploded rows — one job instead of one
+    // aggregate job per round. fitLogRegLocal replicates the rounding
     // chain bit for bit (ClassifierSpec pins driver == distributed).
-    val idIsLong = feats.schema(idCol).dataType ==
+    val idIsLong = rows.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
-    if (idIsLong) DriverGate.take(feats,
+    if (idIsLong) DriverGate.take(
+        rows.select(col(idCol), col("y"), explode(col("f")).as("e"))
+          .select(col(idCol), col("y"), col("e.pos"), col("e.x")),
         "graft.classifier.driver_max_feature_rows", DriverMaxFeatureRows)
       .foreach { taken =>
-        // cast the label to double HERE (a non-double label works on the
-        // distributed path via implicit cast but would ClassCastException
-        // on getDouble), and take the driver path only when every label is
-        // non-null — a NULL label silently reading 0.0 would diverge from
-        // the distributed join's NULL propagation (r16 advice)
-        val labelRows = train
-          .select(col(idCol), label.cast("double").as("y")).collect()
-        if (labelRows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-          val labels = labelRows.iterator
+        // only when every label is non-null — a NULL label silently
+        // reading 0.0 would diverge from the rounds' NULL propagation
+        if (taken.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
+          val labels = taken.iterator
             .map(r => r.getLong(0) -> r.getDouble(1)).toMap
           return fitLogRegLocal(
-            taken.map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))),
-            labels, buckets, iters, eta, nDocs = labelRows.length.toLong)
+            taken.map(r => (r.getLong(0), r.getInt(2), r.getDouble(3))),
+            labels, buckets, iters, eta, nDocs = labels.size.toLong)
         }
       }
-    // NOT pre-partitioned by id: the r16 A/B (ProbeR16, alternating
-    // variants in one JVM, 4 reps) measured the repartition-at-checkpoint
-    // layout consistently SLOWER (min 3.75 vs 3.34 s) — the one-time
-    // repartition exchanges plus a labels checkpoint cost more than the
-    // per-round exchanges they remove, because AQE already broadcasts the
-    // cap-bounded per-round joins. Kept the plain checkpoints.
-    val labels = train.select(col(idCol), label.as("y"))
-    fitLogReg(feats, labels, idCol, buckets, iters, eta,
-      nDocs = train.count())
+    fitRounds(rows, buckets, iters, eta)
+  }
+
+  /** The distributed rounds over the checkpointed `(y, f)` rows: per round
+    * ONE per-row fold (the doc's error under the weight literal) and ONE
+    * aggregate grouped by pos — at most `buckets+1` groups, the only
+    * shuffle. `nDocs` is the bias group's row count (one bias entry per
+    * doc). A NULL label makes a NULL error: left out of every sum, still
+    * counted in `nDocs`.
+    */
+  private def fitRounds(rows: DataFrame, buckets: Int, iters: Int,
+                        eta: Double): Array[Double] = {
+    var w = Array.fill(buckets + 1)(0.0)
+    for (_ <- 0 until iters) {
+      // err in its own projection below the explode, so the fold runs
+      // once per doc, not once per feature
+      val g = rows.select((probOf(col("f"), w) - col("y")).as("err"),
+          col("f"))
+        .select(col("err"), explode(col("f")).as("e"))
+        .select(col("e.pos").as("pos"),
+          round(col("err") * col("e.x"), 12).as("ex"))
+        .groupBy(col("pos"))
+        .agg(sumDec(col("ex"), 12).as("s"), count(lit(1)).as("n"))
+        .collect()
+      val nDocs = g.find(_.getInt(0) == biasPos(buckets))
+        .fold(0L)(_.getLong(2))
+      w = step(w, g.iterator.filterNot(_.isNullAt(1)).map(r =>
+        r.getInt(0) -> roundD(r.getDouble(1) / nDocs.toDouble, 6)).toMap, eta)
+    }
+    w
   }
 
   /** Per-doc report under a trained model: `(idCol, prob, predicted)` —
@@ -345,45 +318,24 @@ object Classifier {
     * document's tf fractions fold against the weight vector with the SAME
     * rounding chain as the relational path (round12 products into an exact
     * accumulator, round6 score, integer-micros sigmoid) — sums regroup but
-    * exact arithmetic doesn't care. Pure codegen'd expression
-    * (functions/ClsProbFold — one histogram pass per doc, the DsirFold
-    * discipline): zero shuffle, no state — the shape that scores a crawl
-    * AT INGEST.
+    * exact arithmetic doesn't care. Pure codegen'd expressions (the
+    * [[featureRow]] kernel folded by functions/ClsProbFold — one histogram
+    * pass per doc, the DsirFold discipline): zero shuffle, no state — the
+    * shape that scores a crawl AT INGEST.
     */
   def probExpr(text: Column, w: Array[Double], buckets: Int): Column = {
     require(w.length == buckets + 1,
       s"weight vector must have buckets+1 entries, got ${w.length} for $buckets")
+    probOf(featureRow(text, buckets), w)
+  }
+
+  /** [[graft.functions.ClsProbFold]] of a [[featureRow]]. */
+  private def probOf(feats: Column, w: Array[Double]): Column = {
     graft.functions.ClsProbFold.register(
       org.apache.spark.sql.SparkSession.active)
     // 6-decimal weights are exact in integer micros
     val micros = w.map(v => math.round(v * 1e6))
-    call_function("cls_prob_fold", Text.tokens(text),
-      array(micros.map(lit(_)): _*))
-  }
-
-  /** The same probability as built-in higher-order folds — the interpreted
-    * reference implementation ClsProbFold is spec-proven against (the
-    * DsirFold discipline). Not for hot paths: CodegenFallback AND
-    * O(distinct_buckets × n_tokens) lambda evaluations per document.
-    */
-  private[graft] def probExprHof(text: Column, w: Array[Double],
-                                 buckets: Int): Column = {
-    val wLit = array(w.map(lit(_)): _*)
-    val toks = Text.tokens(text)
-    val n = size(toks).cast("double")
-    // one feature row per DISTINCT bucket: x = round6(count/n) — replay the
-    // per-bucket tf fractions, then the same weighted fold
-    val perTok = transform(toks,
-      t => Importance.bucket(t, buckets))
-    val distinctB = array_distinct(perTok)
-    val wx = transform(distinctB, b =>
-      round(element_at(wLit, b + 1) *
-        round(size(filter(perTok, p => p === b)).cast("double") / n, 6), 12))
-    val withBias = concat(wx,
-      array(round(element_at(wLit, lit(biasPos(buckets) + 1)) * lit(1.0), 12)))
-    val dec = aggregate(withBias, lit(0).cast("decimal(30,12)"),
-      (acc, v) => (acc + v.cast("decimal(30,12)")).cast("decimal(30,12)"))
-    sigmoid(round(dec, 6).cast("double"))
+    call_function("cls_prob_fold", feats, array(micros.map(lit(_)): _*))
   }
 
   // ------------------------------------------------------------- artifact

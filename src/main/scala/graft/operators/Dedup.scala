@@ -77,6 +77,23 @@ object Dedup {
           greatest(col("n_segments"), lit(1L)), 6))
   }
 
+  /** The exact-duplicate pre-collapse decision the near-dup paths share:
+    * collapse when under 90% of the texts are distinct. One cheap probe
+    * decides it — approx_count_distinct over the text hash is
+    * partial-aggregated (per-partition HLL sketches, no row shuffle) and
+    * deterministic. Both paths of every caller give identical results by
+    * construction, so a caller that knows the answer passes `known` (texts
+    * already exact-deduped) and no probe runs.
+    */
+  private def collapses(df: DataFrame, textCol: String,
+                        known: Option[Boolean] = None): Boolean =
+    known.getOrElse {
+      val probe = df.agg(count(lit(1)).as("n"),
+        approx_count_distinct(sha2(col(textCol).cast("string"), 256)).as("d"))
+        .head()
+      probe.getLong(1) < 0.9 * probe.getLong(0)
+    }
+
   /** Duplicated-span EXTENTS at sliding k-gram granularity — the public
     * "Deduplicating Training Data" (Lee et al. 2021) suffix posture
     * approximated with hashed k-grams, the bucket-bounded shape
@@ -107,10 +124,7 @@ object Dedup {
     // unchanged, and members inherit their representative's extents by
     // equi-join (identical text => identical spans). TextDedupSpec pins
     // collapsed == direct on a duplicated fixture.
-    val probe = df.agg(count(lit(1)).as("n"),
-      approx_count_distinct(sha2(col(textCol).cast("string"), 256)).as("d"))
-      .head()
-    if (probe.getLong(1) >= 0.9 * probe.getLong(0))
+    if (!collapses(df, textCol))
       spansOf(df, idCol, lit(1L), textCol, k)
     else {
       val byText = org.apache.spark.sql.expressions.Window
@@ -371,11 +385,7 @@ object Dedup {
     // for each rep-level candidate pair (G, H) every member of G gains
     // |H| candidates at jacc(G, H) — the bucket sets are signature-
     // determined, so member pairs are candidates iff their rep pair is.
-    val probe = df.agg(count(lit(1)).as("n"),
-      approx_count_distinct(sha2(col(textCol).cast("string"), 256)).as("d")).head()
-    val collapse = collapseOverride.getOrElse(
-      probe.getLong(1) < 0.9 * probe.getLong(0))
-    if (!collapse) {
+    if (!collapses(df, textCol, collapseOverride)) {
       val perDoc = minhashScoredPairs(df, textCol, idCol, shingleSize, numPerm, bands)
         .select(explode(array(col("id_a"), col("id_b"))).as(idCol), col("jacc"))
         .groupBy(idCol)
@@ -448,13 +458,8 @@ object Dedup {
                    foldCol: String, shingleSize: Int = 3, numPerm: Int = 64,
                    bands: Int = 16, threshold: Double = 0.5,
                    collapseOverride: Option[Boolean] = None): DataFrame = {
-    val probe = df.agg(count(lit(1)).as("n"),
-      approx_count_distinct(sha2(col(textCol).cast("string"), 256)).as("d"))
-      .head()
-    val collapse = collapseOverride.getOrElse(
-      probe.getLong(1) < 0.9 * probe.getLong(0))
     val folds = df.select(col(idCol), col(foldCol))
-    if (!collapse) {
+    if (!collapses(df, textCol, collapseOverride)) {
       val pairs = minhashScoredPairs(df.select(col(idCol), col(textCol)),
         textCol, idCol, shingleSize, numPerm, bands)
         .where(col("jacc") >= threshold)
@@ -636,15 +641,19 @@ object Dedup {
           col("m").as("v"))
         .distinct()
     }
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      // one scalar action per alternation: (edge count, order-free hash
-      // fold) — equal across alternations means both star ops are at
-      // their joint fixpoint (the old loop's label-sum probe, on edges).
-      // bit_xor, not sum: a Long sum overflows under ANSI mode; xor over
-      // a DISTINCT edge set is an equally sound set fingerprint
+    def fingerprint(e: DataFrame): (Long, Long, java.math.BigDecimal) = {
+      // one scalar action per alternation: (edge count, xor fold, sum
+      // fold) of a DISTINCT edge set — equal across alternations means both
+      // star ops are at their joint fixpoint. Two independent folds: an xor
+      // collision between distinct same-size edge sets would stop on a
+      // non-fixpoint with silently wrong labels, so the exact sum of a
+      // second hash (the swapped pair; decimal, since a Long sum overflows
+      // under ANSI mode) must collide at the same time
       val r = e.agg(count(lit(1)).as("n"),
-        bit_xor(xxhash64(col("u"), col("v"))).as("h")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h"),
+        coalesce(sum(xxhash64(col("v"), col("u")).cast("decimal(38,0)")),
+          lit(0).cast("decimal(38,0)")).as("s")).head()
+      (r.getLong(0), r.getLong(1), r.getDecimal(2))
     }
     var cur = gated
       .select(greatest(col("id_a"), col("id_b")).as("u"),
@@ -693,17 +702,13 @@ object Dedup {
     */
   def dupClusters(df: DataFrame, textCol: String, idCol: String,
                   shingleSize: Int = 3, numPerm: Int = 64, bands: Int = 16,
-                  threshold: Double = 0.5): DataFrame = {
-    // One cheap probe decides the path: approx_count_distinct over the text
-    // hash is partial-aggregated (per-partition HLL sketches, no row
-    // shuffle) and deterministic. A mostly-distinct corpus skips the
-    // collapse — its text-hash shuffle and member re-attach would be pure
-    // overhead (~1.5x measured at sf0.1, where every text is unique) — a
-    // duplicated corpus takes it (3.2x faster at the 10x-duplicated sf1).
-    // Both paths produce identical results by construction.
-    val probe = df.agg(count(lit(1)).as("n"),
-      approx_count_distinct(sha2(col(textCol).cast("string"), 256)).as("d")).head()
-    val collapse = probe.getLong(1) < 0.9 * probe.getLong(0)
+                  threshold: Double = 0.5,
+                  collapseOverride: Option[Boolean] = None): DataFrame = {
+    // A mostly-distinct corpus skips the collapse — its text-hash shuffle
+    // and member re-attach would be pure overhead (~1.5x measured at sf0.1,
+    // where every text is unique) — a duplicated corpus takes it (3.2x
+    // faster at the 10x-duplicated sf1).
+    val collapse = collapses(df, textCol, collapseOverride)
 
     val labels =
       if (!collapse) {
@@ -749,8 +754,10 @@ object Dedup {
     * partitioning the cluster_size window already established.
     */
   def keepBest(df: DataFrame, textCol: String, idCol: String,
-               score: Column, threshold: Double = 0.5): DataFrame = {
-    val clusters = dupClusters(df, textCol, idCol, threshold = threshold)
+               score: Column, threshold: Double = 0.5,
+               collapseOverride: Option[Boolean] = None): DataFrame = {
+    val clusters = dupClusters(df, textCol, idCol, threshold = threshold,
+      collapseOverride = collapseOverride)
       .select(col(idCol), col("cluster_id"), col("cluster_size"))
     val scored = df.select(col(idCol), score.as("score"))
     val w = org.apache.spark.sql.expressions.Window

@@ -996,7 +996,7 @@ object Config {
         if (it <= 0) fail(s"$ctx.iters must be > 0, got $it")
         val eta = dblOpt(t, "eta").getOrElse(1.0)
         // whole-number eta keeps weight updates on the 1e-6 grid (the
-        // replay-exactness contract Classifier.fitLogReg enforces) — fail
+        // replay-exactness contract Classifier.fitGated enforces) — fail
         // at parse time, not after a training pass
         if (eta <= 0.0 || eta != math.rint(eta))
           fail(s"$ctx.eta must be a positive whole number, got $eta")

@@ -462,8 +462,10 @@ object ConfigRuntime {
     * dedup shuffles sha256 digests (never bodies) and keeps min-id; fuzzy
     * dedup is the bucketed minhash + connected-components path
     * (Dedup.dupClusters — no all-pairs join); decontaminate broadcasts the
-    * benchmark n-grams; chunk is per-row codegen. The only corpus-sized
-    * shuffles are the dedup keys.
+    * benchmark n-grams; chunk is per-row codegen. Corpus-sized shuffles:
+    * the dedup keys, and the join-backs of the snapshotting steps (exact
+    * decontaminate, dedup_fuzzy, dedup_lines, tokenize), which shuffle the
+    * document bodies by id unless AQE broadcasts the kept-id side.
     */
   def corpus(spark: SparkSession, dataDir: String,
              project: Config.Project): DataFrame =
@@ -486,7 +488,20 @@ object ConfigRuntime {
     val id = col(c.idCol)
     val text = col(c.textCol)
     val steps = through.fold(c.steps)(c.steps.take)
+    // every text is distinct: a dedup_exact ran and no later step rewrote
+    // the text column or added rows — the near-dup clustering then skips
+    // its duplication probe
+    var textsDistinct = false
     steps.foldLeft(res.sourceFrame(c.source)) { (df, step) =>
+      textsDistinct = step match {
+        case Config.CorpusDedupExact() => true
+        case _: Config.CorpusFilter | _: Config.CorpusGopher |
+             _: Config.CorpusDedupFuzzy | _: Config.CorpusDecontaminate |
+             _: Config.CorpusDedupIncremental | _: Config.CorpusTokenize |
+             _: Config.CorpusSelect | _: Config.CorpusClassify |
+             _: Config.CorpusMix | _: Config.CorpusBudget => textsDistinct
+        case _ => false
+      }
       step match {
         case f: Config.CorpusFilter =>
           df.filter(corpusFilterCond(text, f))
@@ -512,17 +527,20 @@ object ConfigRuntime {
           // the checkpoint the upstream filter/dedup subtree recomputes per
           // action (measured 6.5 s → ~3.8-4.3 s at sf0.1, similar load)
           val snap = df.localCheckpoint(eager = false)
+          val collapse = if (textsDistinct) Some(false) else None
           val canonical =
             if (keep == "best_quality")
               // quality-ranked keep: the highest-qualityScore copy per
               // cluster survives (ties to min id) — Dedup.keepBest
               graft.operators.Dedup
                 .keepBest(snap, c.textCol, c.idCol,
-                  Text.qualityScore(text), threshold = threshold)
+                  Text.qualityScore(text), threshold = threshold,
+                  collapseOverride = collapse)
                 .where(col("keep")).select(col(c.idCol))
             else
               graft.operators.Dedup
-                .dupClusters(snap, c.textCol, c.idCol, threshold = threshold)
+                .dupClusters(snap, c.textCol, c.idCol, threshold = threshold,
+                  collapseOverride = collapse)
                 .where(col(c.idCol) === col("cluster_id"))
                 .select(col(c.idCol))
           snap.join(canonical, Seq(c.idCol))
@@ -580,29 +598,30 @@ object ConfigRuntime {
           // same tf-compressed shape for both.
           val snap = df.localCheckpoint(eager = false)
           val path = resolvePath(dataDir, artifact)
+          // The train path encodes with the vocabulary the training loop
+          // already merged (word → trained segmentation): rebuilding the
+          // initial vocabulary and replaying the merges would cost one more
+          // corpus-wide word aggregate for the same encode map.
+          val exists = java.nio.file.Files.exists(path)
           val encoded = family match {
             case "wordpiece" =>
               import graft.operators.WordPiece
-              val merges =
-                if (java.nio.file.Files.exists(path))
-                  WordPiece.loadTokenizer(path.toString)
-                else {
-                  val m = WordPiece.train(snap, c.textCol, rounds).merges
-                  WordPiece.saveTokenizer(path.toString, m)
-                  m
-                }
-              WordPiece.encodeStatsWith(snap, c.idCol, c.textCol, merges)
+              if (exists) WordPiece.encodeStatsWith(snap, c.idCol, c.textCol,
+                WordPiece.loadTokenizer(path.toString))
+              else {
+                val m = WordPiece.train(snap, c.textCol, rounds)
+                WordPiece.saveTokenizer(path.toString, m.merges)
+                graft.operators.Bpe.encodeJoin(snap, c.idCol, c.textCol, m.vocab)
+              }
             case _ =>
               import graft.operators.Bpe
-              val merges =
-                if (java.nio.file.Files.exists(path))
-                  Bpe.loadTokenizer(path.toString)
-                else {
-                  val m = Bpe.merges(snap, c.textCol, rounds)
-                  Bpe.saveTokenizer(path.toString, m)
-                  m
-                }
-              Bpe.encodeStatsWith(snap, c.idCol, c.textCol, merges)
+              if (exists) Bpe.encodeStatsWith(snap, c.idCol, c.textCol,
+                Bpe.loadTokenizer(path.toString))
+              else {
+                val m = Bpe.train(snap, c.textCol, rounds)
+                Bpe.saveTokenizer(path.toString, m.merges)
+                Bpe.encodeJoin(snap, c.idCol, c.textCol, m.vocab)
+              }
           }
           snap.join(encoded, Seq(c.idCol), "left")
             .na.fill(0L, Seq("n_words", "n_chars", "n_tokens"))

@@ -186,7 +186,7 @@ object QueriesCuration {
     * drift between them.
     *
     * Training runs on the DETERMINISTIC sha-ratio SAMPLE (the twin of
-    * Classifier.fitLogRegSampled: rate = least(1, cap/n), the same seed
+    * Classifier.fitSampled: rate = least(1, cap/n), the same seed
     * and 53-bit ratio — both engines IEEE-divide the same exact values and
     * compare the same doubles); scoring (`cls_sF`) runs over the FULL
     * feature relation.
@@ -280,10 +280,10 @@ object QueriesCuration {
     // rounds of full-batch gradient descent ON THE DETERMINISTIC sha-ratio
     // TRAINING SAMPLE (capped — a real gate fits on a bounded sample and
     // scores everything; at the gate scale the cap exceeds the corpus and
-    // the sample IS the corpus) — per round one doc-keyed score aggregate
-    // (weights enter as a literal) and one 65-row gradient aggregate; only
-    // the weight vector crosses the driver. The oracle replays the
-    // identical sampled rounds as an iterated CTE chain.
+    // the sample IS the corpus) — per round one per-row fold of each doc's
+    // feature row (weights enter as a literal) and one 65-row gradient
+    // aggregate; only the weight vector crosses the driver. The oracle
+    // replays the identical sampled rounds as an iterated CTE chain.
     "quality_classifier" -> { (s, d) =>
       val docs = documents(s, d)
       val labels = docs.select(col("doc_id"),

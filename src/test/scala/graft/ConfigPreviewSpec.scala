@@ -268,6 +268,77 @@ class ConfigPreviewSpec extends SparkSpec {
       "the second run must hydrate, not retrain")
   }
 
+  /** A corpus-only project over `documents.parquet` in `dir`. */
+  private def corpusProject(steps: String*): Config.Project =
+    Config.parseProject(
+      """sources:
+        |  - id: docs
+        |    loader: { transport: fs, path: documents.parquet, reader: { format: parquet } }
+        |corpus:
+        |  source: docs
+        |  steps:
+        |""".stripMargin + steps.map(st => s"    - $st\n").mkString)
+
+  test("corpus tokenize: the trained-path encode equals the hydrated-path encode") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_corpus_tok_paths")
+    Seq((1L, "lower lowest newer newest wider"), (2L, "low lower new newer"),
+      (3L, "naïve naïveté 東京 東京都 ünder"), (4L, ""), (5L, "  widest  low"),
+      (6L, null)).toDF("doc_id", "text")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    for (family <- Seq("bpe", "wordpiece")) {
+      val p = corpusProject(
+        s"{ step: tokenize, artifact: $family.json, rounds: 6, family: $family }")
+      def encode() = ConfigRuntime.corpus(spark, dir.toString, p)
+        .select("doc_id", "n_words", "n_chars", "n_tokens")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSeq.sorted
+      val trained = encode()
+      assert(Files.exists(dir.resolve(s"$family.json")), family)
+      val hydrated = encode()
+      assert(trained == hydrated, family)
+      assert(trained.length == 6 && trained.exists(t => t._4 < t._3), family)
+    }
+  }
+
+  test("dedup_fuzzy after dedup_exact skips the duplication probe, same output") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_corpus_fuzzy_probe")
+    val base = "the quick brown fox jumps over the lazy dog near the river bank"
+    Seq((1L, base), (2L, base), (3L, base.replace("lazy", "sleepy")),
+      (4L, "an entirely different page about tidal pools and sea stars"),
+      (5L, "an entirely different page about tidal pools and sea urchins"),
+      (6L, "short"), (7L, "short"), (8L, "one more distinct page of plain words"))
+      .toDF("doc_id", "text")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    def ids(df: DataFrame) = df.select("doc_id").collect().map(_.getLong(0)).toSet
+    def probes(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+      plans.count(_.treeString.contains("approx_count_distinct"))
+    val exact = ConfigRuntime.corpus(spark, dir.toString,
+      corpusProject("{ step: dedup_exact }"))
+    for (keep <- Seq("min_id", "best_quality")) {
+      val fuzzy = s"{ step: dedup_fuzzy, threshold: 0.5, keep: $keep }"
+      val (got, plans) = SqlExecutions.recorded(spark) {
+        ids(ConfigRuntime.corpus(spark, dir.toString,
+          corpusProject("{ step: dedup_exact }", fuzzy)))
+      }
+      assert(probes(plans) == 0, s"$keep: the probe ran")
+      // the same journey with the probe: the step alone over the
+      // exact-deduped frame
+      val probed = if (keep == "min_id")
+        graft.operators.Dedup.dupClusters(exact, "text", "doc_id")
+          .where($"doc_id" === $"cluster_id")
+      else graft.operators.Dedup.keepBest(exact, "text", "doc_id",
+          graft.functions.Text.qualityScore($"text")).where($"keep")
+      assert(got == ids(probed), keep)
+      // without a dedup_exact before it the step still probes
+      val (_, alone) = SqlExecutions.recorded(spark) {
+        ids(ConfigRuntime.corpus(spark, dir.toString, corpusProject(fuzzy)))
+      }
+      assert(probes(alone) > 0, s"$keep: the probe must run on raw texts")
+    }
+  }
+
   test("corpus select step trains the model once, then scores under the hydrated artifact") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_corpus_select")

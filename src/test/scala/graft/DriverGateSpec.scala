@@ -122,20 +122,19 @@ class DriverGateSpec extends SparkSpec {
   }
 
   test("on overflow the classifier feature lineage is evaluated once") {
-    val train = docs.localCheckpoint()
-    val plain = Classifier.features(train, "doc_id", "text", B)
-    val nFeat = plain.count()
+    // every training doc's text passes through the tap on its way into the
+    // feature kernel: the gate's take and the rounds after it must share
+    // ONE kernel run per doc
     val evals = spark.sparkContext.longAccumulator("cls_feature_evals")
-    val counted = udf { (x: Double) => evals.add(1L); x }.asNondeterministic()
-    val feats = plain.withColumn("x", counted(col("x")))
+    val counted = udf { (t: String) => evals.add(1L); t }.asNondeterministic()
+    val train = docs.withColumn("text", counted(col("text")))
     val w = withConf(ClsKey -> "1") {
-      Classifier.fitGated(feats, train, "doc_id", col("y"), B,
+      Classifier.fitGated(train, "doc_id", "text", col("y"), B,
         iters = 3, eta = 1.0)
     }
-    assert(w.toSeq == Classifier.fitGated(plain, train, "doc_id", col("y"), B,
+    assert(w.toSeq == Classifier.fitGated(docs, "doc_id", "text", col("y"), B,
       iters = 3, eta = 1.0).toSeq)
-    assert(evals.value == nFeat,
-      s"${evals.value} feature-row evaluations for $nFeat rows")
+    assert(evals.value == 6L, s"${evals.value} kernel runs for 6 training docs")
   }
 
   test("SPARK_GRAFT_CONF entries set session conf; a malformed entry fails") {

@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{BloomNgramHits, ClsProbFold, DsirFold, ShingleArray}
+import graft.functions.{BloomNgramHits, ClsFeatures, ClsProbFold, DsirFold, ShingleArray}
 
 /** Property-based cross-checks for the native codegen'd expressions'
   * `compute` cores — each checked against an INDEPENDENT reference
@@ -82,7 +82,8 @@ class PropertyExprSpec extends AnyFunSuite {
     } yield (ts, w)
     check(Prop.forAll(gen) { case (ts, w) =>
       val buckets = w.length - 1
-      val got = ClsProbFold(null, null).compute(arr(ts), larr(w))
+      val got = ClsProbFold(null, null)
+        .compute(ClsFeatures.row(arr(ts), buckets), larr(w))
       var picos = BigInt(w(buckets)) * 1000000
       if (ts.nonEmpty && buckets > 0) {
         ts.groupBy(t => (hex60(t) % buckets).toInt).foreach { case (b, grp) =>
