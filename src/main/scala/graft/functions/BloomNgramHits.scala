@@ -48,43 +48,26 @@ case class BloomNgramHits(left: Expression, right: Expression,
     }
 
   def compute(toks: ArrayData, words: ArrayData): Long = {
-    val nT = toks.numElements()
-    if (nT < n) return 0L
     val mBits = words.numElements().toLong * 64L
     val md = java.security.MessageDigest.getInstance("SHA-256")
-    val seen = new java.util.HashSet[String]()
-    var hits = 0L
-    var i = 0
-    while (i <= nT - n) {
-      val sb = new java.lang.StringBuilder()
-      var k = 0
-      while (k < n) {
-        if (k > 0) sb.append(' ')
-        sb.append(toks.getUTF8String(i + k).toString)
-        k += 1
+    ShingleArray.distinctHits(toks, n) { g =>
+      var hit = true
+      var h = 0
+      while (hit && h < numHashes) {
+        md.reset()
+        val dig = md.digest(
+          ("bloom" + h + ":" + g).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        var v = 0L
+        var j = 0
+        while (j < 7) { v = (v << 8) | (dig(j) & 0xFFL); j += 1 }
+        v = (v << 4) | ((dig(7) & 0xFFL) >>> 4) // 60 bits, always positive
+        val p = v % mBits
+        if ((words.getLong((p / 64L).toInt) & (1L << (p % 64L).toInt)) == 0L)
+          hit = false
+        h += 1
       }
-      val g = sb.toString
-      if (seen.add(g)) {
-        var hit = true
-        var h = 0
-        while (hit && h < numHashes) {
-          md.reset()
-          val dig = md.digest(
-            ("bloom" + h + ":" + g).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var v = 0L
-          var j = 0
-          while (j < 7) { v = (v << 8) | (dig(j) & 0xFFL); j += 1 }
-          v = (v << 4) | ((dig(7) & 0xFFL) >>> 4) // 60 bits, always positive
-          val p = v % mBits
-          if ((words.getLong((p / 64L).toInt) & (1L << (p % 64L).toInt)) == 0L)
-            hit = false
-          h += 1
-        }
-        if (hit) hits += 1L
-      }
-      i += 1
+      hit
     }
-    hits
   }
 
   override protected def nullSafeEval(toks: Any, words: Any): Any =

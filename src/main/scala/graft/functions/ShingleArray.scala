@@ -14,12 +14,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * discipline): the higher-order formulation — `transform` over a
   * `sequence` with an n-way `concat_ws` per window — is CodegenFallback;
   * every window walks an interpreted expression tree. shingles sit on the
-  * hot path of every n-gram operator (exact decontamination's explode,
-  * ngram_jaccard's verify, the minhash preprocessing), and the round-9
-  * switch to full-materialization benching exposed the cost: ngram_jaccard
-  * 17.8 s / curation_decontam 10.5 s at sf0.1, almost entirely interpreted
-  * window construction. This expression builds the windows in a tight
-  * loop at scan speed.
+  * hot path of every n-gram operator (the benchmark set of exact
+  * decontamination, ngram_jaccard's verify, the minhash preprocessing),
+  * and the round-9 switch to full-materialization benching exposed the
+  * cost: ngram_jaccard 17.8 s / curation_decontam 10.5 s at sf0.1, almost
+  * entirely interpreted window construction. This expression builds the
+  * windows in a tight loop at scan speed.
   *
   * Semantics are exactly [[Text.shinglesHof]]: windows start at every
   * position (size − n + 1 of them), tokens join with single spaces, fewer
@@ -76,6 +76,33 @@ case class ShingleArray(child: Expression, n: Int)
 }
 
 object ShingleArray {
+
+  /** How many DISTINCT n-grams of a token array satisfy `hit` — the walk
+    * the per-row n-gram probes share ([[NgramSetHits]], [[BloomNgramHits]]).
+    * Windows are exactly [[ShingleArray.compute]]'s (fewer than n tokens →
+    * 0); each distinct n-gram is tested once, in first-occurrence order.
+    */
+  def distinctHits(toks: ArrayData, n: Int)(hit: String => Boolean): Long = {
+    val nT = toks.numElements()
+    if (nT < n) return 0L
+    val seen = new java.util.HashSet[String]()
+    var hits = 0L
+    var i = 0
+    while (i <= nT - n) {
+      val sb = new java.lang.StringBuilder()
+      var k = 0
+      while (k < n) {
+        if (k > 0) sb.append(' ')
+        sb.append(toks.getUTF8String(i + k).toString)
+        k += 1
+      }
+      val g = sb.toString
+      if (seen.add(g) && hit(g)) hits += 1L
+      i += 1
+    }
+    hits
+  }
+
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "shingle_array", { exprs =>

@@ -342,13 +342,6 @@ object Crawl {
         org.apache.spark.sql.GraftColumnBridge.expression(lines),
         org.apache.spark.sql.GraftColumnBridge.expression(drop)))
 
-  /** The HOF formulation of [[rebuildLines]] — the executable reference
-    * CrawlSpec property-pins [[graft.functions.LineRebuild]] against. Not
-    * on the hot path (interpreted per line).
-    */
-  private[graft] def rebuildLinesHof(lines: Column, drop: Column): Column =
-    array_join(filter(lines, (l, i) => !array_contains(drop, i)), "\n")
-
   // --- Host link graph + PageRank -----------------------------------------
 
   /** Host-level link graph from per-page outlinks: each page contributes

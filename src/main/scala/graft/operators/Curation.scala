@@ -9,12 +9,14 @@ import graft.functions.Text
   * §2.7): benchmark decontamination, stratified sampling, per-group top-k
   * selection, and deterministic k-means clustering over embeddings.
   *
-  * Scale posture: decontamination is a bucketed n-gram equi-join (the
-  * benchmark side is the small one — broadcast); stratified sampling is a
-  * pure codegen'd filter (zero shuffle); group top-k uses the bounded
-  * [[TopK]] aggregator so only G×k rows shuffle; k-means keeps the data
-  * distributed and only moves k×dim centroid statistics through the driver
-  * per iteration (artifact-scale, the same shape MLlib uses).
+  * Scale posture: exact decontamination is a per-row probe against the
+  * benchmark's distinct n-gram set, which rides the plan as a scalar
+  * subquery (the benchmark side is the small one; the corpus never
+  * shuffles); stratified sampling is a pure codegen'd filter (zero
+  * shuffle); group top-k uses the bounded [[TopK]] aggregator so only G×k
+  * rows shuffle; k-means keeps the data distributed and only moves k×dim
+  * centroid statistics through the driver per iteration (artifact-scale,
+  * the same shape MLlib uses).
   */
 object Curation {
 
@@ -22,25 +24,35 @@ object Curation {
     * shares at least one word n-gram with the benchmark corpus — the
     * standard test-set-contamination check run before pretraining.
     *
-    * Shape: distinct n-grams per side, equi-join on the n-gram, per-doc
-    * overlap counts, left-join back. The benchmark is broadcast (benchmark
-    * suites are ≪ the training corpus); drop the hint if yours is not.
+    * Shape: a pure projection of [[ngramHits]] — each row counts its own
+    * distinct n-grams found in the benchmark's distinct n-gram set. No
+    * join, no exchange on the corpus; each row is judged on its own text,
+    * so a repeated id reports once per row. The set sits on the driver
+    * once, as a scalar subquery result, and ships with the plan; for a
+    * benchmark too large for that, [[decontaminateBloom]] (`method:
+    * bloom`) is the path. Output: `(id, n_contaminated, contaminated)`.
     */
   def decontaminate(train: DataFrame, benchmark: DataFrame, idCol: String,
-                    textCol: String, n: Int): DataFrame = {
-    def ngrams(df: DataFrame) =
-      array_distinct(Text.shingles(Text.tokens(col(textCol)), n))
-    val trainNg = train.select(col(idCol), explode(ngrams(train)).as("ngram"))
-    val benchNg = benchmark.select(explode(ngrams(benchmark)).as("ngram"))
-      .distinct()
-    val overlap = trainNg.join(broadcast(benchNg), Seq("ngram"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_contaminated"))
-    train.select(col(idCol))
-      .join(overlap, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_contaminated"), lit(0L)).as("n_contaminated"),
-        (coalesce(col("n_contaminated"), lit(0L)) > 0).as("contaminated"))
+                    textCol: String, n: Int): DataFrame =
+    train.select(col(idCol),
+        coalesce(ngramHits(col(textCol), benchmark, textCol, n), lit(0L))
+          .as("n_contaminated"))
+      .withColumn("contaminated", col("n_contaminated") > 0L)
+
+  /** Per-row count of a text's distinct word n-grams that appear in the
+    * benchmark's distinct n-gram set (functions/NgramSetHits). The set is a
+    * scalar subquery over `benchmark`'s `benchTextCol`: it runs when the
+    * plan executes, not at plan build. NULL text → NULL.
+    */
+  def ngramHits(text: Column, benchmark: DataFrame, benchTextCol: String,
+                n: Int): Column = {
+    val set = benchmark
+      .select(explode(Text.shingles(Text.tokens(col(benchTextCol)), n)).as("g"))
+      .agg(collect_set(col("g")))
+      .scalar()
+    graft.functions.NgramSetHits.register(
+      org.apache.spark.sql.SparkSession.active)
+    call_function("ngram_set_hits", Text.tokens(text), set, lit(n))
   }
 
   /** Fuzzy benchmark decontamination: flag training documents that
@@ -75,11 +87,11 @@ object Curation {
   }
 
   /** Bloom-filter benchmark decontamination — the LARGE-benchmark scale
-    * path. [[decontaminate]] broadcasts the raw benchmark n-gram set, which
-    * stops fitting when the held-out suite reaches hundreds of millions of
-    * n-grams; a Bloom bitmap is FIXED-SIZE (`mBits` bits) regardless of
-    * benchmark cardinality, the standard posture for membership tests at
-    * 100 TB.
+    * path. [[decontaminate]] ships the raw benchmark n-gram set with the
+    * plan, which stops fitting when the held-out suite reaches hundreds of
+    * millions of n-grams; a Bloom bitmap is FIXED-SIZE (`mBits` bits)
+    * regardless of benchmark cardinality, the standard posture for
+    * membership tests at 100 TB.
     *
     * Build: distinct benchmark n-grams hash to `numHashes` positions; the
     * positions OR into a bitmap of `mBits/64` longs via a partial-aggregated
@@ -88,8 +100,8 @@ object Curation {
     *
     * Probe: the bitmap enters the plan as ONE constant-folded array literal;
     * each corpus document counts its distinct n-grams whose every position
-    * bit is set — a pure per-row expression, ZERO shuffle on the corpus
-    * ([[decontaminate]]'s n-gram equi-join disappears entirely).
+    * bit is set — a pure per-row expression, ZERO shuffle on the corpus,
+    * the [[decontaminate]] shape with a fixed-size bitmap for the set.
     *
     * False positives are the Bloom trade (never false negatives) —
     * deterministic given the hash family, so the DuckDB oracle reproduces
@@ -195,7 +207,7 @@ object Curation {
     * bitmap literal: one codegen'd pass per document
     * (functions/BloomNgramHits — n-gram build + distinct + numHashes
     * digests in a tight loop; the higher-order filter formulation it
-    * replaced is kept below as the spec-proven interpreted reference).
+    * replaced is the spec-proven interpreted reference, CurationTwin).
     * Pure expression, zero shuffle, no state — the decontamination shape
     * that gates a crawl AT INGEST.
     */
@@ -206,22 +218,6 @@ object Curation {
     call_function("bloom_ngram_hits",
       Text.tokens(text), array(bitmap.map(lit(_)): _*), lit(n),
       lit(numHashes))
-  }
-
-  /** The Bloom probe as built-in higher-order folds — the interpreted
-    * reference implementation BloomNgramHits is spec-proven against (the
-    * DsirFold discipline). Not for hot paths: CodegenFallback, every
-    * n-gram walks an interpreted tree around its digests.
-    */
-  private[graft] def bloomHitsHof(toks: Column, bitmapLit: Column, n: Int,
-                                  mBits: Int, numHashes: Int): Column = {
-    def hit(g: Column): Column = (0 until numHashes).map { i =>
-      val p = bloomPos(g, i, mBits)
-      val word = element_at(bitmapLit, floor(p / 64).cast("int") + 1)
-      word.bitwiseAND(call_function("shiftleft", lit(1L),
-        pmod(p, lit(64)).cast("int"))) =!= 0L
-    }.reduce(_ && _)
-    size(filter(array_distinct(Text.shingles(toks, n)), hit(_))).cast("long")
   }
 
   /** Position of hash family member `i` for an n-gram, in [0, mBits) —

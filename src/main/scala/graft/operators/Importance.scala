@@ -175,23 +175,6 @@ object Importance {
       array(micros.map(lit(_)): _*))
   }
 
-  /** The same score as a built-in higher-order fold — the interpreted
-    * reference implementation DsirFold is spec-proven against (the
-    * MinhashExprs discipline). Not for hot paths: ArrayAggregate is
-    * CodegenFallback and walks an interpreted tree per token.
-    */
-  private[graft] def dsirScoreExprHof(text: Column, lr: Array[Double]): Column = {
-    val buckets = lr.length
-    val lrArr = array(lr.map(lit(_)): _*)
-    val toks = Text.tokens(text)
-    // re-cast after each add: decimal addition widens the type and the fold
-    // accumulator must stay decimal(30,6)
-    val dec = aggregate(toks, lit(0).cast("decimal(30,6)"),
-      (acc, t) => (acc + element_at(lrArr, bucket(t, buckets) + 1)
-        .cast("decimal(30,6)")).cast("decimal(30,6)"))
-    round(dec.cast("double") / size(toks), 6)
-  }
-
   /** Temperature-scaled domain mixture: per-domain target weight w_d ∝
     * n_d^alpha (alpha = 0.5 → sqrt, the multilingual-sampling default),
     * per-domain deterministic keep rate = min(1, T·w_d / n_d), applied as a

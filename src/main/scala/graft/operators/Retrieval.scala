@@ -126,9 +126,9 @@ object Retrieval {
   /** Batch percolation: the same fitted-fold plan as the streaming twin —
     * the fitted weight table is metadata-scale BY construction (standing
     * queries are few), so the per-row [[percolateAlerts]] fold beats any
-    * join shape at every scale (the join-shaped
-    * [[percolateBatchRelational]] measured 108 s vs the fold's ~17 s on the
-    * same 1000x corpus; it survives as the spec-pinned reference).
+    * join shape at every scale (the join-shaped plan measured 108 s vs
+    * the fold's ~17 s on the same 1000x corpus; it survives as the
+    * spec-pinned reference in PercolateSpec).
     */
   def percolateBatch(docs: DataFrame, qCap: Long, frac: Double): DataFrame = {
     val fitted = collectStandingQueries(percolatorFit(docs, qCap))
@@ -138,27 +138,6 @@ object Retrieval {
           .as("a"))
       .select(col("doc_id"), col("a.qid").as("qid"),
         col("a.score").as("score"))
-  }
-
-  /** The join-shaped batch plan (docs explode DISTINCT terms, join the
-    * broadcast fitted table, one partial-aggregated decimal sum per
-    * (doc, query), alert where the mass fraction clears) — kept as the
-    * spec-pinned reference for the fold.
-    */
-  def percolateBatchRelational(docs: DataFrame, qCap: Long,
-                               frac: Double): DataFrame = {
-    val fitted = percolatorFit(docs, qCap)
-    val qtot = fitted.groupBy(col("qid"))
-      .agg(sum(col("idf").cast("decimal(30,6)")).cast("double").as("qtotal"))
-    val toks = graft.functions.Text.tokens(col("text"))
-    docs.where(col("doc_id") >= qCap)
-      .select(col("doc_id"), explode(array_distinct(toks)).as("term"))
-      .join(broadcast(fitted), Seq("term"))
-      .groupBy(col("doc_id"), col("qid"))
-      .agg(sum(col("idf").cast("decimal(30,6)")).cast("double").as("score"))
-      .join(broadcast(qtot), Seq("qid"))
-      .where(col("score") >= lit(frac) * col("qtotal"))
-      .select(col("doc_id"), col("qid"), round(col("score"), 6).as("score"))
   }
 
   /** DuckDB twin of [[winnowFingerprints]] as an expression over a text

@@ -59,13 +59,6 @@ object Sketches {
         Seq(col("exact_distinct"), col("approx_distinct")): _*)
   }
 
-  /** Per-group exact median + approximate percentile side by side. */
-  def medianWithApprox(df: DataFrame, groupCols: Seq[String], target: String,
-                       accuracy: Int = 10000): DataFrame =
-    df.groupBy(groupCols.map(col): _*)
-      .agg(expr(s"percentile($target, 0.5)").as("exact_p50"),
-        percentile_approx(col(target), lit(0.5), lit(accuracy)).as("approx_p50"))
-
   // --- count-min sketch (heavy hitters) ------------------------------------
   // Unlike HLL/KLL above, the CMS is INTEGER state under per-cell addition —
   // order-free and engine-exact, so its heads hash-verify against the

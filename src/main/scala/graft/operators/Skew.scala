@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Skew mitigation (SURVEY.md §5): salting spreads a hot key across
   * `factor` shuffle partitions. AQE's skew-join handles sort-merge skew at
-  * runtime; explicit salting is for the cases AQE can't re-plan — hot-key
-  * hash joins against a replicable side, and holistic aggregations.
+  * runtime; explicit salting is for what AQE can't re-plan — aggregations
+  * over a hot key.
   */
 object Skew {
 
@@ -16,18 +16,6 @@ object Skew {
   def withSalt(df: DataFrame, saltFrom: String, factor: Int,
                to: String = "__salt"): DataFrame =
     df.withColumn(to, pmod(xxhash64(col(saltFrom)), lit(factor.toLong)))
-
-  /** Skew-safe equi-join: the skewed side salts each row; the other side is
-    * replicated once per salt value. The join distributes a hot key over
-    * `factor` partitions at the cost of replicating the (small) other side.
-    */
-  def saltedJoin(skewed: DataFrame, other: DataFrame, keys: Seq[String],
-                 saltFrom: String, factor: Int): DataFrame = {
-    val l = withSalt(skewed, saltFrom, factor)
-    val r = other.withColumn("__salt",
-      explode(sequence(lit(0L), lit(factor - 1L))))
-    l.join(r, keys :+ "__salt").drop("__salt")
-  }
 
   /** Two-phase salted aggregation for algebraic aggregates over skewed keys:
     * phase 1 aggregates per (key, salt), phase 2 merges per key. `partial`

@@ -139,14 +139,16 @@ object Config {
   final case class CorpusDedupFuzzy(threshold: Double,
                                     keep: String = "min_id") extends CorpusStep
   /** Benchmark n-gram decontamination: drop documents sharing any word
-    * n-gram with the benchmark source. `method: exact` (default) is the
-    * n-gram equi-join (Curation.decontaminate — batch only); `method:
-    * bloom` collapses the benchmark into a fixed bitmap probed per row
-    * (Curation.decontaminateBloom — zero corpus shuffle, and the form that
-    * STREAMS: the bitmap builds batch-side at plan build, each arriving doc
-    * probes it at ingest). With `artifact` (bloom only), train-if-missing:
-    * the bitmap persists as JSON — benchmark suites are static, so the
-    * build runs once and later runs hydrate; sizing drift fails loudly.
+    * n-gram with the benchmark source. Both methods are per-row probes
+    * with zero corpus shuffle. `method: exact` (default) probes the
+    * benchmark's distinct n-gram set, which rides the plan as a scalar
+    * subquery (Curation.ngramHits — batch only); `method: bloom` collapses
+    * the benchmark into a fixed bitmap (Curation.decontaminateBloom — the
+    * large-benchmark path, and the form that STREAMS: the bitmap builds
+    * batch-side at plan build, each arriving doc probes it at ingest).
+    * With `artifact` (bloom only), train-if-missing: the bitmap persists
+    * as JSON — benchmark suites are static, so the build runs once and
+    * later runs hydrate; sizing drift fails loudly.
     */
   final case class CorpusDecontaminate(benchmark: String, ngram: Int,
                                        method: String = "exact",

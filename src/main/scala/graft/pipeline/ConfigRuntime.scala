@@ -461,11 +461,12 @@ object ConfigRuntime {
     * Scale posture per step: filter is a pure codegen'd predicate; exact
     * dedup shuffles sha256 digests (never bodies) and keeps min-id; fuzzy
     * dedup is the bucketed minhash + connected-components path
-    * (Dedup.dupClusters — no all-pairs join); decontaminate broadcasts the
-    * benchmark n-grams; chunk is per-row codegen. Corpus-sized shuffles:
-    * the dedup keys, and the join-backs of the snapshotting steps (exact
-    * decontaminate, dedup_fuzzy, dedup_lines, tokenize), which shuffle the
-    * document bodies by id unless AQE broadcasts the kept-id side.
+    * (Dedup.dupClusters — no all-pairs join); decontaminate is a per-row
+    * probe against the benchmark's n-gram set (exact) or bitmap (bloom);
+    * chunk is per-row codegen. Corpus-sized shuffles: the dedup keys, and
+    * the join-backs of the snapshotting steps (dedup_fuzzy, dedup_lines,
+    * tokenize), which shuffle the document bodies by id unless AQE
+    * broadcasts the kept-id side.
     */
   def corpus(spark: SparkSession, dataDir: String,
              project: Config.Project): DataFrame =
@@ -555,14 +556,12 @@ object ConfigRuntime {
           df.filter(graft.operators.Curation
             .bloomFlags(text, bitmap, n, numHashes = BloomHashes) === 0L)
         case Config.CorpusDecontaminate(bench, n, _, _) =>
-          // exact method: same multi-consumer shape as dedup_fuzzy — the
-          // curated frame feeds the n-gram explode, the report spine, and
-          // the join-back — snapshot once
-          val snap = df.localCheckpoint(eager = false)
-          val clean = graft.operators.Curation
-            .decontaminate(snap, res.sourceFrame(bench), c.idCol, c.textCol, n)
-            .where(!col("contaminated")).select(col(c.idCol))
-          snap.join(clean, Seq(c.idCol))
+          // exact method: a per-row probe against the benchmark's distinct
+          // n-gram set (a scalar subquery, run with the plan) — no
+          // snapshot, no join, no corpus exchange; each row is judged on
+          // its own text
+          df.filter(coalesce(graft.operators.Curation.ngramHits(text,
+            res.sourceFrame(bench), c.textCol, n), lit(0L)) === 0L)
         case Config.CorpusChunk(size, stride) =>
           graft.operators.Curation.chunkDocuments(df, c.idCol, c.textCol,
             size, stride)

@@ -127,7 +127,10 @@ class AssemblySpec extends SparkSpec {
         assert(math.abs(approx - exact) / exact < 0.15,
           s"${r.getString(0)}: exact=$exact approx=$approx")
       }
-    Sketches.medianWithApprox(e, Seq("event_type"), "value")
+    // per-group exact median beside the approximate percentile
+    e.groupBy(col("event_type"))
+      .agg(expr("percentile(value, 0.5)").as("exact_p50"),
+        percentile_approx(col("value"), lit(0.5), lit(10000)).as("approx_p50"))
       .collect().foreach { r =>
         val exact = r.getDouble(1)
         val approx = r.getDouble(2)

@@ -148,6 +148,21 @@ class ConfigPreviewSpec extends SparkSpec {
     assert(f.getMessage.contains("takes a step count"))
   }
 
+  /** An exact 3-gram `decontaminate` of `documents.parquet` against
+    * `bench.parquet`.
+    */
+  private lazy val exactDecontam = Config.parseProject(
+    """sources:
+      |  - id: docs
+      |    loader: { transport: fs, path: documents.parquet, reader: { format: parquet } }
+      |  - id: bench
+      |    loader: { transport: fs, path: bench.parquet, reader: { format: parquet } }
+      |corpus:
+      |  source: docs
+      |  steps:
+      |    - { step: decontaminate, benchmark: bench, ngram: 3 }
+      |""".stripMargin)
+
   test("corpus decontaminate step = Curation.decontaminate's keep set") {
     import spark.implicits._
     // the one corpus step with a second source: a fixture dataDir carries
@@ -165,19 +180,7 @@ class ConfigPreviewSpec extends SparkSpec {
     Seq((100L, "alpha beta gamma delta epsilon"))
       .toDF("doc_id", "text")
       .write.parquet(dir.resolve("bench.parquet").toString)
-    val doc =
-      """sources:
-        |  - id: docs
-        |    loader: { transport: fs, path: documents.parquet, reader: { format: parquet } }
-        |  - id: bench
-        |    loader: { transport: fs, path: bench.parquet, reader: { format: parquet } }
-        |corpus:
-        |  source: docs
-        |  steps:
-        |    - { step: decontaminate, benchmark: bench, ngram: 3 }
-        |""".stripMargin
-    val p = Config.parseProject(doc)
-    val out = ConfigRuntime.corpus(spark, dir.toString, p)
+    val out = ConfigRuntime.corpus(spark, dir.toString, exactDecontam)
     val docs = spark.read.parquet(dir.resolve("documents.parquet").toString)
     val bench = spark.read.parquet(dir.resolve("bench.parquet").toString)
     val keep = graft.operators.Curation
@@ -188,6 +191,55 @@ class ConfigPreviewSpec extends SparkSpec {
     assert(rowSet(out) == rowSet(expected))
     // the gate bites exactly the docs sharing a 3-gram with the benchmark
     assert(out.select("doc_id").collect().map(_.getLong(0)).toSet == Set(2L, 4L))
+  }
+
+  test("corpus exact decontaminate judges each row on its own text, serves it once") {
+    import spark.implicits._
+    // a source that repeats an id: one copy of id 1 shares a 3-gram with
+    // the benchmark, the other does not; id 2 repeats with clean texts
+    val dir = Files.createTempDirectory("graft_corpus_decontam_dup")
+    val rows = Seq(
+      (1L, "alpha beta gamma irrelevant tail words here"),
+      (1L, "a clean copy under the same id"),
+      (2L, "completely unrelated text with other content"),
+      (2L, "another clean document nothing shared at all"),
+      (3L, "prefix words then gamma delta epsilon inside"))
+    rows.toDF("doc_id", "text")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    Seq((100L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+      .write.parquet(dir.resolve("bench.parquet").toString)
+    val out = ConfigRuntime.corpus(spark, dir.toString, exactDecontam)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    assert(out == Seq(rows(1), rows(2), rows(3)).sorted)
+  }
+
+  test("corpus exact decontaminate plans no join and no exchange on the corpus id") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_corpus_decontam_plan")
+    (1L to 40L).map(i => (i, s"doc $i words alpha beta gamma ${i % 3} tail"))
+      .toDF("doc_id", "text").repartition(4)
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    Seq((100L, "beta gamma 1 tail")).toDF("doc_id", "text")
+      .write.parquet(dir.resolve("bench.parquet").toString)
+    val (kept, plans) = SqlExecutions.recorded(spark) {
+      ConfigRuntime.corpus(spark, dir.toString, exactDecontam)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
+    }
+    assert(kept == (1L to 40L).filter(_ % 3 != 1).toSet)
+    assert(plans.nonEmpty && plans.forall(p => SqlExecutions.joins(p).isEmpty),
+      plans.flatMap(SqlExecutions.joins))
+    // the only exchange is the benchmark set's global aggregate
+    val keys = plans.flatMap(SqlExecutions.shuffleKeys)
+    assert(keys.nonEmpty && keys.forall(_ == Seq("SinglePartition$")), keys)
+    // the recorder sees the id-keyed exchange and the join of the
+    // relational twin
+    val docs = spark.read.parquet(dir.resolve("documents.parquet").toString)
+    val bench = spark.read.parquet(dir.resolve("bench.parquet").toString)
+    val (_, twin) = SqlExecutions.recorded(spark) {
+      CurationTwin.decontaminate(docs, bench, "doc_id", "text", 3).collect()
+    }
+    assert(twin.flatMap(SqlExecutions.shuffleKeys).contains(Seq("doc_id")))
+    assert(twin.flatMap(SqlExecutions.joins).nonEmpty)
   }
 
   test("corpus dedup_incremental step drops re-crawls against the persisted index") {

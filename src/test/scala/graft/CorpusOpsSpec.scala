@@ -11,6 +11,23 @@ import graft.operators.{Dedup, Importance, Sharding, Similarity}
 class CorpusOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The DSIR score as a built-in higher-order fold — the interpreted
+    * reference DsirFold is pinned against. ArrayAggregate is
+    * CodegenFallback and walks an interpreted tree per token.
+    */
+  private def dsirScoreExprHof(text: org.apache.spark.sql.Column,
+                               lr: Array[Double]) = {
+    val buckets = lr.length
+    val lrArr = array(lr.map(lit(_)): _*)
+    val toks = Text.tokens(text)
+    // re-cast after each add: decimal addition widens the type and the fold
+    // accumulator must stay decimal(30,6)
+    val dec = aggregate(toks, lit(0).cast("decimal(30,6)"),
+      (acc, t) => (acc + element_at(lrArr, Importance.bucket(t, buckets) + 1)
+        .cast("decimal(30,6)")).cast("decimal(30,6)"))
+    round(dec.cast("double") / size(toks), 6)
+  }
+
   // --- segmentDedup -------------------------------------------------------
 
   test("segmentDedup flags shared token blocks and reports fractions") {
@@ -75,7 +92,7 @@ class CorpusOpsSpec extends SparkSpec {
     val lr = Array.tabulate(32)(b => math.round((b - 16) * 0.017 * 1e6) / 1e6)
     val both = docs.select(col("doc_id"),
       Importance.dsirScoreExpr(col("text"), lr).as("fast"),
-      Importance.dsirScoreExprHof(col("text"), lr).as("ref"))
+      dsirScoreExprHof(col("text"), lr).as("ref"))
       .collect()
     both.foreach(r => assert(r.getDouble(1) == r.getDouble(2),
       s"doc ${r.getLong(0)}: fast ${r.getDouble(1)} != ref ${r.getDouble(2)}"))

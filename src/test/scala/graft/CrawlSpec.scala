@@ -10,6 +10,13 @@ import graft.operators.Crawl
 class CrawlSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The HOF formulation of the kept-lines join — the reference
+    * functions/LineRebuild is property-pinned against.
+    */
+  private def rebuildLinesHof(lines: org.apache.spark.sql.Column,
+                              drop: org.apache.spark.sql.Column) =
+    array_join(filter(lines, (l, i) => !array_contains(drop, i)), "\n")
+
   // --- htmlText / htmlTitle -----------------------------------------------
 
   test("htmlText strips script/style/comments, decodes entities, keeps prose") {
@@ -170,7 +177,7 @@ class CrawlSpec extends SparkSpec {
           org.apache.spark.sql.GraftColumnBridge.expression(col("lines")),
           org.apache.spark.sql.GraftColumnBridge.expression(col("drop"))))
         .as("native"),
-      Crawl.rebuildLinesHof(col("lines"), col("drop")).as("ref"))
+      rebuildLinesHof(col("lines"), col("drop")).as("ref"))
       .collect()
     out.foreach { r =>
       assert(r.getString(1) == r.getString(2),

@@ -39,6 +39,47 @@ class CurationSpec extends SparkSpec {
     assert(out == Map(1L -> false, 2L -> false, 3L -> true))
   }
 
+  test("kernel decontaminate equals the relational twin row for row") {
+    val train = Seq[(Long, Option[String])](
+      (1L, None),
+      (2L, Some("")),
+      (3L, Some("  leading space then the quick brown fox jumps over it")),
+      (4L, Some("too short")),
+      (5L, Some("straße naïve café über 東京 タワー the quick brown fox jumps over the lazy dog")),
+      (6L, Some("The QUICK Brown FOX jumps OVER the LAZY dog again today")),
+      (7L, Some("over the lazy over the lazy over the lazy over the lazy")),
+      (8L, Some("nothing in common with anything at all here folks")),
+      (9L, Some("\tStraße naïve café über 東京 タワー"))
+    ).toDF("doc_id", "text")
+    val bench = Seq[(Long, Option[String])](
+      (100L, Some("the quick brown fox jumps over the lazy dog")),
+      (101L, None),
+      (102L, Some(" straße naïve café über 東京 タワー and more words")),
+      (103L, Some("over the lazy"))
+    ).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
+    val benches = Seq("bench" -> bench, "empty" -> bench.limit(0),
+      "null text" -> bench.where(col("text").isNull))
+    val counts = (for ((name, b) <- benches; n <- Seq(1, 3, 8)) yield {
+      val got = rows(Curation.decontaminate(train, b, "doc_id", "text", n))
+      assert(got == rows(CurationTwin.decontaminate(train, b, "doc_id", "text", n)),
+        s"$name, n=$n")
+      assert(got.map(_._1) == (1L to 9L), s"$name, n=$n: one row per doc")
+      (name, n) -> got.map(r => r._1 -> r._2).toMap
+    }).toMap
+    // the fixture bites where each case says it does
+    for (n <- Seq(1, 3, 8); name <- Seq("empty", "null text"))
+      assert(counts((name, n)).values.forall(_ == 0L), s"$name, n=$n")
+    val at3 = counts(("bench", 3))
+    assert(at3(1L) == 0L && at3(2L) == 0L && at3(4L) == 0L)
+    assert(at3(7L) == 1L, "a repeated n-gram counts once")
+    assert(at3(6L) == 7L, "mixed case matches lowercased")
+    assert(at3(9L) == 5L, "whitespace-led and non-ASCII n-grams match")
+    assert(counts(("bench", 1))(2L) == 1L, "the empty token matches at n = 1")
+    assert(counts(("bench", 8))(6L) == 2L && counts(("bench", 8))(5L) == 2L)
+  }
+
   test("decontaminateFuzzy flags near-duplicates of benchmark docs, keeps clean ones") {
     // doc 1 is a light edit of the benchmark doc (one word changed at the
     // end: high Jaccard over 3-shingles); doc 2 shares a few shingles but
@@ -145,7 +186,7 @@ class CurationSpec extends SparkSpec {
     val out = docs.select(
       call_function("bloom_ngram_hits",
         Text.tokens(col("text")), bitmapLit, lit(3), lit(2)).as("fast"),
-      Curation.bloomHitsHof(Text.tokens(col("text")), bitmapLit, 3,
+      CurationTwin.bloomHitsHof(Text.tokens(col("text")), bitmapLit, 3,
         mBits, 2).as("slow"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     out.foreach { case (fast, slow) => assert(fast == slow, out.toSeq) }

@@ -267,7 +267,12 @@ class OrderedSpec extends SparkSpec {
       .toDF("k", "row_id", "v")
     val dim = Seq((1L, "a"), (2L, "b")).toDF("k", "name")
     val plain = big.join(dim, Seq("k")).orderBy("row_id")
-    val salted = Skew.saltedJoin(big, dim, Seq("k"), "row_id", 4).orderBy("row_id")
+    // salted join: the skewed side salts each row, the other side
+    // replicates once per salt value
+    val salted = Skew.withSalt(big, "row_id", 4)
+      .join(dim.withColumn("__salt", explode(sequence(lit(0L), lit(3L)))),
+        Seq("k", "__salt"))
+      .drop("__salt").orderBy("row_id")
     assert(rows(salted.select("k", "row_id", "v", "name")) ==
       rows(plain.select("k", "row_id", "v", "name")))
     val agg = Skew.saltedAgg(big, Seq("k"), "row_id", 4, "v",

@@ -10,6 +10,27 @@ class PercolateSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The join-shaped batch plan (docs explode DISTINCT terms, join the
+    * broadcast fitted table, one partial-aggregated decimal sum per
+    * (doc, query), alert where the mass fraction clears) — the reference
+    * the fold of Retrieval.percolateBatch is pinned against.
+    */
+  private def percolateBatchRelational(docs: org.apache.spark.sql.DataFrame,
+                                       qCap: Long, frac: Double) = {
+    val fitted = Retrieval.percolatorFit(docs, qCap)
+    val qtot = fitted.groupBy(col("qid"))
+      .agg(sum(col("idf").cast("decimal(30,6)")).cast("double").as("qtotal"))
+    val toks = graft.functions.Text.tokens(col("text"))
+    docs.where(col("doc_id") >= qCap)
+      .select(col("doc_id"), explode(array_distinct(toks)).as("term"))
+      .join(broadcast(fitted), Seq("term"))
+      .groupBy(col("doc_id"), col("qid"))
+      .agg(sum(col("idf").cast("decimal(30,6)")).cast("double").as("score"))
+      .join(broadcast(qtot), Seq("qid"))
+      .where(col("score") >= lit(frac) * col("qtotal"))
+      .select(col("doc_id"), col("qid"), round(col("score"), 6).as("score"))
+  }
+
   test("percolatorFit: weights are positive and per-query terms distinct") {
     val fit = Retrieval.percolatorFit(
       graft.sources.Tables.documents(spark, sf), 20L).collect()
@@ -23,7 +44,7 @@ class PercolateSpec extends SparkSpec {
     val docs = graft.sources.Tables.documents(spark, sf)
     val fold = Retrieval.percolateBatch(docs, 20L, 0.875)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val relational = Retrieval.percolateBatchRelational(docs, 20L, 0.875)
+    val relational = percolateBatchRelational(docs, 20L, 0.875)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(fold == relational,
       s"fold diverged from the join plan: ${fold.size} vs ${relational.size}")

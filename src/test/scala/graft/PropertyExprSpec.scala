@@ -7,7 +7,8 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{BloomNgramHits, ClsFeatures, ClsProbFold, DsirFold, ShingleArray}
+import graft.functions.{BloomNgramHits, ClsFeatures, ClsProbFold, DsirFold, NgramSetHits,
+  ShingleArray}
 
 /** Property-based cross-checks for the native codegen'd expressions'
   * `compute` cores — each checked against an INDEPENDENT reference
@@ -101,6 +102,25 @@ class PropertyExprSpec extends AnyFunSuite {
       // naive `got*1e6 == rint(got*1e6)` check false-fails on doubles like
       // 0.500002 whose *1e6 lands a few ulps off the integer
       got == pMicros.toDouble / 1e6 && got >= 0.0 && got <= 1.0
+    })
+  }
+
+  test("NgramSetHits == distinct sliding n-grams found in the set") {
+    // one instance per n across every case: its hash set is cached per set
+    // array, so each new set must be probed afresh
+    val kernels = (1 to 3).map(n => n -> NgramSetHits(null, null, n)).toMap
+    def grams(ts: Seq[String], n: Int) =
+      if (ts.length < n) Seq.empty[String]
+      else ts.sliding(n).map(_.mkString(" ")).toSeq
+    val gen = for {
+      ts <- tokens
+      n <- Gen.chooseNum(1, 3)
+      other <- tokens
+      picked <- Gen.someOf(grams(ts, n))
+    } yield (ts, n, grams(other, n) ++ picked)
+    check(Prop.forAll(gen) { case (ts, n, set) =>
+      kernels(n).compute(arr(ts), arr(set)) ==
+        grams(ts, n).distinct.count(set.contains).toLong
     })
   }
 

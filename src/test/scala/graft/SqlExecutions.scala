@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Records the physical plan of every SQL execution `body` runs, for specs
@@ -32,11 +33,11 @@ object SqlExecutions extends AdaptiveSparkPlanHelper {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  /** Every shuffle exchange of `plan`: its hash keys by name, or the
-    * partitioning's name when it is not hash partitioned.
+  /** Every shuffle exchange of `plan`, subqueries included: its hash keys
+    * by name, or the partitioning's name when it is not hash partitioned.
     */
   def shuffleKeys(plan: SparkPlan): Seq[Seq[String]] =
-    collect(plan) { case s: ShuffleExchangeExec =>
+    collectWithSubqueries(plan) { case s: ShuffleExchangeExec =>
       s.outputPartitioning match {
         case h: HashPartitioning => h.expressions.map {
           case a: Attribute => a.name
@@ -45,4 +46,8 @@ object SqlExecutions extends AdaptiveSparkPlanHelper {
         case p => Seq(p.getClass.getSimpleName)
       }
     }
+
+  /** Every join operator of `plan`, subqueries included, by node name. */
+  def joins(plan: SparkPlan): Seq[String] =
+    collectWithSubqueries(plan) { case j: BaseJoinExec => j.nodeName }
 }
