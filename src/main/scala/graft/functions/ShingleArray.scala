@@ -21,9 +21,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * entirely interpreted window construction. This expression builds the
   * windows in a tight loop at scan speed.
   *
-  * Semantics are exactly [[Text.shinglesHof]]: windows start at every
-  * position (size − n + 1 of them), tokens join with single spaces, fewer
-  * than n tokens → an EMPTY array (not null).
+  * Semantics are exactly the higher-order twin the specs pin it against
+  * (`CurationTwin.shinglesHof`): windows start at every position
+  * (size − n + 1 of them), tokens join with single spaces, fewer than n
+  * tokens → an EMPTY array (not null).
   */
 case class ShingleArray(child: Expression, n: Int)
   extends UnaryExpression {

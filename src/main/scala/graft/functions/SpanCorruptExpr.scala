@@ -10,9 +10,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd T5-style span corruption: the whole (inputs, targets) example
   * build for one document in ONE pass over its token array — the native
-  * twin of the `Curation.spanCorrupt` HOF chain (kept as
-  * [[graft.operators.Curation.spanCorruptHof]], the executable spec;
-  * CurationSpec property-pins row equality).
+  * twin of the `Curation.spanCorrupt` HOF chain (kept in the specs as
+  * `CurationTwin.spanCorruptHof`, the executable spec; MiningSpec pins
+  * row equality).
   *
   * The HOF chain paid three interpreted sha-ratio draws per 8-token block
   * through the hex/`conv` string path, plus an `aggregate` fold whose

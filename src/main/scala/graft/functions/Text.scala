@@ -107,6 +107,15 @@ object Text {
       lit(0L),
       (acc, i) => (acc * 31 + ascii(call_function("substr", text, i, lit(1)))) % 1000000007L)
 
+  /** SHA-256 content digest of a text: the "t:"-prefixed text, or the
+    * "null:" sentinel for a NULL text (which no real text's digest can
+    * equal, so NULL texts compare as one value instead of dropping out of
+    * a null-unsafe join). The one digest scheme of exact dedup, the crawl
+    * diff and the persisted dedup index.
+    */
+  def textDigest(text: Column): Column =
+    sha2(coalesce(concat(lit("t:"), text.cast("string")), lit("null:")), 256)
+
   /** Lowercased whitespace tokens. */
   def tokens(text: Column): Column = split(lower(text), "\\s+")
 
@@ -164,25 +173,13 @@ object Text {
   /** Word n-gram shingles (space-joined) from a token array. Documents with
     * fewer than n tokens yield an empty array. Codegen'd
     * (functions/ShingleArray — one tight loop per row; the interpreted
-    * higher-order formulation it replaced is kept below as the spec-proven
-    * reference).
+    * higher-order formulation it replaced is the spec-side reference).
     */
   def shingles(toks: Column, n: Int): Column = {
     graft.functions.ShingleArray.register(
       org.apache.spark.sql.SparkSession.active)
     call_function("shingle_array", toks, lit(n))
   }
-
-  /** The same shingling as built-in higher-order functions — the
-    * interpreted reference ShingleArray is spec-proven against (the
-    * DsirFold discipline). The size guard matters: without it,
-    * sequence(1, 0) descends to [1, 0] and element_at(toks, 0) throws.
-    */
-  private[graft] def shinglesHof(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(k => element_at(toks, i + k)): _*)))
-      .otherwise(array().cast("array<string>"))
 
   /** Jaccard similarity of the distinct-shingle sets of two arrays. */
   def jaccard(a: Column, b: Column): Column = {

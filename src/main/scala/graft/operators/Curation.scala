@@ -455,8 +455,8 @@ object Curation {
     *
     * Native codegen'd build (functions/SpanCorruptExpr — digest-byte
     * ratio draws + one linear walk per row); the interpreted HOF chain it
-    * replaced stays below as [[spanCorruptHof]], the executable spec
-    * CurationSpec property-pins equality against.
+    * replaced is `CurationTwin.spanCorruptHof` in the specs, the
+    * executable spec MiningSpec pins equality against.
     */
   def spanCorrupt(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val expr = graft.functions.SpanCorruptExpr(
@@ -473,57 +473,6 @@ object Curation {
         col("__sc.n_corrupted").as("n_corrupted"),
         col("__sc.inputs").as("inputs"),
         col("__sc.targets").as("targets"))
-  }
-
-  /** The higher-order-function form of [[spanCorrupt]] — an aggregate fold
-    * splices sentinel tokens into the input, a two-arg transform numbers
-    * the target spans. The executable spec; not on the hot path.
-    */
-  private[graft] def spanCorruptHof(docs: DataFrame, idCol: String,
-                                    textCol: String): DataFrame = {
-    val w = col("w")
-    val n = size(w).cast("long")
-    val blocks = sequence(lit(0L),
-      ceil(n.cast("double") / SpanBlock).cast("long") - 1)
-    def ratio(b: Column, seed: Int) = hashRatio(
-      concat(col(idCol).cast("string"), lit(":"), b.cast("string")), seed)
-    val spans = filter(
-      transform(blocks, b => {
-        val start = b * SpanBlock +
-          floor(ratio(b, SpanOffSeed) * (SpanBlock - 2)).cast("long")
-        val len0 = floor(ratio(b, SpanLenSeed) * 2).cast("long") + 1
-        when(ratio(b, SpanGateSeed) < 0.5 && start < n,
-          struct(start.as("start"),
-            least(len0, n - start).as("len"))).otherwise(lit(null))
-      }), sp => sp.isNotNull)
-    def sentinel(i: Column) = concat(lit("<X"), i.cast("string"), lit(">"))
-    val inputsArr = {
-      val acc0 = struct(
-        slice(w, 1, 0).as("arr"), lit(0L).as("pos"), lit(0L).as("idx"))
-      aggregate(spans, acc0,
-        (acc, sp) => struct(
-          concat(acc.getField("arr"),
-            slice(w, (acc.getField("pos") + 1).cast("int"),
-              (sp.getField("start") - acc.getField("pos")).cast("int")),
-            array(sentinel(acc.getField("idx")))).as("arr"),
-          (sp.getField("start") + sp.getField("len")).as("pos"),
-          (acc.getField("idx") + 1).as("idx")),
-        acc => concat(acc.getField("arr"),
-          slice(w, (acc.getField("pos") + 1).cast("int"),
-            (n - acc.getField("pos")).cast("int"))))
-    }
-    val targetsArr = flatten(transform(spans, (sp, i) =>
-      concat(array(sentinel(i.cast("long"))),
-        slice(w, (sp.getField("start") + 1).cast("int"),
-          sp.getField("len").cast("int")))))
-    docs
-      .select(col(idCol), Text.tokens(col(textCol)).as("w"))
-      .select(col(idCol), n.as("n_tokens"),
-        size(spans).cast("long").as("n_spans"),
-        aggregate(spans, lit(0L),
-          (a, sp) => a + sp.getField("len")).as("n_corrupted"),
-        array_join(inputsArr, " ").as("inputs"),
-        array_join(targetsArr, " ").as("targets"))
   }
 
   /** [[assign]] against pre-fitted centroid literals — the routing half of

@@ -155,12 +155,11 @@ object IncrementalDedup {
         gens.map(g => dir(indexDir, kind, g).toString): _*))
     }
 
-    // digest + shingleability once per doc ("t:"-prefix/null-sentinel — the
-    // corpus journey's digest scheme); the frame feeds the rep join, the
-    // member map and the new-rep signature build
+    // digest (the corpus journey's) + shingleability once per doc; the
+    // frame feeds the rep join, the member map and the new-rep signature
+    // build
     val inc = increment.select(col(idCol), col(textCol),
-      sha2(coalesce(concat(lit("t:"), col(textCol).cast("string")),
-        lit("null:")), 256).as("__d"),
+      Text.textDigest(col(textCol)).as("__d"),
       (size(Text.tokens(col(textCol))) >= params.shingleSize).as("__ok"))
       .localCheckpoint(eager = false)
 

@@ -140,12 +140,11 @@ object Config {
                                     keep: String = "min_id") extends CorpusStep
   /** Benchmark n-gram decontamination: drop documents sharing any word
     * n-gram with the benchmark source. Both methods are per-row probes
-    * with zero corpus shuffle. `method: exact` (default) probes the
-    * benchmark's distinct n-gram set, which rides the plan as a scalar
-    * subquery (Curation.ngramHits — batch only); `method: bloom` collapses
-    * the benchmark into a fixed bitmap (Curation.decontaminateBloom — the
-    * large-benchmark path, and the form that STREAMS: the bitmap builds
-    * batch-side at plan build, each arriving doc probes it at ingest).
+    * with zero corpus shuffle, and both stream. `method: exact` (default)
+    * probes the benchmark's distinct n-gram set, which rides the plan as a
+    * scalar subquery (Curation.ngramHits); `method: bloom` collapses the
+    * benchmark into a fixed bitmap at plan build
+    * (Curation.decontaminateBloom — the large-benchmark path).
     * With `artifact` (bloom only), train-if-missing: the bitmap persists
     * as JSON — benchmark suites are static, so the build runs once and
     * later runs hydrate; sizing drift fails loudly.
@@ -952,7 +951,7 @@ object Config {
           fail(s"$ctx.method must be 'exact' or 'bloom', got '$method'")
         val art = strOpt(t, "artifact")
         if (art.isDefined && method != "bloom")
-          fail(s"$ctx.artifact requires method: bloom (the exact join has no bitmap to persist)")
+          fail(s"$ctx.artifact requires method: bloom (the exact method has no bitmap to persist)")
         CorpusDecontaminate(str(t, "benchmark", ctx), n, method, art)
       case "chunk" =>
         check("size", "stride")

@@ -465,8 +465,8 @@ object ConfigRuntime {
     * probe against the benchmark's n-gram set (exact) or bitmap (bloom);
     * chunk is per-row codegen. Corpus-sized shuffles: the dedup keys, and
     * the join-backs of the snapshotting steps (dedup_fuzzy, dedup_lines,
-    * tokenize), which shuffle the document bodies by id unless AQE
-    * broadcasts the kept-id side.
+    * tokenize), which shuffle the document bodies by key unless AQE
+    * broadcasts the kept side.
     */
   def corpus(spark: SparkSession, dataDir: String,
              project: Config.Project): DataFrame =
@@ -478,7 +478,6 @@ object ConfigRuntime {
   def corpusThrough(spark: SparkSession, dataDir: String,
                     project: Config.Project,
                     through: Option[Int]): DataFrame = {
-    import graft.functions.Text
     val c = project.corpus.getOrElse(throw new IllegalArgumentException(
       "config: project has neither a dataset nor a corpus section to materialize"))
     through.foreach { k =>
@@ -486,14 +485,117 @@ object ConfigRuntime {
         s"config: corpus has ${c.steps.length} steps; cannot preview step $k")
     }
     val res = resolver(spark, dataDir, project)
+    corpusFold(spark, dataDir, project, c, res, res.sourceFrame(c.source),
+      through.fold(c.steps)(c.steps.take), watermark = None)
+  }
+
+  /** The `corpus:` journey as a STREAMING plan over an fs parquet source:
+    * the batch journey's step table ([[corpusFold]]) applied to each
+    * document as it arrives. Per-row steps stream unchanged; the model
+    * steps (select, classify, mix, tokenize) stream under an
+    * already-trained artifact, hydrated at plan build (training needs the
+    * batch journey); `dedup_exact` becomes a watermarked digest
+    * `dropDuplicates` (state holds digests only and is evicted past the
+    * watermark horizon — the property that makes it deployable on an
+    * infinite crawl; a finite AvailableNow run evicts nothing, so the
+    * result is the exact distinct set). The five corpus-at-rest steps
+    * (dedup_fuzzy, dedup_incremental, dedup_lines, budget, shard) are
+    * rejected by name — run the batch journey for those.
+    *
+    * Streaming keeps FIRST-ARRIVAL per digest where batch keeps min-id, so
+    * downstream consumers get one representative per distinct text with
+    * arrival-dependent identity — selecting digest-deterministic columns
+    * (the digest, the text) is the caller's contract for exact equality
+    * with the batch prefix.
+    */
+  def corpusStream(spark: SparkSession, dataDir: String,
+                   project: Config.Project,
+                   watermark: String = "10 minutes"): DataFrame = {
+    val c = project.corpus.getOrElse(throw new IllegalArgumentException(
+      "config: project has no corpus section to stream"))
+    val src = project.source(c.source)
+    require(src.transport == "fs" && src.format == "parquet",
+      s"config: corpus streaming needs an fs parquet source, " +
+        s"got ${src.transport}/${src.format}")
+    val path = if (src.path.startsWith("/")) src.path
+               else s"$dataDir/${src.path}"
+    corpusFold(spark, dataDir, project, c, resolver(spark, dataDir, project),
+      graft.streaming.Streaming.readParquetStream(spark, path), c.steps,
+      Some(watermark))
+  }
+
+  /** The config name of a step that needs the corpus at rest (a whole-
+    * corpus pass: clustering, an index update, line frequencies, running
+    * token totals) — the steps a stream rejects.
+    */
+  private def atRestStep(step: Config.CorpusStep): Option[String] =
+    step match {
+      case _: Config.CorpusDedupFuzzy       => Some("dedup_fuzzy")
+      case _: Config.CorpusDedupIncremental => Some("dedup_incremental")
+      case _: Config.CorpusDedupLines       => Some("dedup_lines")
+      case _: Config.CorpusBudget           => Some("budget")
+      case _: Config.CorpusShard            => Some("shard")
+      case _                                => None
+    }
+
+  /** The corpus step table: ONE fold of `steps` over `source` for both
+    * journeys — the corpus at rest (`watermark` None) and an arriving
+    * stream (Some(delay)). The two differ only where the meaning does:
+    *  - `dedup_exact` keeps the min id at rest and the first arrival under
+    *    the watermark on a stream;
+    *  - `tokenize` applies through the vocabulary join at rest (amortised
+    *    over distinct words) and through the per-row kernel on a stream;
+    *  - a model step (select, classify, mix, tokenize) trains a missing
+    *    artifact at rest; a stream needs it trained;
+    *  - the [[atRestStep]]s are rejected on a stream by name.
+    */
+  private def corpusFold(spark: SparkSession, dataDir: String,
+                         project: Config.Project, c: Config.CorpusDef,
+                         res: Resolver, source: DataFrame,
+                         steps: Seq[Config.CorpusStep],
+                         watermark: Option[String]): DataFrame = {
+    import java.nio.file.Files
+    import graft.functions.Text
+    import graft.operators.{Bpe, Classifier, Curation, Importance, WordPiece}
+    val streaming = watermark.isDefined
     val id = col(c.idCol)
     val text = col(c.textCol)
-    val steps = through.fold(c.steps)(c.steps.take)
+    // a model step's input feeds the fit AND the gate: snapshot it at rest
+    def snapshot(df: DataFrame): DataFrame =
+      if (streaming) df else df.localCheckpoint(eager = false)
+    // a stream only hydrates model state the batch journey trained
+    def requireTrained(step: String, trained: String,
+                       path: java.nio.file.Path): Unit =
+      require(!streaming || Files.exists(path), s"config: streaming $step " +
+        s"needs $trained at '$path' — run the batch corpus journey " +
+        "(train-if-missing) first")
+    // a model step's fitted state. At rest: fit it, or train-if-missing
+    // under `artifact` and apply the HYDRATED copy, so the save/load path
+    // is always the one exercised.
+    def model[M](step: String, trained: String, artifact: Option[String])(
+        fit: => M, save: (String, M) => Unit, load: String => M): M =
+      artifact match {
+        case Some(a) =>
+          val path = resolvePath(dataDir, a)
+          requireTrained(step, trained, path)
+          if (!Files.exists(path)) save(path.toString, fit)
+          load(path.toString)
+        case None =>
+          if (streaming) throw new IllegalArgumentException(
+            s"config: streaming $step needs an 'artifact' — fitting is a " +
+              "corpus-at-rest pass")
+          fit
+      }
     // every text is distinct: a dedup_exact ran and no later step rewrote
     // the text column or added rows — the near-dup clustering then skips
     // its duplication probe
     var textsDistinct = false
-    steps.foldLeft(res.sourceFrame(c.source)) { (df, step) =>
+    steps.foldLeft(source) { (df, step) =>
+      if (streaming) atRestStep(step).foreach { name =>
+        throw new IllegalArgumentException(
+          s"config: corpus step '$name' is not streamable (needs a " +
+            "corpus-at-rest pass); run the batch corpus journey instead")
+      }
       textsDistinct = step match {
         case Config.CorpusDedupExact() => true
         case _: Config.CorpusFilter | _: Config.CorpusGopher |
@@ -505,22 +607,34 @@ object ConfigRuntime {
       }
       step match {
         case f: Config.CorpusFilter =>
-          df.filter(corpusFilterCond(text, f))
-        case Config.CorpusDedupExact() =>
-          // keep the smallest id per identical text; the shuffle key is the
-          // text DIGEST, so long bodies never cross the wire twice. NULL
-          // texts dedup as their own group (the "null:" sentinel cannot
-          // collide with a real text's "t:"-prefixed digest) — a null-unsafe
-          // join key would silently drop every null-text document instead
-          // of keeping one. Checkpoint: the digest frame feeds both the
-          // keeper aggregate and the join-back.
-          val hashed = df.withColumn("__h",
-            sha2(coalesce(concat(lit("t:"), text.cast("string")),
-              lit("null:")), 256))
-            .localCheckpoint(eager = false)
-          val keepers = hashed.groupBy(col("__h"))
-            .agg(min(id).as(c.idCol))
-          hashed.join(keepers, Seq("__h", c.idCol)).drop("__h")
+          // quality gate: any subset of language / quality floor /
+          // repetition ceiling, one codegen'd predicate
+          df.filter(Seq(
+            f.lang.map(l => Text.langId(text) === l),
+            f.minQuality.map(q => Text.qualityScore(text) >= q),
+            f.maxRepetition.map(r => Text.repetitionRatio(text) <= r))
+            .flatten.reduce(_ && _))
+        case Config.CorpusDedupExact() => watermark match {
+          case Some(delay) =>
+            // first arrival per digest: each arriving doc hashes once and
+            // the state holds digests only, evicted past the watermark
+            df.withColumn("__ingest", current_timestamp())
+              .withWatermark("__ingest", delay)
+              .withColumn("__h", Text.textDigest(text))
+              .dropDuplicates("__h")
+              .drop("__h", "__ingest")
+          case None =>
+            // keep the smallest id per identical text; the shuffle key is
+            // the text DIGEST, so long bodies never cross the wire twice,
+            // and NULL texts dedup as their own group. Checkpoint: the
+            // digest frame feeds both the keeper aggregate and the
+            // join-back.
+            val hashed = df.withColumn("__h", Text.textDigest(text))
+              .localCheckpoint(eager = false)
+            val keepers = hashed.groupBy(col("__h"))
+              .agg(min(id).as(c.idCol))
+            hashed.join(keepers, Seq("__h", c.idCol)).drop("__h")
+        }
         case Config.CorpusDedupFuzzy(threshold, keep) =>
           // snapshot the curated-so-far frame ONCE: the clustering consumes
           // it several times (duplication probe, signature build, CC
@@ -553,28 +667,27 @@ object ConfigRuntime {
           // later runs hydrate without touching the benchmark
           val bitmap = bloomBitmapFor(spark, dataDir, project, bench,
             c.textCol, n, artifact)
-          df.filter(graft.operators.Curation
+          df.filter(Curation
             .bloomFlags(text, bitmap, n, numHashes = BloomHashes) === 0L)
         case Config.CorpusDecontaminate(bench, n, _, _) =>
           // exact method: a per-row probe against the benchmark's distinct
-          // n-gram set (a scalar subquery, run with the plan) — no
-          // snapshot, no join, no corpus exchange; each row is judged on
-          // its own text
-          df.filter(coalesce(graft.operators.Curation.ngramHits(text,
+          // n-gram set (a scalar subquery, run with the plan — re-planned
+          // per micro-batch on a stream) — no snapshot, no join, no corpus
+          // exchange; each row is judged on its own text
+          df.filter(coalesce(Curation.ngramHits(text,
             res.sourceFrame(bench), c.textCol, n), lit(0L)) === 0L)
         case Config.CorpusChunk(size, stride) =>
-          graft.operators.Curation.chunkDocuments(df, c.idCol, c.textCol,
-            size, stride)
+          Curation.chunkDocuments(df, c.idCol, c.textCol, size, stride)
         case Config.CorpusCorrupt() =>
           // terminal example-builder step: one per-row pass to
           // (inputs, targets) pretraining pairs — block-keyed draws, no
           // scan state, zero shuffle (the span_corrupt head's builder)
-          graft.operators.Curation.spanCorrupt(df, c.idCol, c.textCol)
+          Curation.spanCorrupt(df, c.idCol, c.textCol)
         case Config.CorpusFim(rate) =>
           // terminal example-builder step: per-doc sha-gated PSM reorder
           // (the fim_transform head's builder) — three sha draws per row,
           // zero shuffle
-          graft.operators.Curation.fimTransform(df, c.idCol, c.textCol, rate)
+          Curation.fimTransform(df, c.idCol, c.textCol, rate)
         case Config.CorpusDedupIncremental(index, genKey, threshold) =>
           // ingest the curated increment into the persisted index (only
           // NEW distinct texts sign — IncrementalDedup's two-level path),
@@ -589,115 +702,100 @@ object ConfigRuntime {
             .where(col("is_canonical")).select(col(c.idCol))
           snap.join(canonical, Seq(c.idCol))
         case Config.CorpusTokenize(artifact, rounds, family) =>
-          // train-if-missing: the first run trains on the curated frame and
-          // writes the artifact; every later run hydrates the stored merge
-          // table and only the vocabulary-sized apply/encode passes run.
+          // (n_words, n_chars, n_tokens) per document under a merge table;
           // `family` picks the merge criterion — bpe (count) or wordpiece
-          // (likelihood, ## continuation markers); the encode join is the
-          // same tf-compressed shape for both.
-          val snap = df.localCheckpoint(eager = false)
+          // (likelihood, ## continuation markers). Train-if-missing at rest:
+          // the first run trains on the curated frame and writes the
+          // artifact, later runs hydrate it. Documents with no tokens count
+          // zeros.
           val path = resolvePath(dataDir, artifact)
-          // The train path encodes with the vocabulary the training loop
-          // already merged (word → trained segmentation): rebuilding the
-          // initial vocabulary and replaying the merges would cost one more
-          // corpus-wide word aggregate for the same encode map.
-          val exists = java.nio.file.Files.exists(path)
-          val encoded = family match {
-            case "wordpiece" =>
-              import graft.operators.WordPiece
-              if (exists) WordPiece.encodeStatsWith(snap, c.idCol, c.textCol,
+          requireTrained("tokenize", "a trained artifact", path)
+          val exists = Files.exists(path)
+          val stats = Seq("n_words", "n_chars", "n_tokens")
+          if (streaming) {
+            // the per-row codegen'd fold (BpeStats / WordPieceStats) over
+            // the hydrated table annotates each arriving doc, no state
+            val fold = family match {
+              case "wordpiece" => WordPiece.tokenStatsFast(spark, text,
                 WordPiece.loadTokenizer(path.toString))
-              else {
-                val m = WordPiece.train(snap, c.textCol, rounds)
-                WordPiece.saveTokenizer(path.toString, m.merges)
-                graft.operators.Bpe.encodeJoin(snap, c.idCol, c.textCol, m.vocab)
-              }
-            case _ =>
-              import graft.operators.Bpe
-              if (exists) Bpe.encodeStatsWith(snap, c.idCol, c.textCol,
+              case _ => Bpe.tokenStatsFast(spark, text,
                 Bpe.loadTokenizer(path.toString))
-              else {
-                val m = Bpe.train(snap, c.textCol, rounds)
-                Bpe.saveTokenizer(path.toString, m.merges)
-                Bpe.encodeJoin(snap, c.idCol, c.textCol, m.vocab)
-              }
+            }
+            stats.foldLeft(df.withColumn("__ts", fold)) { (d, s) =>
+              d.withColumn(s, coalesce(col(s"__ts.$s"), lit(0L)))
+            }.drop("__ts")
+          } else {
+            // the tf-compressed vocabulary join, keyed on a row key the
+            // snapshot carries (never the id: documents sharing an id keep
+            // their own counts). The train path encodes with the vocabulary
+            // the training loop already merged — rebuilding the initial
+            // vocabulary and replaying the merges would cost one more
+            // corpus-wide word aggregate for the same encode map.
+            val snap = df.withColumn("__rk", monotonically_increasing_id())
+              .localCheckpoint(eager = false)
+            val encoded = family match {
+              case "wordpiece" =>
+                if (exists) WordPiece.encodeStatsWith(snap, "__rk", c.textCol,
+                  WordPiece.loadTokenizer(path.toString))
+                else {
+                  val m = WordPiece.train(snap, c.textCol, rounds)
+                  WordPiece.saveTokenizer(path.toString, m.merges)
+                  Bpe.encodeJoin(snap, "__rk", c.textCol, m.vocab)
+                }
+              case _ =>
+                if (exists) Bpe.encodeStatsWith(snap, "__rk", c.textCol,
+                  Bpe.loadTokenizer(path.toString))
+                else {
+                  val m = Bpe.train(snap, c.textCol, rounds)
+                  Bpe.saveTokenizer(path.toString, m.merges)
+                  Bpe.encodeJoin(snap, "__rk", c.textCol, m.vocab)
+                }
+            }
+            snap.join(encoded, Seq("__rk"), "left").drop("__rk")
+              .na.fill(0L, stats)
           }
-          snap.join(encoded, Seq(c.idCol), "left")
-            .na.fill(0L, Seq("n_words", "n_chars", "n_tokens"))
         case Config.CorpusSelect(lang, buckets, minScore, artifact) =>
-          // DSIR selection: fit the dense bucket model on the curated frame
-          // (train-if-missing under `artifact` — and score under the
-          // HYDRATED copy so the save/load path is always the one
-          // exercised); scoring is a pure per-row fold over a literal map,
-          // zero shuffle
-          import graft.operators.Importance
-          val snap = df.localCheckpoint(eager = false)
-          val model = artifact match {
-            case Some(a) =>
-              val path = resolvePath(dataDir, a)
-              if (!java.nio.file.Files.exists(path))
-                Importance.saveModel(path.toString, Importance.dsirModel(
-                  snap, c.textCol, Text.langId(text) === lang, buckets))
-              Importance.loadModel(path.toString)
-            case None => Importance.dsirModel(
-              snap, c.textCol, Text.langId(text) === lang, buckets)
-          }
-          snap.withColumn("dsir_score",
-            Importance.dsirScoreExpr(text, model))
+          // DSIR selection under the dense bucket model; scoring is a pure
+          // per-row fold over a literal map, zero shuffle
+          val snap = snapshot(df)
+          val m = model("select", "a trained model", artifact)(
+            Importance.dsirModel(snap, c.textCol, Text.langId(text) === lang,
+              buckets), Importance.saveModel, Importance.loadModel)
+          snap.withColumn("dsir_score", Importance.dsirScoreExpr(text, m))
             .filter(col("dsir_score") > minScore)
         case Config.CorpusClassify(lang, buckets, iters, eta, minProb, artifact) =>
-          // trained quality gate: fit the hashed-feature logistic model on
-          // the curated frame (train-if-missing under `artifact` — and
-          // score under the HYDRATED copy so the save/load path is always
-          // the one exercised); scoring is a pure per-row fold over the
-          // weight literal, zero shuffle — probExpr replays the relational
-          // rounding chain bit for bit
-          import graft.operators.Classifier
-          val snap = df.localCheckpoint(eager = false)
-          // deterministic sha-ratio training subsample (capped), pushed
-          // BEFORE feature construction (fitSampled): the fit cost —
-          // tokenize/bucket pass included — is bounded however large the
-          // curated frame; at or below the cap the sample IS the frame
-          def fit(): Array[Double] =
+          // trained quality gate: the hashed-feature logistic model, fitted
+          // on a deterministic sha-ratio subsample (capped) pushed BEFORE
+          // feature construction (fitSampled), so the fit cost is bounded
+          // however large the curated frame. Scoring is a pure per-row fold
+          // over the weight literal, zero shuffle — probExpr replays the
+          // relational rounding chain bit for bit
+          val snap = snapshot(df)
+          val w = model("classify", "a trained model", artifact)(
             Classifier.fitSampled(snap, c.idCol, c.textCol,
               when(Text.langId(text) === lang, 1.0).otherwise(0.0),
-              buckets, iters, eta)
-          val w = artifact match {
-            case Some(a) =>
-              val path = resolvePath(dataDir, a)
-              if (!java.nio.file.Files.exists(path))
-                Classifier.saveModel(path.toString, fit())
-              Classifier.loadModel(path.toString)
-            case None => fit()
-          }
-          snap.withColumn("quality_prob",
-            Classifier.probExpr(text, w, buckets))
+              buckets, iters, eta),
+            Classifier.saveModel, Classifier.loadModel)
+          snap.withColumn("quality_prob", Classifier.probExpr(text, w, buckets))
             .filter(col("quality_prob") >= minProb)
         case Config.CorpusMix(by, seed, artifact) =>
           // domain mixture: the bounded rate table (one row per domain)
           // gates the frame with the deterministic sha256-ratio filter.
-          // With an artifact: train-if-missing, and the gate applies under
-          // the HYDRATED copy as a pure per-row map lookup (the streaming
-          // shape); without, the fitted table broadcasts back directly.
-          import graft.operators.{Curation, Importance}
-          val snap = df.localCheckpoint(eager = false)
-          def fitRates(): Map[String, Double] =
-            Importance.domainMixRates(snap, by, Text.tokenCountWs(text))
-              .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-          artifact match {
-            case Some(a) =>
-              val path = resolvePath(dataDir, a)
-              if (!java.nio.file.Files.exists(path))
-                Importance.saveRates(path.toString, fitRates())
-              snap.filter(Importance.mixKeepExpr(id, col(by), seed,
-                Importance.loadRates(path.toString)))
-            case None =>
-              val rates = Importance.domainMixRates(snap, by,
-                Text.tokenCountWs(text))
-              snap.join(broadcast(rates), Seq(by))
-                .filter(Curation.hashRatio(id, seed) < col("rate"))
-                .drop("rate")
-          }
+          // Under an artifact the gate is a per-row map lookup over the
+          // HYDRATED table (the streaming shape); without one, the fitted
+          // table broadcasts back directly.
+          val snap = snapshot(df)
+          def rates = Importance.domainMixRates(snap, by,
+            Text.tokenCountWs(text))
+          if (artifact.isEmpty && !streaming)
+            snap.join(broadcast(rates), Seq(by))
+              .filter(Curation.hashRatio(id, seed) < col("rate"))
+              .drop("rate")
+          else
+            snap.filter(Importance.mixKeepExpr(id, col(by), seed,
+              model("mix", "a fitted rate table", artifact)(
+                rates.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap,
+                Importance.saveRates, Importance.loadRates)))
         case Config.CorpusShard(by, budget, shuffleSeed) =>
           // terminal serving step: token-budgeted shard ids appended within
           // each `by` partition (one hash exchange, sequence_pack's rule);
@@ -714,15 +812,11 @@ object ConfigRuntime {
         case Config.CorpusDiff(against) =>
           // incremental-crawl gate: keep only pages NEW or CHANGED vs the
           // previous snapshot — bodies never shuffle, only (id, digest)
-          // enters the join (digest scheme shared with dedup_exact's
-          // "t:"/null sentinel so null texts compare like texts)
-          val dgst = sha2(coalesce(concat(lit("t:"), text.cast("string")),
-            lit("null:")), 256)
+          // enters the join. On a stream the previous snapshot is a static
+          // side re-planned per micro-batch (a stream-static join)
           val prev = res.sourceFrame(against)
-            .select(id, sha2(coalesce(
-              concat(lit("t:"), col(c.textCol).cast("string")),
-              lit("null:")), 256).as("__pd"))
-          df.withColumn("__d", dgst)
+            .select(id, Text.textDigest(text).as("__pd"))
+          df.withColumn("__d", Text.textDigest(text))
             .join(prev, Seq(c.idCol), "left")
             .filter(col("__pd").isNull || col("__pd") =!= col("__d"))
             .drop("__d", "__pd")
@@ -731,15 +825,16 @@ object ConfigRuntime {
           // text, one line per block element — per-row codegen, no shuffle
           df.withColumn(c.textCol, graft.operators.Crawl.htmlText(text))
         case g: Config.CorpusGopher =>
-          df.filter(corpusGopherCond(text, g))
+          df.filter(graft.operators.Crawl.gopherKeep(text, g.minWords,
+            g.maxWords, g.minMeanLen, g.maxMeanLen, g.maxSymbolRatio,
+            g.minAlphaFrac, g.minStops))
         case Config.CorpusBudget(by, tokens, buckets, seed) =>
           // token-budget sampling (budget_sample's shape): bucket histogram
           // → per-stratum cutoff over ≤buckets rows → strata-row broadcast
           // join back; snapshot — the frame feeds the histogram AND the
           // gate, and the corpus itself never shuffles
           val snap = df.localCheckpoint(eager = false)
-          val bucket = floor(graft.operators.Curation.hashRatio(id, seed)
-            * buckets).cast("int")
+          val bucket = floor(Curation.hashRatio(id, seed) * buckets).cast("int")
           val w = org.apache.spark.sql.expressions.Window
             .partitionBy(col(by)).orderBy(col("__bk"))
           val cutoff = snap
@@ -799,210 +894,12 @@ object ConfigRuntime {
     }
   }
 
-  /** The Gopher gate as one predicate (batch + streaming share it). */
-  private[graft] def corpusGopherCond(text: Column,
-                                      g: Config.CorpusGopher): Column =
-    graft.operators.Crawl.gopherKeep(text, g.minWords, g.maxWords,
-      g.minMeanLen, g.maxMeanLen, g.maxSymbolRatio, g.minAlphaFrac,
-      g.minStops)
-
   /** A config-declared filesystem location, resolved against the data dir
     * when relative (the source-path rule, applied to artifact/index paths).
     */
   private def resolvePath(dataDir: String, p: String): java.nio.file.Path = {
     val path = java.nio.file.Paths.get(p)
     if (path.isAbsolute) path else java.nio.file.Paths.get(dataDir).resolve(p)
-  }
-
-  /** The corpus quality gate as one predicate — shared by the batch journey
-    * and the streaming variant so the two gates cannot drift.
-    */
-  private[graft] def corpusFilterCond(text: Column,
-                                      f: Config.CorpusFilter): Column = {
-    import graft.functions.Text
-    Seq(
-      f.lang.map(l => Text.langId(text) === l),
-      f.minQuality.map(q => Text.qualityScore(text) >= q),
-      f.maxRepetition.map(r => Text.repetitionRatio(text) <= r))
-      .flatten.reduce(_ && _)
-  }
-
-  /** The `corpus:` journey as a STREAMING plan — a continuously-fed crawl
-    * curated and exact-deduped at ingest, in one job. Stateless steps
-    * (filter, chunk) apply unchanged; `tokenize` streams under an ALREADY
-    * -TRAINED artifact (the merge table hydrates at plan build, a per-row
-    * fold annotates each arriving doc — training itself needs the batch
-    * journey); `dedup_exact` becomes a watermarked digest `dropDuplicates`
-    * (each arriving doc hashes once, state holds digests only and is
-    * evicted past the watermark horizon — the property that makes it
-    * deployable on an infinite crawl; the finite verification harness
-    * evicts nothing, so the result is the exact distinct set). Near-dup
-    * dedup (single-shot and incremental) and decontamination need
-    * corpus-at-rest passes (signatures + connected components / a
-    * benchmark join over the whole corpus) and are rejected by name — run
-    * the batch journey for those.
-    *
-    * Streaming keeps FIRST-ARRIVAL per digest where batch keeps min-id, so
-    * downstream consumers get one representative per distinct text with
-    * arrival-dependent identity — selecting digest-deterministic columns
-    * (the digest, the text) is the caller's contract for exact equality
-    * with the batch prefix.
-    */
-  def corpusStream(spark: SparkSession, dataDir: String,
-                   project: Config.Project,
-                   watermark: String = "10 minutes"): DataFrame = {
-    val c = project.corpus.getOrElse(throw new IllegalArgumentException(
-      "config: project has no corpus section to stream"))
-    val src = project.source(c.source)
-    require(src.transport == "fs" && src.format == "parquet",
-      s"config: corpus streaming needs an fs parquet source, " +
-        s"got ${src.transport}/${src.format}")
-    val path = if (src.path.startsWith("/")) src.path
-               else s"$dataDir/${src.path}"
-    val text = col(c.textCol)
-    c.steps.foldLeft(graft.streaming.Streaming.readParquetStream(spark, path)) {
-      (df, step) =>
-        step match {
-          case f: Config.CorpusFilter =>
-            df.filter(corpusFilterCond(text, f))
-          case Config.CorpusDedupExact() =>
-            // same digest scheme as the batch step (ConfigRuntime
-            // CorpusDedupExact): "t:"-prefixed text digest, null sentinel
-            df.withColumn("__ingest", current_timestamp())
-              .withWatermark("__ingest", watermark)
-              .withColumn("__h",
-                sha2(coalesce(concat(lit("t:"), text.cast("string")),
-                  lit("null:")), 256))
-              .dropDuplicates("__h")
-              .drop("__h", "__ingest")
-          case Config.CorpusChunk(size, stride) =>
-            graft.operators.Curation.chunkDocuments(df, c.idCol, c.textCol,
-              size, stride)
-          case Config.CorpusCorrupt() =>
-            // stateless per-row example building — streams as it arrives
-            graft.operators.Curation.spanCorrupt(df, c.idCol, c.textCol)
-          case Config.CorpusFim(rate) =>
-            // per-doc sha-gated PSM reorder: pure per-row draws keyed on
-            // the doc id — no state store, no join, streams as it arrives
-            graft.operators.Curation.fimTransform(df, c.idCol, c.textCol, rate)
-          case Config.CorpusTokenize(artifact, _, family) =>
-            // streamable ONLY under an already-trained artifact: the merge
-            // table hydrates at plan build and the per-row codegen'd fold
-            // (BpeStats / WordPieceStats per `family`) annotates each
-            // arriving doc — no state, no corpus-at-rest pass. Training
-            // needs the batch journey.
-            val path = resolvePath(dataDir, artifact)
-            require(java.nio.file.Files.exists(path),
-              s"config: streaming tokenize needs a trained artifact at " +
-                s"'$path' — run the batch corpus journey (train-if-missing) first")
-            val stats = family match {
-              case "wordpiece" => graft.operators.WordPiece.tokenStatsFast(
-                spark, text,
-                graft.operators.WordPiece.loadTokenizer(path.toString))
-              case _ => graft.operators.Bpe.tokenStatsFast(spark, text,
-                graft.operators.Bpe.loadTokenizer(path.toString))
-            }
-            df.withColumn("__ts", stats)
-              .withColumn("n_words", col("__ts.n_words"))
-              .withColumn("n_chars", col("__ts.n_chars"))
-              .withColumn("n_tokens", col("__ts.n_tokens"))
-              .drop("__ts")
-          case Config.CorpusSelect(_, _, minScore, artifact) =>
-            // streamable ONLY under a trained model (same contract as
-            // tokenize): the dense bucket table hydrates at plan build and
-            // scoring is a pure per-row fold over a literal map — the
-            // importance gate applied to a crawl AT INGEST, zero state
-            val a = artifact.getOrElse(throw new IllegalArgumentException(
-              "config: streaming select needs an 'artifact' — fitting is a " +
-                "corpus-at-rest pass"))
-            val path = resolvePath(dataDir, a)
-            require(java.nio.file.Files.exists(path),
-              s"config: streaming select needs a trained model at '$path' " +
-                "— run the batch corpus journey (train-if-missing) first")
-            val model = graft.operators.Importance.loadModel(path.toString)
-            df.withColumn("dsir_score",
-              graft.operators.Importance.dsirScoreExpr(text, model))
-              .filter(col("dsir_score") > minScore)
-          case Config.CorpusClassify(_, buckets, _, _, minProb, artifact) =>
-            // streamable ONLY under a trained model (the select/tokenize
-            // contract): the weight vector hydrates at plan build and the
-            // probability is a pure per-row fold — the learned quality gate
-            // applied to a crawl AT INGEST, zero state
-            val a = artifact.getOrElse(throw new IllegalArgumentException(
-              "config: streaming classify needs an 'artifact' — fitting is " +
-                "a corpus-at-rest pass"))
-            val path = resolvePath(dataDir, a)
-            require(java.nio.file.Files.exists(path),
-              s"config: streaming classify needs a trained model at '$path' " +
-                "— run the batch corpus journey (train-if-missing) first")
-            val w = graft.operators.Classifier.loadModel(path.toString)
-            df.withColumn("quality_prob",
-              graft.operators.Classifier.probExpr(text, w, buckets))
-              .filter(col("quality_prob") >= minProb)
-          case Config.CorpusDecontaminate(bench, n, method, artifact) =>
-            // streams ONLY as method: bloom — the benchmark (a batch
-            // source) collapses into its bitmap at plan build and each
-            // arriving doc probes it per row, zero state; the exact n-gram
-            // equi-join needs a corpus-at-rest pass. The artifact hydrates
-            // (or builds once) exactly as on the batch journey.
-            require(method == "bloom",
-              "config: corpus step 'decontaminate' streams only with " +
-                "method: bloom (the exact n-gram join needs a " +
-                "corpus-at-rest pass); run the batch corpus journey instead")
-            val bitmap = bloomBitmapFor(spark, dataDir, project, bench,
-              c.textCol, n, artifact)
-            df.filter(graft.operators.Curation
-              .bloomFlags(text, bitmap, n, numHashes = BloomHashes) === 0L)
-          case Config.CorpusMix(by, seed, artifact) =>
-            // streamable ONLY under fitted rates (the classify/select
-            // contract): the bounded rate table hydrates at plan build and
-            // the gate is a per-row map lookup + sha256-ratio filter —
-            // zero state; fitting rates needs the corpus at rest
-            val a = artifact.getOrElse(throw new IllegalArgumentException(
-              "config: streaming mix needs an 'artifact' — fitting the " +
-                "rate table is a corpus-at-rest pass"))
-            val path = resolvePath(dataDir, a)
-            require(java.nio.file.Files.exists(path),
-              s"config: streaming mix needs a fitted rate table at '$path' " +
-                "— run the batch corpus journey (train-if-missing) first")
-            df.filter(graft.operators.Importance.mixKeepExpr(
-              col(c.idCol), col(by), seed,
-              graft.operators.Importance.loadRates(path.toString)))
-          case Config.CorpusDiff(against) =>
-            // the incremental gate STREAMS: the previous snapshot is a
-            // static batch side re-planned per micro-batch (the
-            // stream-static join shape of attachStatic) — each arriving
-            // page drops immediately if its digest matches the archive
-            val dgst = sha2(coalesce(concat(lit("t:"), text.cast("string")),
-              lit("null:")), 256)
-            val prev = resolver(spark, dataDir, project)
-              .sourceFrame(against)
-              .select(col(c.idCol), sha2(coalesce(
-                concat(lit("t:"), col(c.textCol).cast("string")),
-                lit("null:")), 256).as("__pd"))
-            df.withColumn("__d", dgst)
-              .join(prev, Seq(c.idCol), "left")
-              .filter(col("__pd").isNull || col("__pd") =!= col("__d"))
-              .drop("__d", "__pd")
-          case Config.CorpusExtract(_) =>
-            // extraction is per-row — a crawl enters the stream as raw HTML
-            df.withColumn(c.textCol, graft.operators.Crawl.htmlText(text))
-          case g: Config.CorpusGopher =>
-            df.filter(corpusGopherCond(text, g))
-          case other =>
-            val name = other match {
-              case _: Config.CorpusDedupFuzzy        => "dedup_fuzzy"
-              case _: Config.CorpusDedupIncremental  => "dedup_incremental"
-              case _: Config.CorpusShard             => "shard"
-              case _: Config.CorpusDedupLines        => "dedup_lines"
-              case _: Config.CorpusBudget            => "budget"
-              case o                                 => o.getClass.getSimpleName
-            }
-            throw new IllegalArgumentException(
-              s"config: corpus step '$name' is not streamable (needs a " +
-                "corpus-at-rest pass); run the batch corpus journey instead")
-        }
-    }
   }
 
   /** The six preview stages of the dataset journey (reference

@@ -111,7 +111,7 @@ object QueriesMining {
   // cohesion = Jaccard of the adjacent TileB-token windows' distinct
   // vocabularies; a boundary fires where cohesion dips under TileThresh
   // (set inside the observed sf0.01 spread so the gate discriminates).
-  private val TileB = 10
+  private[graft] val TileB = 10
   private val TileThresh = 0.1
 
   // Caption-media alignment: the media id map pairs each caption with a
@@ -284,33 +284,14 @@ object QueriesMining {
     * over candidate boundaries every TileB tokens, through the codegen'd
     * [[graft.functions.TileScores]] loop (the interpreted HOF formulation
     * — per-position slice/distinct/intersect/union lambda trees — measured
-    * ~11x at the sf1→sf10 step; [[tileScoresHof]] stays as the spec-pinned
-    * reference). Spec-pinned on a synthetic hard topic shift.
+    * ~11x at the sf1→sf10 step; `CurationTwin.tileScoresHof` in the specs
+    * is the pinned reference). Spec-pinned on a synthetic hard topic shift.
     */
   private[graft] def tileScores(
       text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val fn = graft.functions.TileScores.register(
       org.apache.spark.sql.SparkSession.active, TileB)
     call_function(fn, Text.tokens(text))
-  }
-
-  /** The higher-order-function reference formulation of [[tileScores]]. */
-  private[graft] def tileScoresHof(
-      text: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val w = Text.tokens(text)
-    val n = size(w).cast("long")
-    // guard: Spark's sequence(1, 0) DESCENDS instead of being empty
-    // (the ensure-cadence lesson) — short docs yield no candidates
-    val kmax = floor((n - 1) / TileB).cast("long")
-    when(kmax >= 1, transform(
-      sequence(lit(1L), kmax), k => {
-        val p = (k * TileB).cast("int")
-        val left = slice(w, p - TileB + 1, lit(TileB))
-        val right = slice(w, p + 1, lit(TileB))
-        struct(p.cast("long").as("pos"),
-          round(Text.jaccard(left, right), 6).as("cohesion"))
-      })).otherwise(
-      array().cast("array<struct<pos:bigint,cohesion:double>>"))
   }
 
   // ---------------------------------------------------------------- queries

@@ -273,9 +273,8 @@ object QueriesStreaming {
     // The tokenize step's THIRD-family twin: the same at-ingest annotation
     // under a pre-trained WORDPIECE artifact (family: wordpiece) — the
     // hydrated ##-marked merge table folds per row through the codegen'd
-    // WordPieceStats loop; no state, no corpus-at-rest pass, and the
-    // per-row fold is result-equal to the batch vocabulary join by
-    // construction (a pure function of the word).
+    // WordPieceStats loop; no state, no corpus-at-rest pass. Its rows equal
+    // the batch journey's vocabulary join (StreamingSinkSpec pins it).
     "stream_corpus_tokenize_wp" -> { (s, d) =>
       import org.apache.spark.sql.functions.col
       import graft.operators.WordPiece

@@ -597,8 +597,7 @@ object Streaming {
       p.numPerm / p.bands, Dedup.BandFoldPrime)
     val t = col("text")
     val shingleable = size(Text.tokens(t)) >= p.shingleSize
-    val digest = sha2(coalesce(concat(lit("t:"), t.cast("string")),
-      lit("null:")), 256)
+    val digest = Text.textDigest(t)
     val bands = call_function(foldFn, call_function(sigFn,
       call_function(hashFn, call_function(shingleFn, Text.tokens(t)))))
     // stage the signature chain once per row, then probe — the band array

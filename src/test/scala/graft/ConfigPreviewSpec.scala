@@ -353,6 +353,25 @@ class ConfigPreviewSpec extends SparkSpec {
     }
   }
 
+  test("corpus tokenize counts each document on its own when an id repeats") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_corpus_tok_dup")
+    Seq((1L, "alpha beta gamma delta"), (1L, "one two"))
+      .toDF("doc_id", "text")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    for (family <- Seq("bpe", "wordpiece")) {
+      val p = corpusProject(
+        s"{ step: tokenize, artifact: $family.json, rounds: 4, family: $family }")
+      def words() = ConfigRuntime.corpus(spark, dir.toString, p)
+        .select("text", "n_words", "n_chars").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+      val want = Set(("alpha beta gamma delta", 4L, 19L), ("one two", 2L, 6L))
+      // the train path, then the hydrated path
+      assert(words() == want, family)
+      assert(words() == want, family)
+    }
+  }
+
   test("dedup_fuzzy after dedup_exact skips the duplication probe, same output") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_corpus_fuzzy_probe")
@@ -489,11 +508,11 @@ class ConfigPreviewSpec extends SparkSpec {
     val selNoArt = intercept[IllegalArgumentException](
       streamed("    - { step: select, target_lang: en }\n"))
     assert(selNoArt.getMessage.contains("artifact"))
-    // decontaminate: the exact join is corpus-at-rest, the Bloom probe
-    // (bitmap built batch-side at plan build) streams
-    val decExact = intercept[IllegalArgumentException](
-      streamed("    - { step: decontaminate, benchmark: docs, ngram: 3 }\n"))
-    assert(decExact.getMessage.contains("method: bloom"))
+    // decontaminate streams with both methods: the exact probe's n-gram
+    // set is a scalar subquery, the Bloom bitmap builds at plan build
+    val decExact =
+      streamed("    - { step: decontaminate, benchmark: docs, ngram: 3 }\n")
+    assert(decExact.isStreaming)
     val decBloom = ConfigRuntime.corpusStream(spark, dir.toString, proj(
       "    - { step: decontaminate, benchmark: docs, ngram: 3, method: bloom }\n"))
     assert(decBloom.isStreaming)

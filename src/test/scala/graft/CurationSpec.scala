@@ -216,7 +216,7 @@ class CurationSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val out = docs.select(
         Text.shingles(Text.tokens(col("t")), n).as("fast"),
-        graft.functions.Text.shinglesHof(Text.tokens(col("t")), n).as("slow"))
+        CurationTwin.shinglesHof(Text.tokens(col("t")), n).as("slow"))
         .collect().map(r => (r.getSeq[String](0), r.getSeq[String](1)))
       out.foreach { case (fast, slow) =>
         assert(fast == slow, s"n=$n: $fast != $slow")

@@ -251,7 +251,7 @@ class MiningSpec extends SparkSpec {
       val got = graft.operators.Curation.spanCorrupt(d, "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getString(4), r.getString(5))).toSet
-      val want = graft.operators.Curation.spanCorruptHof(d, "doc_id", "text")
+      val want = CurationTwin.spanCorruptHof(d, "doc_id", "text")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getString(4), r.getString(5))).toSet
       assert(got == want)
@@ -325,13 +325,13 @@ class MiningSpec extends SparkSpec {
     val docs = graft.queries.Q.documents(spark, sf)
     val mismatches = docs.select(
         graft.queries.QueriesMining.tileScores(col("text")).as("a"),
-        graft.queries.QueriesMining.tileScoresHof(col("text")).as("b"))
+        CurationTwin.tileScoresHof(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(mismatches == 0)
     // short docs (<= one window) yield no candidates in both paths
     val tiny = Seq("one two three", "").toDF("text")
       .select(graft.queries.QueriesMining.tileScores(col("text")).as("a"),
-        graft.queries.QueriesMining.tileScoresHof(col("text")).as("b"))
+        CurationTwin.tileScoresHof(col("text")).as("b"))
       .collect()
     tiny.foreach { r =>
       assert(r.getSeq[Any](0).isEmpty && r.getSeq[Any](1).isEmpty)

@@ -72,6 +72,81 @@ class StreamingSinkSpec extends SparkSpec {
       "one representative per distinct curated text")
   }
 
+  /** Every streamable corpus step, one step per project: the per-row
+    * steps, and the model steps under artifacts the batch run trains.
+    */
+  private val StreamableSteps: Seq[(String, String)] = Seq(
+    "filter" -> "{ step: filter, lang: en }",
+    "gopher" -> "{ step: gopher, min_words: 5 }",
+    "extract" -> "{ step: extract, format: html }",
+    "chunk" -> "{ step: chunk, size: 3, stride: 2 }",
+    "corrupt" -> "{ step: corrupt }",
+    "fim" -> "{ step: fim, rate: 0.5 }",
+    "diff" -> "{ step: diff, against: prev }",
+    "decontaminate_exact" -> "{ step: decontaminate, benchmark: bench, ngram: 3 }",
+    "decontaminate_bloom" ->
+      "{ step: decontaminate, benchmark: bench, ngram: 3, method: bloom }",
+    "select" ->
+      "{ step: select, target_lang: en, buckets: 16, min_score: 0.0, artifact: sel.json }",
+    "classify" -> ("{ step: classify, target_lang: en, buckets: 16, iters: 2, " +
+      "eta: 1, min_prob: 0.0, artifact: cls.json }"),
+    "mix" -> "{ step: mix, by: source, seed: 7, artifact: mix.json }",
+    "tokenize_bpe" -> "{ step: tokenize, artifact: bpe.json, rounds: 4 }",
+    "tokenize_wordpiece" ->
+      "{ step: tokenize, artifact: wp.json, rounds: 4, family: wordpiece }")
+
+  test("every streamable corpus step streams the rows of the batch journey") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream_steps")
+    // NULL and empty texts, a repeated id (1), a repeated text (1 and 8)
+    Seq[(Long, String, String)](
+      (1L, "the cat and the dog of the house sat on the mat", "a"),
+      (1L, "der hund und die katze", "b"),
+      (2L, "the quick brown fox jumps over the lazy dog and the cat", "a"),
+      (3L, "<p>the <b>bold</b> text and the</p><div>of the page</div>", "b"),
+      (4L, "", "a"),
+      (5L, null, "b"),
+      (6L, "alpha beta gamma delta epsilon zeta", "a"),
+      (7L, "le chat et les chiens des maisons", "b"),
+      (8L, "the cat and the dog of the house sat on the mat", "a"))
+      .toDF("doc_id", "text", "source")
+      .write.parquet(dir.resolve("documents.parquet").toString)
+    Seq((100L, "beta gamma delta words")).toDF("doc_id", "text")
+      .write.parquet(dir.resolve("bench.parquet").toString)
+    Seq((1L, "the cat and the dog of the house sat on the mat"),
+      (2L, "an older text"), (6L, "alpha beta gamma delta epsilon zeta"))
+      .toDF("doc_id", "text")
+      .write.parquet(dir.resolve("prev.parquet").toString)
+    def project(step: String) = graft.pipeline.Config.parseProject(
+      Seq("docs" -> "documents", "bench" -> "bench", "prev" -> "prev").map {
+        case (id, file) =>
+          s"""  - id: $id
+             |    loader: { transport: fs, path: $file.parquet, reader: { format: parquet } }
+             |""".stripMargin
+      }.mkString("sources:\n", "", "") +
+        s"corpus:\n  source: docs\n  steps:\n    - $step\n")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    StreamableSteps.foreach { case (name, step) =>
+      val p = project(step)
+      val batchDf = graft.pipeline.ConfigRuntime
+        .corpusThrough(spark, dir.toString, p, through = None)
+      val batch = rows(batchDf)
+      val streamed = rows(Streaming.runCorpusStream(spark, dir.toString, p,
+        s"sink_spec_step_$name"))
+      assert(batch.nonEmpty, name)
+      assert(streamed == batch, s"$name:\nstream $streamed\nbatch  $batch")
+      if (name.startsWith("tokenize")) {
+        // documents with no tokens count zeros (on both journeys: the
+        // rows are equal)
+        val zeros = batchDf.where($"text".isNull || $"text" === "")
+          .select("n_words", "n_chars", "n_tokens").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+        assert(zeros == Seq((0L, 0L, 0L), (0L, 0L, 0L)), name)
+      }
+    }
+  }
+
   test("corpus steps needing corpus-at-rest passes are rejected by name") {
     val doc = CorpusDoc.replace("- { step: dedup_exact }",
       "- { step: dedup_fuzzy, threshold: 0.5 }")
