@@ -34,14 +34,22 @@ object Assembly {
     * every `stride` records once full.
     */
   def sequenceWindows(df: DataFrame, key: StreamKey, field: String,
-                      windowSize: Int, stride: Int, to: String): DataFrame = {
-    val frame = key.w.rowsBetween(-(windowSize - 1), 0)
+                      windowSize: Int, stride: Int, to: String): DataFrame =
+    df.withColumn(to, sequenceWindow(key, col(field), windowSize, stride))
+      .where(col(to).isNotNull)
+
+  /** The window list of the last `windowSize` values on `key.w` on every
+    * row that emits a window (row number ≥ size, on the stride), NULL on
+    * every other row. A NULL value keeps its position in the list:
+    * `collect_list` skips NULLs, so each value is wrapped in a one-element
+    * array and the lists flattened.
+    */
+  def sequenceWindow(key: StreamKey, value: Column, windowSize: Int,
+                     stride: Int): Column = {
     val rn = row_number().over(key.w)
-    df.withColumn("__rn", rn)
-      .withColumn(to, collect_list(col(field)).over(frame))
-      .where(col("__rn") >= windowSize &&
-        pmod(col("__rn") - windowSize, lit(stride)) === 0)
-      .drop("__rn")
+    val frame = key.w.rowsBetween(-(windowSize - 1), 0)
+    when(rn >= windowSize && pmod(rn - windowSize, lit(stride)) === 0,
+      flatten(collect_list(array(value)).over(frame)))
   }
 
   /** Per-column scalar coverage counts — reference CoverageStatsAccumulator:

@@ -14,8 +14,10 @@ import graft.functions.TimeFns
   * Capability reference: /root/reference/docs/transforms/stream.md and
   * /root/reference/src/datapipeline/transforms/stream/ (all ops). Re-expressed as
   * Spark Window transforms: a chain of k ordered ops over the same StreamKey
-  * costs ONE shuffle+sort (Catalyst reuses the exchange), where the reference
-  * makes k sequential Python passes.
+  * shares ONE exchange on the partition key and one sort, where the
+  * reference makes k sequential Python passes. Exceptions: `collapse`
+  * partitions by (partition, time) and shuffles on that; `rolling_slope`
+  * re-sorts on (partition, __run) inside the key's partitions.
   */
 final case class StreamKey(
     partitionBy: Seq[String],

@@ -23,10 +23,13 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
   *    renamed to the canonical `time`.
   *  - `${env:...}` interpolation is rejected (zero-egress builds must not
   *    read ambient state); `${var}` resolves from the document's `globals`.
-  *  - `sequence: {size, stride}` series policies route to
-  *    `Assembly.sequenceWindows`; a sequenced vector's stream must be
-  *    partitioned by the sample keys only (no series-id suffixes on array
-  *    cells — the reference allows them, graft stages that separately).
+  *  - `sequence: {size, stride}` series policies become masked window
+  *    columns on the stream's own ordered window
+  *    (`Assembly.sequenceWindow`, assembled by
+  *    `ConfigRuntime.assembleSamples`); a NULL value keeps its position in
+  *    the window. A sequenced vector's stream must be partitioned by the
+  *    sample keys only (no series-id suffixes on array cells — the
+  *    reference allows them, graft stages that separately).
   *  - `tiebreak:` on a stream is a graft extension: deterministic ordering
   *    needs an explicit total order where the reference relies on iterator
   *    arrival order.

@@ -15,10 +15,11 @@ import graft.operators.{Assembly, Compose, StreamKey}
   * Scale posture: stream resolution is pure plan composition (no action);
   * source-backed streams read column-pruned scans, broadcast streams become
   * broadcast hash joins, aligned streams become sort-merge joins on
-  * (partition, time). The dataset runtime shuffles data rows once for
-  * assembly; coverage metadata (≤ |vectors| rows) and per-fold scaler stats
-  * (|folds| rows) are the only driver-side materializations, mirroring the
-  * reference's metadata.json / scaler.json artifacts.
+  * (partition, time). Sample assembly rides each stream's own window pass
+  * ([[assembleSamples]]); coverage metadata (≤ |vectors| rows, one job) and
+  * per-fold scaler stats (|folds| rows) are the only driver-side
+  * materializations, mirroring the reference's metadata.json /
+  * scaler.json artifacts.
   */
 object ConfigRuntime {
 
@@ -51,7 +52,7 @@ object ConfigRuntime {
       }
     }
 
-    private def key(id: String): StreamKey =
+    private[pipeline] def key(id: String): StreamKey =
       StreamKey(partitionBy(id), "time", tiebreak(id))
 
     /** Read one declared source by id (the corpus journey consumes raw
@@ -221,7 +222,9 @@ object ConfigRuntime {
   }
 
   /** Resolve streams and assemble the project's samples (shared by
-    * [[dataset]] and [[runTasks]]).
+    * [[dataset]] and [[runTasks]]). The frame is checkpointed lazily:
+    * coverage collects, the scaler fit and the returned plan all consume
+    * it, and it materializes once, at the first action.
     */
   private[pipeline] def assemble(spark: SparkSession, dataDir: String,
                                  project: Config.Project): ProjectAssembly = {
@@ -230,92 +233,121 @@ object ConfigRuntime {
     val res = resolver(spark, dataDir, project)
     val vectors = ds.features ++ ds.targets
     require(vectors.nonEmpty, "config: dataset declares no vectors")
-    val (seqVectors, scalarVectors) = vectors.partition(_.sequence.isDefined)
-    val seqById = seqVectors.map(v => v.id -> v.sequence.get).toMap
-
-    def checkSampleKeys(streamId: String): Seq[String] = {
-      val pb = res.partitionBy(streamId)
-      val missing = ds.sampleKeys.filterNot(pb.contains)
-      require(missing.isEmpty,
-        s"config: sample key(s) ${missing.mkString(", ")} not in " +
-          s"partition_by of stream '$streamId'")
-      pb
-    }
-
-    // --- series projection per referenced stream, then union: every scalar
-    // vector becomes (series_id, time, value, keys…) rows. Sample keys must
-    // belong to each referenced stream's partition identity (reference rule);
-    // the remaining partition fields suffix the series id. The id and value
-    // columns are renamed by position to reserved names: a sample key may
-    // itself be called `series_id` or `value`.
-    val projections = scalarVectors.groupBy(_.stream).toSeq.sortBy(_._1).map {
-      case (streamId, vs) =>
-        Series.project(res.stream(streamId), checkSampleKeys(streamId),
-          ds.sampleKeys, "time", vs.map(v => Series.SeriesConfig(v.id, v.field)))
-          .toDF(("__series_id" +: "time" +: "__series_value" +: ds.sampleKeys): _*)
-    }
-
-    // --- assembly: one shuffle on (sample_time, keys); wide via pivot. When
-    // every partition field is a sample key the series ids are exactly the
-    // vector ids (static pivot — single pass); otherwise Spark's dynamic
-    // pivot computes the id set first, the same two-pass shape as the
-    // reference's series metadata artifact.
-    val suffixFree = scalarVectors.map(_.stream).distinct
+    val seqById = vectors.flatMap(v => v.sequence.map(v.id -> _)).toMap
+    val assembled = assembleSamples(res, ds).localCheckpoint(eager = false)
+    val suffixFree = vectors.map(_.stream).distinct
       .forall(s => res.partitionBy(s).forall(ds.sampleKeys.contains))
-    val scalarAssembled: Option[DataFrame] =
-      if (scalarVectors.isEmpty) None
-      else {
-        val long = projections.reduce(_ unionByName _)
-        val bucketed = long.withColumn("sample_time",
-          TimeFns.floorTime(col("time"), ds.cadence))
-        val grouped = bucketed.groupBy(
-          (col("sample_time") +: ds.sampleKeys.map(col)): _*)
-        Some(
-          (if (suffixFree)
-             grouped.pivot(col("__series_id"), scalarVectors.map(_.id))
-           else grouped.pivot(col("__series_id")))
-            .agg(max(col("__series_value"))))
-      }
+    // suffixed layouts keep every pivoted column for a given vector id
+    def idsOf(vs: Seq[Config.VectorDef]): Seq[String] =
+      if (suffixFree) vs.map(_.id)
+      else assembled.columns.filter(c => vs.exists(v =>
+        c == v.id || c.startsWith(v.id + Series.IdSeparator))).toSeq
+    ProjectAssembly(res, ds, vectors, seqById, idsOf(ds.features),
+      idsOf(ds.targets), assembled)
+  }
 
-    // --- sequenced vectors (reference SequenceConfig → sequence_series,
-    // pipelines/series/stages.py:33): sliding windows per series entity BEFORE
-    // bucketing, window time = its last record's time; the bucket cell keeps
-    // the max window (same merge rule as the scalar pivot's max(value)). The
-    // stream's partition identity must equal the sample keys — array cells
-    // don't take series-id suffixes.
-    val seqFrames = seqVectors.map { v =>
-      val pb = checkSampleKeys(v.stream)
-      require(pb.forall(ds.sampleKeys.contains),
+  /** The wide sample frame: `sample_time`, the sample keys, the scalar
+    * vector columns, then the sequence vector columns.
+    *
+    * Each referenced stream is assembled in one pass. A suffix-free stream
+    * is ONE aggregate grouped by (sample_time, keys): a scalar vector takes
+    * the max of its field as double, a sequence vector the max of its
+    * window list. The window list is a masked column on the stream's own
+    * ordered window (reference SequenceConfig → sequence_series,
+    * pipelines/series/stages.py:33: windows per series entity before
+    * bucketing; a window's time is its last record's time), so the stream
+    * is already hash-partitioned on its keys and the aggregate plans no
+    * exchange of its own. A stream with only sequence vectors keeps the
+    * rows that emit a window: a sample exists only where one does.
+    *
+    * A stream with partition fields beyond the sample keys projects long
+    * series rows and pivots their suffixed ids (reference SeriesProjector);
+    * array cells take no suffix, so its vectors must be scalar. The scalar
+    * columns of such a project are the series ids present in the data, in
+    * sorted order, as a dynamic pivot names them (one id-set job).
+    *
+    * Streams meet by a union and a max per column, never a join: a sample
+    * exists wherever any vector has data, and one stream adds no exchange.
+    */
+  def assembleSamples(res: Resolver, ds: Config.DatasetDef): DataFrame = {
+    val vectors = ds.features ++ ds.targets
+    val keyCols = ("sample_time" +: ds.sampleKeys).map(col)
+    val groupCols =
+      TimeFns.floorTime(col("time"), ds.cadence).as("sample_time") +:
+        ds.sampleKeys.map(col)
+    // sample keys must belong to each referenced stream's partition identity
+    // (reference rule); the remaining partition fields suffix the series id
+    val (plain, suffixed) = vectors.groupBy(_.stream).toSeq.sortBy(_._1)
+      .partition { case (sid, _) =>
+        val pb = res.partitionBy(sid)
+        val missing = ds.sampleKeys.filterNot(pb.contains)
+        require(missing.isEmpty,
+          s"config: sample key(s) ${missing.mkString(", ")} not in " +
+            s"partition_by of stream '$sid'")
+        pb.forall(ds.sampleKeys.contains)
+      }
+    suffixed.flatMap(_._2).find(_.sequence.isDefined).foreach { v =>
+      throw new IllegalArgumentException(
         s"config: sequence vector '${v.id}': stream '${v.stream}' must be " +
           "partitioned by the sample keys only")
-      val sq = v.sequence.get
-      val key = StreamKey(pb, "time", res.tiebreak(v.stream))
-      Assembly.sequenceWindows(res.stream(v.stream), key, v.field,
-        sq.size, sq.stride, "__seq")
-        .withColumn("sample_time", TimeFns.floorTime(col("time"), ds.cadence))
-        .groupBy((col("sample_time") +: ds.sampleKeys.map(col)): _*)
-        .agg(max(col("__seq")).as(v.id))
     }
 
-    // full outer join: a sample exists wherever ANY vector has data (matches
-    // the union-domain of the scalar-only path). localCheckpoint: coverage
-    // collects, scaler fit, and the returned plan all consume the assembly —
-    // lazy checkpoint materializes it once at the first action.
-    val joinKeys = "sample_time" +: ds.sampleKeys
-    val assembled = (scalarAssembled.toSeq ++ seqFrames)
-      .reduceLeft((a, b) => a.join(b, joinKeys, "full"))
-      .localCheckpoint(eager = false)
+    val wide = plain.map { case (sid, vs) =>
+      val (seqVs, scalarVs) = vs.partition(_.sequence.isDefined)
+      val seqCols = seqVs.zipWithIndex.map { case (v, i) => v -> s"__seq$i" }
+      val windows = seqCols.map { case (v, c) =>
+        val sq = v.sequence.get
+        Assembly.sequenceWindow(res.key(sid), col(v.field), sq.size, sq.stride)
+          .as(c)
+      }
+      val rows0 = res.stream(sid).select(col("*") +: windows: _*)
+      val rows =
+        if (scalarVs.nonEmpty) rows0
+        else rows0.where(seqCols.map(s => col(s._2).isNotNull).reduce(_ || _))
+      val aggs = scalarVs.map(v => max(col(v.field).cast("double")).as(v.id)) ++
+        seqCols.map { case (v, c) => max(col(c)).as(v.id) }
+      rows.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
+    }
 
-    // suffixed layouts keep every pivoted column for a given vector id
-    val featureIds =
-      if (suffixFree) ds.features.map(_.id)
-      else assembled.columns.filter(c => ds.features.exists(v =>
-        c == v.id || c.startsWith(v.id + Series.IdSeparator))).toSeq
-    val targetIds =
-      if (suffixFree) ds.targets.map(_.id)
-      else assembled.columns.filter(c => ds.targets.exists(v =>
-        c == v.id || c.startsWith(v.id + Series.IdSeparator))).toSeq
-    ProjectAssembly(res, ds, vectors, seqById, featureIds, targetIds, assembled)
+    // the id and value columns of the long rows are renamed by position to
+    // reserved names: a sample key may itself be called `series_id` or `value`
+    val long = suffixed.map { case (sid, vs) =>
+      Series.project(res.stream(sid), res.partitionBy(sid), ds.sampleKeys,
+        "time", vs.map(v => Series.SeriesConfig(v.id, v.field)))
+        .toDF(("__series_id" +: "time" +: "__series_value" +: ds.sampleKeys): _*)
+    }.reduceOption(_ unionByName _)
+    val scalarCols = long match {
+      case None => vectors.filter(_.sequence.isEmpty).map(_.id)
+      case Some(l) =>
+        // a suffix-free vector is present when its stream has a row
+        val plainIds = plain.flatMap { case (sid, vs) =>
+          val ids = vs.filter(_.sequence.isEmpty).map(v => lit(v.id))
+          if (ids.isEmpty) None
+          else Some(res.stream(sid)
+            .select(explode(array(ids: _*)).as("__series_id")))
+        }
+        val maxValues = l.sparkSession.conf.get("spark.sql.pivotMaxValues").toInt
+        val ids = (l.select("__series_id") +: plainIds).reduce(_ union _)
+          .distinct().limit(maxValues + 1).sort("__series_id")
+          .collect().map(_.getString(0)).toSeq
+        require(ids.length <= maxValues,
+          s"config: more than $maxValues series ids to pivot " +
+            "(spark.sql.pivotMaxValues)")
+        ids
+    }
+    val pivoted = long.map(_.groupBy(groupCols: _*)
+      .pivot(col("__series_id"), scalarCols.filter(_.contains(Series.IdSeparator)))
+      .agg(max(col("__series_value"))))
+
+    val valueCols = scalarCols ++ vectors.filter(_.sequence.isDefined).map(_.id)
+    val merged = (wide ++ pivoted) match {
+      case Seq(one) => one
+      case frames =>
+        val maxes = valueCols.map(c => max(col(c)).as(c))
+        frames.reduce(_.unionByName(_, allowMissingColumns = true))
+          .groupBy(keyCols: _*).agg(maxes.head, maxes.tail: _*)
+    }
+    merged.select(keyCols ++ valueCols.map(col): _*)
   }
 
   /** Postprocess: column selection by coverage (features and targets have
@@ -325,21 +357,24 @@ object ConfigRuntime {
   private[pipeline] def postprocessStage(a: ProjectAssembly): PostStage = {
     val ds = a.ds
     val assembled = a.assembled
+    val fThr = ds.postprocess.featureColumnThreshold
+    val tThr = ds.postprocess.targetColumnThreshold
+    def known(ids: Seq[String]): Seq[String] =
+      ids.filter(assembled.columns.contains)
+    // one coverage job over every thresholded column, features and targets
+    val measured = fThr.fold(Seq.empty[String])(_ => known(a.featureIds)) ++
+      tThr.fold(Seq.empty[String])(_ => known(a.targetIds))
+    val coverage: Map[String, Double] =
+      if (measured.isEmpty) Map.empty
+      else Assembly.coverageStats(assembled, measured)
+        .select("column", "coverage").collect()
+        .collect { case r if !r.isNullAt(1) => r.getString(0) -> r.getDouble(1) }
+        .toMap
     def retain(ids: Seq[String], threshold: Option[Double]): Seq[String] =
-      threshold match {
-        case None => ids.filter(assembled.columns.contains)
-        case Some(thr) =>
-          val known = ids.filter(assembled.columns.contains)
-          if (known.isEmpty) Nil
-          else {
-            val covered = Assembly.coverageStats(assembled, known)
-              .filter(col("coverage") >= thr)
-              .select("column").collect().map(_.getString(0)).toSet
-            ids.filter(covered.contains)
-          }
-      }
-    val retainedF = retain(a.featureIds, ds.postprocess.featureColumnThreshold)
-    val retainedT = retain(a.targetIds, ds.postprocess.targetColumnThreshold)
+      threshold.fold(known(ids))(thr =>
+        known(ids).filter(c => coverage.get(c).exists(_ >= thr)))
+    val retainedF = retain(a.featureIds, fThr)
+    val retainedT = retain(a.targetIds, tThr)
     require(retainedF.nonEmpty, "config: column selection removed every feature")
     val retained = retainedF ++ retainedT
     val conformed = Assembly.conform(assembled, a.keys, retained.map(a.entry))
@@ -916,9 +951,10 @@ object ConfigRuntime {
     *  - `input <streamId>`:     the raw source frame, before mapping
     *  - `canonical <streamId>`: after time rename + field projection
     *  - `records <streamId>`:   the full stream (preprocess + transforms)
-    *  - `series [vectorId]`:    the long series projection rows feeding
-    *                            assembly (scalar vectors; a sequenced
-    *                            vector previews its input stream's records)
+    *  - `series [vectorId]`:    the long series projection rows of the
+    *                            scalar vectors (assembly pivots them for
+    *                            suffixed streams only; a sequenced vector
+    *                            previews its input stream's records)
     *  - `samples`:              the assembled wide frame, pre-postprocess
     *  - `postprocess`:          after column selection / conform / row
     *                            filtering (pre-split, pre-scale)

@@ -11,9 +11,11 @@ import graft.operators.{Ordered, StreamKey}
   * statistic: mean, to: close_mean_20`).
   *
   * A reference user's YAML pipeline maps 1:1 onto a `Seq[Op]`; `Pipeline.run`
-  * folds it into ONE DataFrame plan, so a chain of k ordered transforms costs
-  * a single shuffle+sort over the stream key (the reference runs k sequential
-  * per-record passes).
+  * folds it into ONE DataFrame plan, so a chain of k ordered transforms
+  * shares one exchange and sort on the stream key (the reference runs k
+  * sequential per-record passes). `collapse` adds an exchange on
+  * (partition, time) ahead of it, and `rolling_slope` re-sorts on
+  * (partition, __run) within the key's partitions.
   */
 object Pipeline {
 

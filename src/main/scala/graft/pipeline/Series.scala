@@ -13,8 +13,10 @@ import org.apache.spark.sql.types._
   * stay as entity-key columns.
   *
   * Scale posture: pure narrow projection + explode (one output row per
-  * (record, config)) — no shuffle; the series_id is a derived column so any
-  * downstream groupBy(series_id) shuffles exactly once.
+  * (record, config)) — no shuffle of its own. The dataset assembly uses it
+  * only for streams with partition fields beyond the sample keys, whose
+  * suffixed series ids it pivots; a stream partitioned by the sample keys
+  * only is assembled without the long rows (`ConfigRuntime.assembleSamples`).
   */
 object Series {
 

@@ -60,6 +60,18 @@ class AssemblySpec extends SparkSpec {
     assert(out(9L) == List(7.0, 8.0, 9.0))
   }
 
+  test("sequenceWindows: a NULL value keeps its position in the window") {
+    val df = Seq(("a", 1L, Some(1.0)), ("a", 2L, None), ("a", 3L, Some(3.0)),
+      ("a", 4L, Some(4.0))).toDF("p", "i", "v")
+      .withColumn("t", col("i").cast("timestamp"))
+    val key = graft.operators.StreamKey(Seq("p"), "t", Seq("i"))
+    val out = Assembly.sequenceWindows(df, key, "v", 3, 1, "w")
+      .orderBy("i").select("w").collect()
+      .map(_.getSeq[java.lang.Double](0).map(Option(_).map(_.doubleValue)))
+    assert(out.toSeq == Seq(Seq(Some(1.0), None, Some(3.0)),
+      Seq(None, Some(3.0), Some(4.0))))
+  }
+
   test("coverage stats and filters") {
     val df = Seq(
       (Some(1.0), Some(1.0)), (Some(2.0), None), (None, None), (Some(4.0), Some(4.0))

@@ -120,6 +120,51 @@ class ConfigPreviewSpec extends SparkSpec {
     assert(post.filter(col("v").isNull || col("pv").isNull).count() == 0)
   }
 
+  test("a NULL inside a sequence window keeps its position; the scaler skips it") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_sequence_null")
+    def t(h: Int) = new java.sql.Timestamp(1704067200000L + h * 3600000L)
+    Seq(("u1", t(0), 1L, Some(1.0)), ("u1", t(1), 2L, None),
+      ("u1", t(2), 3L, Some(3.0)), ("u1", t(3), 4L, Some(4.0)))
+      .toDF("user_id", "ts", "event_id", "value")
+      .write.parquet(dir.resolve("ticks.parquet").toString)
+    val p = Config.parseProject(
+      """sources:
+        |  - id: ticks
+        |    loader: { transport: fs, path: ticks.parquet, reader: { format: parquet } }
+        |streams:
+        |  - id: s
+        |    from: { source: ticks }
+        |    map: { time: ts }
+        |    partition_by: [user_id]
+        |    tiebreak: [event_id]
+        |dataset:
+        |  sample: { cadence: 1h, keys: [user_id] }
+        |  features:
+        |    - { id: seq3, stream: s, field: value, sequence: { size: 3, stride: 1 } }
+        |    - { id: z3, stream: s, field: value, scale: true, sequence: { size: 3, stride: 1 } }
+        |""".stripMargin)
+    val served = ConfigRuntime.dataset(spark, dir.toString, p)
+      .orderBy("sample_time").collect()
+    def window(r: org.apache.spark.sql.Row, c: String): Seq[Option[Double]] =
+      r.getSeq[java.lang.Double](r.fieldIndex(c)).map(Option(_).map(_.doubleValue))
+    assert(served.map(window(_, "seq3")).toSeq == Seq(
+      Seq(Some(1.0), None, Some(3.0)), Seq(None, Some(3.0), Some(4.0))))
+    // elementwise scaler: fitted over the present elements 1, 3, 3, 4
+    val xs = Seq(1.0, 3.0, 3.0, 4.0)
+    val mean = xs.sum / xs.size
+    val std = math.rint(math.sqrt(xs.map(x => (x - mean) * (x - mean)).sum /
+      xs.size) * 1e6) / 1e6
+    val z = served.map(window(_, "z3")).toSeq
+    val expected = Seq(Seq(Some(1.0), None, Some(3.0)),
+      Seq(None, Some(3.0), Some(4.0))).map(_.map(_.map(x => (x - mean) / std)))
+    assert(z.map(_.map(_.isEmpty)) == expected.map(_.map(_.isEmpty)))
+    z.flatten.zip(expected.flatten).foreach {
+      case (Some(a), Some(b)) => assert(math.abs(a - b) < 1e-9, s"$a vs $b")
+      case _ =>
+    }
+  }
+
   test("corpus stage previews the journey cut after k steps") {
     val doc =
       """sources:

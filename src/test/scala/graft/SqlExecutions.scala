@@ -37,14 +37,30 @@ object SqlExecutions extends AdaptiveSparkPlanHelper {
     * by name, or the partitioning's name when it is not hash partitioned.
     */
   def shuffleKeys(plan: SparkPlan): Seq[Seq[String]] =
-    collectWithSubqueries(plan) { case s: ShuffleExchangeExec =>
-      s.outputPartitioning match {
-        case h: HashPartitioning => h.expressions.map {
-          case a: Attribute => a.name
-          case e => e.sql
-        }
-        case p => Seq(p.getClass.getSimpleName)
+    collectWithSubqueries(plan) { case s: ShuffleExchangeExec => keysOf(s) }
+
+  private def keysOf(s: ShuffleExchangeExec): Seq[String] =
+    s.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.map {
+        case a: Attribute => a.name
+        case e => e.sql
       }
+      case p => Seq(p.getClass.getSimpleName)
+    }
+
+  /** One shuffle exchange: its hash keys (as in [[shuffleKeys]]) and the
+    * records and bytes its map side wrote.
+    */
+  final case class Exchange(keys: Seq[String], records: Long, bytes: Long)
+
+  /** Every shuffle exchange of an executed `plan`, subqueries included, with
+    * its `shuffleRecordsWritten` and `shuffleBytesWritten` metrics (0 for an
+    * exchange that never ran).
+    */
+  def exchanges(plan: SparkPlan): Seq[Exchange] =
+    collectWithSubqueries(plan) { case s: ShuffleExchangeExec =>
+      Exchange(keysOf(s), s.metrics("shuffleRecordsWritten").value,
+        s.metrics("shuffleBytesWritten").value)
     }
 
   /** Every join operator of `plan`, subqueries included, by node name. */
