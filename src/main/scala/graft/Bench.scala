@@ -113,11 +113,9 @@ object Bench {
     val cpus = spark.sparkContext.defaultParallelism
     // AQE initial-partition posture is PER-PLAN (pipeline/Posture.scala):
     // sort-dominated plans get core-count reduce parallelism, wide
-    // aggregate/join plans get volume-scaled fan-out. The AMBIENT value
-    // between heads is core count — journeys that materialize ordered
-    // checkpoints at plan-build time (config_sequence) need it for those
-    // inner jobs too.
-    val initialKey = graft.pipeline.Posture.InitialPartitionsKey
+    // aggregate/join plans get volume-scaled fan-out. `Posture.during`
+    // restores the session's own value after each measured action, so a
+    // head's plan-build jobs never inherit the previous head's posture.
 
     // Warmup: touch every table once (filesystem cache + codegen + shuffle machinery).
     Seq("lineitem", "orders", "customer", "supplier", "nation", "region",
@@ -162,14 +160,12 @@ object Bench {
       val times = (1 to runsPerQuery).flatMap { _ =>
         val t0 = System.nanoTime()
         try {
-          // ambient core-count posture for plan-build-time jobs, then the
-          // per-plan posture for the measured action
-          spark.conf.set(initialKey, cpus.toString)
           val df = fn(spark, sfDir)
-          // Posture.applyTo logs classification failures (a silent core-count
+          // Posture.during logs classification failures (a silent core-count
           // fallback would read as an unexplained benchmark shift)
-          graft.pipeline.Posture.applyTo(df, cpus, label = name)
-          df.write.format("noop").mode("overwrite").save()
+          graft.pipeline.Posture.during(df, cpus, label = name) {
+            df.write.format("noop").mode("overwrite").save()
+          }
           Some((System.nanoTime() - t0) / 1e9)
         } catch {
           case e: graft.operators.Assembly.CellBudgetExceeded =>

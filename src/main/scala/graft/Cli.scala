@@ -27,19 +27,18 @@ import graft.sources.{Hygiene, Runs}
   */
 object Cli {
 
-  /** Per-plan reduce-parallelism posture before every materialize/task
+  /** Per-plan reduce-parallelism posture around every materialize/task
     * action — the engine default (pipeline/Posture.scala), not a harness
     * nicety: a `graft.Cli run` over a 600M-row project deserves the same
     * sort-at-core-count / wide-at-volume rule Bench measures under.
     */
-  private def posture(df: org.apache.spark.sql.DataFrame,
-                      label: String): Unit =
-    graft.pipeline.Posture.applyTo(df,
-      df.sparkSession.sparkContext.defaultParallelism, label)
+  private def posture[T](df: org.apache.spark.sql.DataFrame,
+                         label: String)(action: => T): T =
+    graft.pipeline.Posture.during(df,
+      df.sparkSession.sparkContext.defaultParallelism, label)(action)
 
   private def write(df: org.apache.spark.sql.DataFrame, format: String,
-                    dir: String): Unit = {
-    posture(df, s"write:$dir")
+                    dir: String): Unit = posture(df, s"write:$dir") {
     val w = df.write.mode("overwrite")
     format match {
       case "csv"   => w.option("header", "true").csv(dir)
@@ -231,8 +230,7 @@ object Cli {
       Runs.writeHtml(html, dest)
       out.println(s"html -> $dest")
     }
-    posture(report, s"task:$taskId")
-    Runs.writeText(report, limit, out)
+    posture(report, s"task:$taskId")(Runs.writeText(report, limit, out))
   }
 
   /** Dump one intermediate stage of the dataset journey (reference
@@ -246,17 +244,18 @@ object Cli {
                    outDir: Option[String] = None): Long = {
     val project = Config.parseProject(Files.readString(Paths.get(configPath)))
     val frame = ConfigRuntime.previewStage(spark, dataDir, project, stage, id)
-    posture(frame, s"stage:$stage")
-    outDir match {
-      case None => Runs.writeText(frame, limit, out)
-      case Some(dir) =>
-        // parquet dump of the staged frame (reference serve --preview with
-        // a parquet target; graft stages are all DataFrames, so every stage
-        // is dumpable, not just samples/postprocess)
-        frame.write.mode("overwrite").parquet(dir)
-        val n = spark.read.parquet(dir).count()
-        out.println(s"stage $stage -> $dir ($n rows)")
-        n
+    posture(frame, s"stage:$stage") {
+      outDir match {
+        case None => Runs.writeText(frame, limit, out)
+        case Some(dir) =>
+          // parquet dump of the staged frame (reference serve --preview
+          // with a parquet target; graft stages are all DataFrames, so
+          // every stage is dumpable, not just samples/postprocess)
+          frame.write.mode("overwrite").parquet(dir)
+          val n = spark.read.parquet(dir).count()
+          out.println(s"stage $stage -> $dir ($n rows)")
+          n
+      }
     }
   }
 
@@ -291,9 +290,10 @@ object Cli {
         try {
           project.streams.map(_.id).foreach { id =>
             val frame = res.stream(id)
-            posture(frame, s"stream:$id")
-            frame.write.mode("overwrite")
-              .parquet(paths.runRoot.resolve("streams").resolve(id).toString)
+            posture(frame, s"stream:$id") {
+              frame.write.mode("overwrite")
+                .parquet(paths.runRoot.resolve("streams").resolve(id).toString)
+            }
             out.println(s"run ${paths.runId} stream $id -> streams/$id")
           }
           Runs.finishRun(paths, "success")

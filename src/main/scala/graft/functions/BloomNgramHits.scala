@@ -86,14 +86,13 @@ case class BloomNgramHits(left: Expression, right: Expression,
 
 object BloomNgramHits {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_ngram_hits", { exprs =>
-        def litInt(e: Expression, name: String): Int = e match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"bloom_ngram_hits: $name must be an integer literal, got $other")
-        }
-        BloomNgramHits(exprs(0), exprs(1),
-          litInt(exprs(2), "n"), litInt(exprs(3), "numHashes"))
-      }, "built-in")
+    Kernels.register(spark, "bloom_ngram_hits") { exprs =>
+      def litInt(e: Expression, name: String): Int = e match {
+        case Literal(v: Int, IntegerType) => v
+        case other => throw new IllegalArgumentException(
+          s"bloom_ngram_hits: $name must be an integer literal, got $other")
+      }
+      BloomNgramHits(exprs(0), exprs(1),
+        litInt(exprs(2), "n"), litInt(exprs(3), "numHashes"))
+    }
 }

@@ -141,9 +141,7 @@ object Bm25Scores {
       qids.foldLeft(17L)(_ * 31 + _) * 31 +
       java.lang.Double.doubleToLongBits(avgdl)) & Long.MaxValue
     val name = s"bm25_scores_${qids.length}_${terms.length}_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => Bm25Scores(exprs.head, terms, idfs, masks, qids, avgdl),
-      "built-in")
-    name
+    Kernels.register(spark, name)(
+      exprs => Bm25Scores(exprs.head, terms, idfs, masks, qids, avgdl))
   }
 }

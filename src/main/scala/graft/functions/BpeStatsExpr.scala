@@ -123,8 +123,6 @@ object BpeStats {
   def register(spark: org.apache.spark.sql.SparkSession,
                merges: Seq[(String, String)]): String = {
     val name = s"bpe_stats_${merges.hashCode.toHexString}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BpeStats(exprs.head, merges), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => BpeStats(exprs.head, merges))
   }
 }

@@ -84,6 +84,5 @@ case class ClsProbFold(left: Expression, right: Expression)
 
 object ClsProbFold {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cls_prob_fold", exprs => ClsProbFold(exprs(0), exprs(1)), "built-in")
+    Kernels.register(spark, "cls_prob_fold")(exprs => ClsProbFold(exprs(0), exprs(1)))
 }

@@ -88,6 +88,5 @@ case class DsirFold(left: Expression, right: Expression)
 
 object DsirFold {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dsir_fold", exprs => DsirFold(exprs(0), exprs(1)), "built-in")
+    Kernels.register(spark, "dsir_fold")(exprs => DsirFold(exprs(0), exprs(1)))
 }

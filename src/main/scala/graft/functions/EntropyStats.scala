@@ -86,6 +86,5 @@ case class EntropyStats(child: Expression) extends UnaryExpression {
 object EntropyStats {
   /** Register `entropy_stats(tokens)` (stateless — a fixed name). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "entropy_stats", exprs => EntropyStats(exprs.head), "built-in")
+    Kernels.register(spark, "entropy_stats")(exprs => EntropyStats(exprs.head))
 }

@@ -68,9 +68,7 @@ case class ShingleJoin(child: Expression, n: Int) extends UnaryExpression {
 object ShingleJoin {
   def register(spark: org.apache.spark.sql.SparkSession, n: Int): String = {
     val name = s"shingle_join_$n"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => ShingleJoin(exprs.head, n), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => ShingleJoin(exprs.head, n))
   }
 }
 
@@ -124,9 +122,7 @@ case class PortableHashArr(child: Expression, mod: Long) extends UnaryExpression
 object PortableHashArr {
   def register(spark: org.apache.spark.sql.SparkSession, mod: Long): String = {
     val name = s"portable_hash_arr_$mod"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PortableHashArr(exprs.head, mod), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => PortableHashArr(exprs.head, mod))
   }
 }
 
@@ -182,13 +178,12 @@ case class BandFold(child: Expression, bands: Int, rowsPerBand: Int,
 object BandFold {
   def register(spark: org.apache.spark.sql.SparkSession, bands: Int,
                rowsPerBand: Int, prime: Long): String = {
-    // The registry is last-writer-wins session-wide, so every defining
-    // constant must be part of the name — two pipelines with different
-    // primes must not share one binding.
+    // The session keeps the first kernel registered under a name
+    // (Kernels), so every defining constant must be part of the name — two
+    // pipelines with different primes must not share one binding.
     val name = s"band_fold_${bands}_${rowsPerBand}_$prime"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => BandFold(exprs.head, bands, rowsPerBand, prime), "built-in")
-    name
+    Kernels.register(spark, name)(
+      exprs => BandFold(exprs.head, bands, rowsPerBand, prime))
   }
 }
 
@@ -247,17 +242,15 @@ object MinhashSig {
   def register(spark: org.apache.spark.sql.SparkSession,
                params: Seq[(Long, Long)], prime: Long): String = {
     // Name carries every defining constant (perm count, prime, and a digest
-    // of the permutation params) — createOrReplaceTempFunction is
-    // last-writer-wins session-wide, so differently-seeded registrations
-    // must land on distinct names.
+    // of the permutation params) — the session keeps the first kernel
+    // registered under a name (Kernels), so differently-seeded
+    // registrations must land on distinct names.
     val paramsDigest =
       (params.foldLeft(17L) { case (h, (a, b)) => (h * 31 + a) * 31 + b }
         & Long.MaxValue)
     val name = s"minhash_sig_${params.length}_${prime}_$paramsDigest"
     val as = params.map(_._1).toArray
     val bs = params.map(_._2).toArray
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => MinhashSig(exprs.head, as, bs, prime), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => MinhashSig(exprs.head, as, bs, prime))
   }
 }

@@ -84,13 +84,12 @@ case class NgramSetHits(left: Expression, right: Expression, n: Int)
 
 object NgramSetHits {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_set_hits", { exprs =>
-        val n = exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"ngram_set_hits: n must be an integer literal, got $other")
-        }
-        NgramSetHits(exprs(0), exprs(1), n)
-      }, "built-in")
+    Kernels.register(spark, "ngram_set_hits") { exprs =>
+      val n = exprs(2) match {
+        case Literal(v: Int, IntegerType) => v
+        case other => throw new IllegalArgumentException(
+          s"ngram_set_hits: n must be an integer literal, got $other")
+      }
+      NgramSetHits(exprs(0), exprs(1), n)
+    }
 }

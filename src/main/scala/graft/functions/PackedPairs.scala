@@ -107,8 +107,6 @@ object PackedSkipPairs {
   def register(spark: org.apache.spark.sql.SparkSession,
                vocab: IndexedSeq[String]): String = {
     val name = s"packed_skip_pairs_${vocab.length}_${vocab.hashCode.toHexString}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PackedSkipPairs(exprs.head, vocab), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => PackedSkipPairs(exprs.head, vocab))
   }
 }

@@ -92,8 +92,8 @@ case class PercolateScores(child: Expression,
 object PercolateScores {
   /** Register a percolator over the collected standing queries (ordered:
     * query index i = position in `queries`). The name carries a digest of
-    * the fitted state — createOrReplaceTempFunction is last-writer-wins
-    * session-wide, so differently-fitted percolators must land on
+    * the fitted state — the session keeps the first kernel registered
+    * under a name, so differently-fitted percolators must land on
     * distinct names (the MinhashSig discipline).
     */
   def register(spark: org.apache.spark.sql.SparkSession,
@@ -112,8 +112,6 @@ object PercolateScores {
     val digest = (ts.foldLeft(17L)(_ * 31 + _.hashCode) * 31 +
       vs.foldLeft(17L)((h, v) => v.foldLeft(h)(_ * 31 + _))) & Long.MaxValue
     val name = s"percolate_scores_${nq}_${ts.length}_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PercolateScores(exprs.head, ts, vs, nq), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => PercolateScores(exprs.head, ts, vs, nq))
   }
 }

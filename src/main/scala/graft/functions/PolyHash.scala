@@ -63,6 +63,5 @@ object PolyHash {
     * SQL-registry + expr is the supported route).
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head), "built-in")
+    Kernels.register(spark, "poly_hash")(exprs => PolyHash(exprs.head))
 }

@@ -105,13 +105,12 @@ object ShingleArray {
   }
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_array", { exprs =>
-        val n = exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"shingle_array: n must be an integer literal, got $other")
-        }
-        ShingleArray(exprs(0), n)
-      }, "built-in")
+    Kernels.register(spark, "shingle_array") { exprs =>
+      val n = exprs(1) match {
+        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
+        case other => throw new IllegalArgumentException(
+          s"shingle_array: n must be an integer literal, got $other")
+      }
+      ShingleArray(exprs(0), n)
+    }
 }

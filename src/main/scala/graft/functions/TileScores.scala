@@ -90,8 +90,6 @@ case class TileScores(child: Expression, b: Int) extends UnaryExpression {
 object TileScores {
   def register(spark: org.apache.spark.sql.SparkSession, b: Int): String = {
     val name = s"tile_scores_$b"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => TileScores(exprs.head, b), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => TileScores(exprs.head, b))
   }
 }

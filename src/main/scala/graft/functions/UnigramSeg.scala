@@ -118,8 +118,8 @@ case class UnigramSeg(child: Expression,
 
 object UnigramSeg {
   /** Register a fitted segmenter; the name carries a digest of the fitted
-    * state (the Bm25Scores/PercolateScores discipline —
-    * createOrReplaceTempFunction is last-writer-wins, so differently-fitted
+    * state (the Bm25Scores/PercolateScores discipline — the session keeps
+    * the first kernel registered under a name, so differently-fitted
     * models must land on distinct names).
     */
   def register(spark: org.apache.spark.sql.SparkSession,
@@ -128,8 +128,7 @@ object UnigramSeg {
       (h * 31 + p.hashCode) * 31 + lp
     } * 31 + maxLen * 31 + unkLp) & Long.MaxValue
     val name = s"unigram_seg_${pieces.length}_$digest"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => UnigramSeg(exprs.head, pieces, maxLen, unkLp), "built-in")
-    name
+    Kernels.register(spark, name)(
+      exprs => UnigramSeg(exprs.head, pieces, maxLen, unkLp))
   }
 }

@@ -75,8 +75,7 @@ case class DotProd(left: Expression, right: Expression) extends BinaryExpression
 
 object DotProd {
   def register(spark: org.apache.spark.sql.SparkSession): String = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_prod", exprs => DotProd(exprs(0), exprs(1)), "built-in")
+    Kernels.register(spark, "dot_prod")(exprs => DotProd(exprs(0), exprs(1)))
     "dot_prod"
   }
 }
@@ -180,9 +179,8 @@ case class SliceL2(a: Expression, b: Expression,
 
 object SliceL2 {
   def register(spark: org.apache.spark.sql.SparkSession): String = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "slice_l2", exprs => SliceL2(exprs(0), exprs(1), exprs(2), exprs(3)),
-      "built-in")
+    Kernels.register(spark, "slice_l2")(
+      exprs => SliceL2(exprs(0), exprs(1), exprs(2), exprs(3)))
     "slice_l2"
   }
 }

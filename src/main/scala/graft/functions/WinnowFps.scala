@@ -117,14 +117,13 @@ object WinnowFps {
             s"got ${other.dataType.catalogString} (foldable=${other.foldable})")),
         cause = None)
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", exprs => {
-        if (exprs.length != 3) throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "USER_RAISED_EXCEPTION",
-          messageParameters = Map("errorMessage" ->
-            s"winnow_fps expects (text, k, w) — 3 arguments, got ${exprs.length}"),
-          cause = None)
-        WinnowFps(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "w"))
-      }, "built-in")
+    Kernels.register(spark, "winnow_fps") { exprs =>
+      if (exprs.length != 3) throw new org.apache.spark.sql.AnalysisException(
+        errorClass = "USER_RAISED_EXCEPTION",
+        messageParameters = Map("errorMessage" ->
+          s"winnow_fps expects (text, k, w) — 3 arguments, got ${exprs.length}"),
+        cause = None)
+      WinnowFps(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "w"))
+    }
   }
 }

@@ -132,9 +132,7 @@ object WordPieceLmm {
     val name = "wordpiece_lmm_" +
       s"${headPieces.size}_${contPieces.size}_" +
       (headPieces, contPieces).hashCode.toHexString
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WordPieceLmm(exprs.head, headPieces, contPieces),
-      "built-in")
-    name
+    Kernels.register(spark, name)(
+      exprs => WordPieceLmm(exprs.head, headPieces, contPieces))
   }
 }

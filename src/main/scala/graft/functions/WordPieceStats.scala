@@ -119,8 +119,6 @@ object WordPieceStats {
   def register(spark: org.apache.spark.sql.SparkSession,
                merges: Seq[(String, String)]): String = {
     val name = s"wordpiece_stats_${merges.hashCode.toHexString}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => WordPieceStats(exprs.head, merges), "built-in")
-    name
+    Kernels.register(spark, name)(exprs => WordPieceStats(exprs.head, merges))
   }
 }

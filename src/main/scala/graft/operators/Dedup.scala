@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -528,23 +529,10 @@ object Dedup {
 
   // --------------------------------------------------- duplicate clustering
 
-  /** Connected components. Labels every node with the MINIMUM id of its
-    * component. Two paths: a bounded driver union-find for
-    * metadata-scale edge sets (below), and a distributed alternating
-    * large-star/small-star contraction (Kiveris et al., SoCC 2014) above
-    * the ceiling — each star round is one partial-aggregated groupBy plus
-    * one equi-join over an edge set that CONTRACTS toward one star per
-    * component, so round cost shrinks as the fixpoint nears and
-    * convergence is O(log² n) rounds on any graph shape. Only
-    * edge-touched nodes enter either path; untouched nodes are singletons
-    * reattached at the end, so cost scales with the candidate-pair graph,
-    * not the corpus. The driver reads one fingerprint scalar per
-    * ALTERNATION (two star ops); localCheckpoint cuts the growing lineage.
-    */
   /** Driver-path ceiling for [[connectedComponents]]: edge sets at or
     * under this collect to a driver union-find (one bounded take instead
     * of the iterated label-propagation jobs); larger graphs run the
-    * distributed pointer-jumping loop unchanged. 1M edges ≈ ~50 MB of
+    * distributed star-contraction loop. 1M edges ≈ ~50 MB of
     * driver rows — the VocabGuard/CoocMaxVocab bounded-collect posture.
     * Conf `graft.cc.driver_max_edges` overrides (0 disables, for A/B).
     */
@@ -572,116 +560,183 @@ object Dedup {
     parent.keysIterator.map(id => id -> find(id)).toMap
   }
 
+  /** Connected components. Labels every node with the MINIMUM id of its
+    * component. Only edge-touched nodes enter the computation; untouched
+    * nodes are singletons reattached at the end, so cost scales with the
+    * candidate-pair graph, not the corpus.
+    *
+    * Two paths. A bounded take decides (guide §1.2: don't run a
+    * distributed fixpoint for a metadata-scale graph): an edge set at or
+    * under [[CcDriverMaxEdges]] is labelled by a driver union-find and the
+    * labels broadcast back — one job. A larger one (the 100 TB posture)
+    * runs the alternating large-star/small-star contraction (Kiveris et
+    * al., "Connected Components in MapReduce and Beyond", SoCC 2014) as
+    * plain RDD passes over `(node, neighbour)` pairs:
+    *
+    *  - Each star op is ONE shuffle. Its records are hash-partitioned by
+    *    node and sorted by (node, neighbour) within the partition, so the
+    *    op is one streaming pass: a node's first record carries its
+    *    minimum neighbour and equal neighbours arrive adjacent (duplicate
+    *    edges drop there). A partition holds the current node, its minimum
+    *    and the last neighbour seen — never a neighbour list, so a giant
+    *    component's hub costs no memory; the shuffle's sort spills.
+    *  - Each ALTERNATION (small star, then large star) is ONE Spark job:
+    *    the action that localCheckpoints its output also folds the
+    *    output's fingerprint, so the lineage never grows and the driver
+    *    reads one scalar triple per alternation. Two nodes may emit the
+    *    same edge; the next pass's sort drops the repeat, and the
+    *    fingerprint counts it. A pass depends only on its input's edge
+    *    SET, so two equal consecutive outputs are a fixpoint, and a set
+    *    fixpoint repeats as a multiset one alternation later at most.
+    *  - No Catalyst plan runs inside the loop: no AQE stage jobs and no
+    *    generated classes. Spark's codegen cache holds 100 entries; a
+    *    DataFrame loop added 29 of them to a corpus journey and pushed
+    *    every warm journey into recompiling (README, scale-posture notes).
+    *
+    * At the fixpoint the edge set IS the labeling: one star per component,
+    * every non-minimum node pointing at the component minimum. The
+    * DataFrame form of the same loop is kept in `src/test` as
+    * `ConnectedComponentsTwin`; TextDedupSpec pins the union-find, this
+    * loop and the twin equal.
+    */
   def connectedComponents(nodes: DataFrame, edges: DataFrame, idCol: String,
                           maxIter: Int = 30): DataFrame = {
     val spark = edges.sparkSession
-    // Stats-gated driver path (guide §1.2: don't run a distributed
-    // fixpoint for a metadata-scale graph): verified near-dup edge sets
-    // are candidate-bounded and usually tiny relative to the corpus, and
-    // the distributed loop below costs one driver action per round (the
-    // convergence probe) plus an isEmpty probe. A bounded take decides:
-    // at or under the ceiling, label with a driver union-find and
-    // broadcast the labels back — same fixpoint, one job. Over the
-    // ceiling (the 100 TB posture), fall through to the distributed loop.
+    import spark.implicits._
     // The gated edges checkpoint lazily BEFORE the take: on overflow the
     // loop reads the blocks the take materialized, so the edge lineage
     // (minhash, banding, verify shuffles) runs once, not twice.
     val gated = edges.select(col("id_a"), col("id_b"))
       .localCheckpoint(eager = false)
-    DriverGate.take(gated, "graft.cc.driver_max_edges", CcDriverMaxEdges)
-      .foreach { taken =>
-        val labels = unionFindMinLabels(
-          taken.map(r => (r.getLong(0), r.getLong(1))))
-        import spark.implicits._
+    val labels = DriverGate.take(gated, "graft.cc.driver_max_edges",
+        CcDriverMaxEdges) match {
+      case Some(taken) =>
+        val uf = unionFindMinLabels(taken.map(r => (r.getLong(0), r.getLong(1))))
         val labelsDf =
-          if (labels.isEmpty)
-            spark.emptyDataset[(Long, Long)].toDF(idCol, "__cc_label")
-          else labels.toSeq.toDF(idCol, "__cc_label")
-        return nodes.select(col(idCol))
-          .join(org.apache.spark.sql.functions.broadcast(labelsDf),
-            Seq(idCol), "left")
-          .select(col(idCol),
-            coalesce(col("__cc_label"), col(idCol)).as("cluster_id"))
-      }
-    // Distributed path (the 100 TB posture): alternating LARGE-STAR /
-    // SMALL-STAR edge contraction (Kiveris et al., "Connected Components
-    // in MapReduce and Beyond", SoCC 2014) replaces the r15 min-label
-    // propagation loop. Each star op is ONE partial-aggregated groupBy
-    // plus ONE equi-join over a CONTRACTING edge set — the old loop paid
-    // three joins over the FIXED symmetric edge frame every round — and
-    // the driver probes convergence once per ALTERNATION (two star ops),
-    // not once per round: half the driver actions for the same O(log²n)
-    // round bound. At the fixpoint the edge set IS the labeling: one star
-    // per component, every non-minimum node pointing at the component
-    // minimum (exactly the union-find/min-label fixpoint; TextDedupSpec
-    // pins all three paths equal).
-    def largeStar(e: DataFrame): DataFrame = {
-      // for every node: connect each STRICTLY LARGER neighbor to the
-      // minimum of the closed neighborhood (the min never exceeds the
-      // node, so output edges stay canonical u > v and self-loop-free)
-      val sym = e.unionByName(e.select(col("v").as("u"), col("u").as("v")))
-      val m = sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      // no distinct here: duplicates can't change smallStar's group minima
-      // and its final distinct dedups the pair's output — one fewer
-      // exchange per alternation (measured 53→62 job regression on
-      // 64-chains with the extra distinct; see OPTIMIZATION_r17.md)
-      sym.join(m, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
+          if (uf.isEmpty) spark.emptyDataset[(Long, Long)].toDF(idCol, "__cc_label")
+          else uf.toSeq.toDF(idCol, "__cc_label")
+        org.apache.spark.sql.functions.broadcast(labelsDf)
+      case None =>
+        starContraction(gated, maxIter).toDF(idCol, "__cc_label")
     }
-    def smallStar(e: DataFrame): DataFrame = {
-      // canonical input (u > v): connect every smaller neighbor, and the
-      // node itself, to the group minimum — the row carrying the minimum
-      // re-emits the (node, min) edge, the rest re-point to it
-      val m = e.groupBy(col("u")).agg(min(col("v")).as("m"))
-      e.join(m, "u")
-        .select(
-          when(col("v") === col("m"), col("u")).otherwise(col("v")).as("u"),
-          col("m").as("v"))
-        .distinct()
+    nodes.select(col(idCol))
+      .join(labels, Seq(idCol), "left")
+      .select(col(idCol), coalesce(col("__cc_label"), col(idCol)).as("cluster_id"))
+  }
+
+  /** The distributed branch of [[connectedComponents]]: `(node, label)`
+    * for every edge-touched node that is not its component's minimum.
+    */
+  private def starContraction(gated: DataFrame, maxIter: Int): RDD[(Long, Long)] = {
+    val sc = gated.sparkSession.sparkContext
+    val raw = gated.queryExecution.toRdd.flatMap { r =>
+      // a NULL endpoint or a self-loop links nothing
+      if (r.isNullAt(0) || r.isNullAt(1) || r.getLong(0) == r.getLong(1)) None
+      else Some((math.max(r.getLong(0), r.getLong(1)),
+        math.min(r.getLong(0), r.getLong(1))))
     }
-    def fingerprint(e: DataFrame): (Long, Long, java.math.BigDecimal) = {
-      // one scalar action per alternation: (edge count, xor fold, sum
-      // fold) of a DISTINCT edge set — equal across alternations means both
-      // star ops are at their joint fixpoint. Two independent folds: an xor
-      // collision between distinct same-size edge sets would stop on a
-      // non-fixpoint with silently wrong labels, so the exact sum of a
-      // second hash (the swapped pair; decimal, since a Long sum overflows
-      // under ANSI mode) must collide at the same time
-      val r = e.agg(count(lit(1)).as("n"),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("h"),
-        coalesce(sum(xxhash64(col("v"), col("u")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("s")).head()
-      (r.getLong(0), r.getLong(1), r.getDecimal(2))
+    val byNode = new NodePartitioner(
+      math.max(sc.defaultParallelism, raw.getNumPartitions))
+    def sorted(pairs: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      pairs.map(p => (p, null)).repartitionAndSortWithinPartitions(byNode)
+        .map(_._1)
+    // canonical edges (u > v) → one alternation's output, canonical again
+    def alternation(e: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+      val small = sorted(e).mapPartitions(smallStar)
+      sorted(small.flatMap { case (u, v) => Iterator((u, v), (v, u)) })
+        .mapPartitions(largeStar)
     }
-    var cur = gated
-      .select(greatest(col("id_a"), col("id_b")).as("u"),
-        least(col("id_a"), col("id_b")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    var fp = fingerprint(cur)
-    // no edges → every node is a singleton (surfaced by the pre-collapse
-    // path, where a corpus of exact-dup groups can yield zero near-dup
-    // edges); otherwise alternate until the edge set stabilizes
-    var converged = fp._1 == 0L
+    var cur = raw
+    var fp: Option[(Long, Long, BigInt)] = None
+    var converged = false
     var iter = 0
     while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(cur)).localCheckpoint(eager = false)
-      val nfp = fingerprint(next)
-      converged = nfp == fp
-      fp = nfp
+      val next = alternation(cur).localCheckpoint()
+      val nfp = sc.runJob(next, edgeFingerprint _).reduce(mergeFingerprints)
+      // no edges → every node is a singleton; otherwise alternate until
+      // the fingerprint repeats
+      converged = nfp._1 == 0L || fp.contains(nfp)
+      if (cur ne raw) cur.unpersist(blocking = false)
+      fp = Some(nfp)
       cur = next
       iter += 1
     }
     require(converged,
       s"connectedComponents did not converge in $maxIter alternations")
-    nodes.select(col(idCol))
-      .join(cur.select(col("u").as(idCol), col("v").as("label")),
-        Seq(idCol), "left")
-      .select(col(idCol), coalesce(col("label"), col(idCol)).as("cluster_id"))
+    cur
   }
+
+  /** Hash partitioning on a record's NODE — the first id of its
+    * `(node, neighbour)` key — so all of a node's records meet in one
+    * partition, where the shuffle's sort orders them by neighbour.
+    */
+  private final class NodePartitioner(val numPartitions: Int)
+      extends org.apache.spark.Partitioner {
+    def getPartition(key: Any): Int = Math.floorMod(
+      java.lang.Long.hashCode(key.asInstanceOf[(Long, Long)]._1), numPartitions)
+    override def equals(o: Any): Boolean = o match {
+      case p: NodePartitioner => p.numPartitions == numPartitions
+      case _ => false
+    }
+    override def hashCode: Int = numPartitions
+  }
+
+  /** Small star over `(u, v)` records, u > v, sorted by (u, v): each node
+    * links itself and every smaller neighbour to its minimum neighbour m —
+    * the record (u, m) re-emits, the rest re-point to m. Output edges stay
+    * canonical and self-loop-free.
+    */
+  private[graft] def smallStar(sorted: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var node, m, last = 0L
+    var first = true
+    sorted.flatMap { case (u, v) =>
+      if (first || u != node) {
+        first = false; node = u; m = v; last = v
+        Some((u, v))
+      } else if (v == last) None
+      else { last = v; Some((v, m)) }
+    }
+  }
+
+  /** Large star over symmetric `(u, v)` records sorted by (u, v): each
+    * node connects every STRICTLY LARGER neighbour to the minimum of its
+    * closed neighbourhood. The minimum never exceeds the node, so output
+    * edges stay canonical (larger id first) and self-loop-free.
+    */
+  private[graft] def largeStar(sorted: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var node, m, last = 0L
+    var first = true
+    sorted.flatMap { case (u, v) =>
+      val fresh = first || u != node
+      if (fresh) { first = false; node = u; m = math.min(u, v) }
+      if (!fresh && v == last) None
+      else { last = v; if (v > u) Some((v, m)) else None }
+    }
+  }
+
+  /** One partition's edge fingerprint: (edge count, xor of
+    * xxhash64(u, v), exact sum of xxhash64(v, u)) — Spark's `xxhash64`
+    * (seed 42) on the pair and on the swapped pair. Two independent
+    * folds: an xor collision between different same-size edge sets would
+    * stop on a non-fixpoint with silently wrong labels, so the sum of a
+    * second hash must collide at the same time.
+    */
+  private[graft] def edgeFingerprint(
+      edges: Iterator[(Long, Long)]): (Long, Long, BigInt) = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64.hashLong
+    var n, x = 0L
+    var s = java.math.BigInteger.ZERO
+    edges.foreach { case (u, v) =>
+      n += 1
+      x ^= hashLong(v, hashLong(u, 42L))
+      s = s.add(java.math.BigInteger.valueOf(hashLong(u, hashLong(v, 42L))))
+    }
+    (n, x, BigInt(s))
+  }
+
+  private def mergeFingerprints(a: (Long, Long, BigInt),
+                                b: (Long, Long, BigInt)): (Long, Long, BigInt) =
+    (a._1 + b._1, a._2 ^ b._2, a._3 + b._3)
 
   /** Duplicate clusters: connected components over the verified minhash
     * near-dup pairs (jacc ≥ threshold). cluster_id = min doc id of the

@@ -146,14 +146,17 @@ object Posture {
   val InitialPartitionsKey =
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
-  /** Apply the per-plan posture to `df`'s session just before an action —
-    * the one-call pattern every entry point (Bench, Cli) shares. A
-    * classification failure LOGS and falls back to core count (a silent
-    * fallback would surface only as an unexplained benchmark shift).
-    * Returns the applied partition count.
+  /** Run `action` under the per-plan posture of `df` — the one-call
+    * pattern every entry point (Bench, Cli) shares. The session's own
+    * value of [[InitialPartitionsKey]] (or its absence) comes back when
+    * `action` ends, also when it throws: a posture set for one plan must
+    * not leak into the plan-build jobs of the next action in the session
+    * (a corpus write's 1024-partition posture used to tax every later
+    * journey's eager jobs). A classification failure LOGS and falls back
+    * to core count (a silent fallback would surface only as an
+    * unexplained benchmark shift).
     */
-  def applyTo(df: DataFrame, cores: Int,
-              label: String = "plan"): Int = {
+  def during[T](df: DataFrame, cores: Int, label: String = "plan")(action: => T): T = {
     val parts =
       try initialShufflePartitions(df, cores)
       catch {
@@ -162,7 +165,11 @@ object Posture {
             s"[posture] $label: classification failed (${e.getClass.getSimpleName}: ${e.getMessage}); falling back to $cores")
           cores
       }
-    df.sparkSession.conf.set(InitialPartitionsKey, parts.toString)
-    parts
+    val conf = df.sparkSession.conf
+    val prior = conf.getOption(InitialPartitionsKey)
+    conf.set(InitialPartitionsKey, parts.toString)
+    try action
+    finally prior.fold(conf.unset(InitialPartitionsKey))(
+      conf.set(InitialPartitionsKey, _))
   }
 }

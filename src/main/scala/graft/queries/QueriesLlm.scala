@@ -810,7 +810,7 @@ object QueriesLlm {
     // instead of dropping near-duplicates, every doc carries weight
     // 1/cluster_size, so a cluster's total training mass stays 1 however
     // many copies the crawl returned. Rides dupClusters unchanged — same
-    // bucket-bounded candidates, same pointer-jumping closure.
+    // bucket-bounded candidates, same connected-components closure.
     "dedup_soft_weights" -> { (s, d) =>
       Dedup.dupClusters(documents(s, d), "text", "doc_id")
         .select(col("doc_id"), col("cluster_id"),

@@ -115,18 +115,22 @@ class PostureSpec extends SparkSpec {
         |    transforms:
         |      - { operation: rolling, field: value, window: 3, statistic: mean, to: m3 }
         |""".stripMargin)
-    // sentinel no rule ever produces: the materialize must overwrite it
+    // sentinel no rule ever produces: the write must run under the
+    // plan's own posture, and the sentinel must come back after it
     spark.conf.set(Posture.InitialPartitionsKey, "7")
-    Cli.materializeStreams(spark, sortedCfg.toString, data.toString,
-      root.resolve("serve_sorted").toString, out = sink)
+    val (_, sortedRun) = SqlExecutions.started(spark, Posture.InitialPartitionsKey) {
+      Cli.materializeStreams(spark, sortedCfg.toString, data.toString,
+        root.resolve("serve_sorted").toString, out = sink)
+    }
     val sortedProject = graft.pipeline.Config.parseProject(
       Files.readString(sortedCfg))
     val sortedFrame = graft.pipeline.ConfigRuntime
       .resolver(spark, data.toString, sortedProject).stream("ordered")
     assert(Posture.sortDominated(Posture.plannedWithExchanges(sortedFrame)),
       "fixture must classify sort-dominated")
-    assert(spark.conf.get(Posture.InitialPartitionsKey) == cores.toString,
+    assert(sortedRun.filter(_.writes).map(_.conf) == Seq(Some(cores.toString)),
       "a Cli materialize of a sort-dominated project plans core-count partitions")
+    assert(spark.conf.get(Posture.InitialPartitionsKey) == "7")
 
     // a WIDE project: the dataset journey ends in joins/aggregates
     val wideCfg = root.resolve("wide.yaml")
@@ -143,9 +147,10 @@ class PostureSpec extends SparkSpec {
         |  sample: { cadence: 1h, keys: [user_id] }
         |  features: [ { id: v, stream: s, field: value } ]
         |""".stripMargin)
-    spark.conf.set(Posture.InitialPartitionsKey, "7")
-    Cli.materialize(spark, wideCfg.toString, data.toString,
-      root.resolve("serve_wide").toString, out = sink)
+    val (_, wideRun) = SqlExecutions.started(spark, Posture.InitialPartitionsKey) {
+      Cli.materialize(spark, wideCfg.toString, data.toString,
+        root.resolve("serve_wide").toString, out = sink)
+    }
     val wideProject = graft.pipeline.Config.parseProject(
       Files.readString(wideCfg))
     val wideFrame = graft.pipeline.ConfigRuntime
@@ -153,8 +158,54 @@ class PostureSpec extends SparkSpec {
     assert(!Posture.sortDominated(Posture.plannedWithExchanges(wideFrame)),
       "fixture must classify wide")
     val expected = Posture.initialShufflePartitions(wideFrame, cores)
-    assert(spark.conf.get(Posture.InitialPartitionsKey) == expected.toString,
+    assert(wideRun.filter(_.writes).map(_.conf) == Seq(Some(expected.toString)),
       "a Cli materialize of a wide project plans volume-scaled partitions")
+    assert(spark.conf.get(Posture.InitialPartitionsKey) == "7")
+    spark.conf.unset(Posture.InitialPartitionsKey)
+  }
+
+  test("a materialize's posture does not leak into the next journey's plan build") {
+    import java.nio.file.Files
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_posture_scope")
+    val data = root.resolve("data")
+    Seq.tabulate(40)(i => (i.toLong,
+      s"page $i about ${i % 4} tidal pools sea stars and the river bank"))
+      .toDF("doc_id", "text")
+      .write.parquet(data.resolve("docs.parquet").toString)
+    val cfg = root.resolve("corpus.yaml")
+    Files.writeString(cfg,
+      """sources:
+        |  - id: docs
+        |    loader: { transport: fs, path: docs.parquet, reader: { format: parquet } }
+        |corpus:
+        |  source: docs
+        |  id: doc_id
+        |  text: text
+        |  steps:
+        |    - { step: dedup_exact }
+        |    - { step: dedup_fuzzy, threshold: 0.5 }
+        |""".stripMargin)
+    val sink = new java.io.PrintStream(java.io.OutputStream.nullOutputStream())
+    def journey(i: Int): Seq[SqlExecutions.Started] =
+      SqlExecutions.started(spark, Posture.InitialPartitionsKey) {
+        Cli.materialize(spark, cfg.toString, data.toString,
+          root.resolve(s"serve$i").toString, out = sink)
+      }._2
+    spark.conf.unset(Posture.InitialPartitionsKey)
+    val first = journey(0)
+    val second = journey(1)
+    for ((run, name) <- Seq(first -> "first", second -> "second")) {
+      val (planBuild, rest) = run.span(!_.writes)
+      assert(planBuild.nonEmpty && rest.headOption.exists(_.writes),
+        s"$name: plan-build executions, then the write: $run")
+      // the session never set the key: plan build runs on its default
+      assert(planBuild.forall(_.conf.isEmpty),
+        s"$name journey's plan build saw a leaked posture: $run")
+      assert(rest.head.conf.nonEmpty, s"$name: the write runs under the posture")
+    }
+    assert(spark.conf.getOption(Posture.InitialPartitionsKey).isEmpty,
+      "the session's value comes back after the journey")
   }
 
   test("initial partitions: cores for sort plans, volume-clamped for wide") {

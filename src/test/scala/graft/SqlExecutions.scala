@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
@@ -8,6 +9,7 @@ import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Records the physical plan of every SQL execution `body` runs, for specs
@@ -31,6 +33,34 @@ object SqlExecutions extends AdaptiveSparkPlanHelper {
       ListenerBusDrain(spark.sparkContext)
       (out, scala.jdk.CollectionConverters.IterableHasAsScala(plans).asScala.toSeq)
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  /** One root SQL execution `body` started, in start order: the value SQL
+    * conf `key` had for it (None when the session left it unset) and
+    * whether it writes files (a `Cli` write, as opposed to a plan-build
+    * job).
+    */
+  final case class Started(conf: Option[String], writes: Boolean)
+
+  def started[T](spark: SparkSession, key: String)(body: => T): (T, Seq[Started]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Started)]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.rootExecutionId.forall(_ == s.executionId) =>
+          seen.add(s.executionId -> Started(s.modifiedConfigs.get(key),
+            s.physicalPlanDescription.contains("InsertIntoHadoopFsRelation")))
+        case _ =>
+      }
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext)
+      (out, scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala
+        .toSeq.sortBy(_._1).map(_._2))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** Every shuffle exchange of `plan`, subqueries included: its hash keys

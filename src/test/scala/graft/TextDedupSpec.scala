@@ -308,35 +308,134 @@ class TextDedupSpec extends SparkSpec {
     } finally spark.conf.unset("graft.cc.driver_max_edges")
   }
 
-  test("distributed star-contraction CC equals the driver union-find on random graphs") {
-    // the r17 large-star/small-star loop must reach the identical
-    // min-label fixpoint as the driver path on arbitrary graph shapes:
-    // random sparse graphs (mixed component sizes, cross-links, isolated
-    // nodes) across several seeds, plus a 64-node path (high diameter —
-    // the contraction must converge well inside maxIter)
-    import spark.implicits._
-    val cases: Seq[Array[(Long, Long)]] =
-      Seq(7L, 21L, 1031L).map { seed =>
-        val rnd = new scala.util.Random(seed)
-        Array.fill(120)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
-          .filter { case (a, b) => a != b }
-      } :+ (1L until 64L).map(i => (i, i + 1)).toArray
-    for (es <- cases) {
-      val nodeIds = (0L until 95L).toSeq
-      val nodes = nodeIds.toDF("doc_id")
-      val edges = es.toSeq.toDF("id_a", "id_b")
-      val uf = Dedup.unionFindMinLabels(es)
-      val expect = nodeIds.map(id => id -> uf.getOrElse(id, id)).toMap
-      spark.conf.set("graft.cc.driver_max_edges", "0")
-      try {
-        val rows = Dedup.connectedComponents(nodes, edges, "doc_id").collect()
-        // exactly one label row per node (a non-star fixpoint would fan
-        // the final attach join out)
-        assert(rows.length == nodeIds.size)
-        val dist = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-        assert(dist == expect)
-      } finally spark.conf.unset("graft.cc.driver_max_edges")
+  /** `body` under the distributed CC branch (the driver gate's cap
+    * `cap`; 0 disables the take), with the Spark jobs it started in start
+    * order: true for a job that ran inside a SQL execution.
+    */
+  private def distributedCc[T](cap: Long = 0L)(body: => T): (T, Seq[Boolean]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Boolean)]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(e.jobId -> (e.properties != null &&
+          e.properties.getProperty("spark.sql.execution.id") != null))
     }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    spark.conf.set("graft.cc.driver_max_edges", cap.toString)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      (out, scala.jdk.CollectionConverters.IterableHasAsScala(jobs).asScala
+        .toSeq.sortBy(_._1).map(_._2))
+    } finally {
+      spark.conf.unset("graft.cc.driver_max_edges")
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private def ccLabels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val rows = df.collect()
+    val labels = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // exactly one label row per node (a non-star fixpoint would fan the
+    // final attach join out)
+    assert(rows.length == labels.size, "one label row per node")
+    labels
+  }
+
+  /** Edge lists the distributed loop must label exactly as the union-find
+    * does: random sparse graphs (mixed component sizes, cross-links,
+    * isolated nodes), a 64-node path, a 200-node chain over shuffled ids
+    * (high diameter, ≥ 4 alternations), self-loops with duplicate and
+    * reversed edges, and no edges at all.
+    */
+  private val ccCases: Seq[(String, Array[(Long, Long)])] =
+    Seq(7L, 21L, 1031L).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      s"random $seed" -> Array.fill(120)(
+        (rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
+        .filter { case (a, b) => a != b }
+    } ++ Seq(
+      "path 64" -> (1L until 64L).map(i => (i, i + 1)).toArray,
+      "shuffled chain 200" -> {
+        val ids = new scala.util.Random(5).shuffle((0L until 200L).toVector)
+        ids.zip(ids.tail).toArray
+      },
+      "self-loops, duplicates, reversals" -> Array((3L, 3L), (1L, 2L),
+        (2L, 1L), (1L, 2L), (2L, 5L), (5L, 2L), (7L, 7L), (8L, 9L), (9L, 8L)),
+      "empty" -> Array.empty[(Long, Long)])
+
+  test("distributed star-contraction CC equals the driver union-find on random graphs") {
+    // the RDD large-star/small-star loop and its DataFrame twin must reach
+    // the identical min-label fixpoint as the driver path on every shape
+    import spark.implicits._
+    val nodeIds = (0L until 200L).toSeq
+    val nodes = nodeIds.toDF("doc_id")
+    for ((name, es) <- ccCases) {
+      val edges = es.toSeq.toDF("id_a", "id_b")
+      val uf = Dedup.unionFindMinLabels(es.filter { case (a, b) => a != b })
+      val expect = nodeIds.map(id => id -> uf.getOrElse(id, id)).toMap
+      val (dist, jobs) = distributedCc() {
+        ccLabels(Dedup.connectedComponents(nodes, edges, "doc_id"))
+      }
+      assert(dist == expect, name)
+      assert(ccLabels(ConnectedComponentsTwin.connectedComponents(
+        nodes, edges, "doc_id")) == expect, s"$name (twin)")
+      // the loop's jobs (one per alternation) carry no SQL execution
+      info(s"$name: ${jobs.count(!_)} alternations")
+      if (name == "shuffled chain 200")
+        assert(jobs.count(!_) >= 4, s"$name must need >= 4 alternations")
+    }
+  }
+
+  test("distributed CC: one job per alternation, no SQL plan or generated class in the loop") {
+    import spark.implicits._
+    // pairs only: the first alternation's output is already the star set,
+    // the second confirms it (alternations = 2)
+    val pairs = (0L until 40L).map(i => (10 * i, 10 * i + 1))
+    val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.toDF("doc_id")
+    val edges = pairs.toDF("id_a", "id_b")
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    // cap 1: the gate's take runs and overflows, as in the benchmark
+    distributedCc(cap = 1)(Dedup.connectedComponents(nodes, edges, "doc_id"))
+    val before = compiled.getCount
+    val (out, jobs) = distributedCc(cap = 1) {
+      Dedup.connectedComponents(nodes, edges, "doc_id")
+    }
+    assert(compiled.getCount == before, "no class compiled in the call")
+    val loop = jobs.dropWhile(identity)
+    assert(jobs.takeWhile(identity).nonEmpty, "the gate's take runs first")
+    assert(loop.nonEmpty && loop.forall(!_), s"no SQL job after the take: $jobs")
+    info(s"jobs: $jobs")
+    assert(loop.size <= 2 + 1, s"${loop.size} jobs for 2 alternations")
+    assert(ccLabels(out) == pairs.flatMap { case (a, b) =>
+      Seq(a -> a, b -> a) }.toMap)
+  }
+
+  test("distributed CC: the iteration cap throws the named error") {
+    import spark.implicits._
+    val edges = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException](distributedCc() {
+      Dedup.connectedComponents(Seq(1L).toDF("doc_id"), edges, "doc_id",
+        maxIter = 1)
+    })
+    assert(e.getMessage.contains(
+      "connectedComponents did not converge in 1 alternations"), e.getMessage)
+  }
+
+  test("distributed CC fingerprint: count, xor and exact sum of Spark's xxhash64") {
+    import spark.implicits._
+    // the fold the loop runs per alternation equals the Catalyst aggregate
+    // the DataFrame twin runs (duplicates included)
+    val es = Seq((5L, 1L), (9L, 2L), (5L, 1L), (Long.MaxValue, Long.MinValue),
+      (-3L, -7L))
+    val r = es.toDF("u", "v").agg(count(lit(1)),
+      bit_xor(xxhash64(col("u"), col("v"))),
+      sum(xxhash64(col("v"), col("u")).cast("decimal(38,0)"))).head()
+    val (n, x, s) = Dedup.edgeFingerprint(es.iterator)
+    assert((n, x, s) == ((r.getLong(0), r.getLong(1),
+      BigInt(r.getDecimal(2).toBigIntegerExact))))
+    assert(Dedup.edgeFingerprint(Iterator.empty) == ((0L, 0L, BigInt(0))))
   }
 
   test("union-find labels: cross-linked components collapse to the min id") {
