@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TimeFns
@@ -35,21 +34,20 @@ object Assembly {
     */
   def sequenceWindows(df: DataFrame, key: StreamKey, field: String,
                       windowSize: Int, stride: Int, to: String): DataFrame =
-    df.withColumn(to, sequenceWindow(key, col(field), windowSize, stride))
+    sequenceWindow(df, key, field, windowSize, stride, to)
       .where(col(to).isNotNull)
 
-  /** The window list of the last `windowSize` values on `key.w` on every
-    * row that emits a window (row number ≥ size, on the stride), NULL on
-    * every other row. A NULL value keeps its position in the list:
-    * `collect_list` skips NULLs, so each value is wrapped in a one-element
-    * array and the lists flattened.
+  /** `df` plus column `to`: the list of the last `windowSize` values of
+    * `field` in `key`'s order on every row that emits a window (row number
+    * ≥ size, on the stride), NULL on every other row. A NULL value keeps its
+    * position in the list. One [[OrderedScan]] step, so it rides the
+    * stream's own ordered pass.
     */
-  def sequenceWindow(key: StreamKey, value: Column, windowSize: Int,
-                     stride: Int): Column = {
-    val rn = row_number().over(key.w)
-    val frame = key.w.rowsBetween(-(windowSize - 1), 0)
-    when(rn >= windowSize && pmod(rn - windowSize, lit(stride)) === 0,
-      flatten(collect_list(array(value)).over(frame)))
+  def sequenceWindow(df: DataFrame, key: StreamKey, field: String,
+                     windowSize: Int, stride: Int, to: String): DataFrame = {
+    require(windowSize >= 1 && stride >= 1,
+      s"sequence of '$field': size and stride must be >= 1")
+    OrderedScan.withStep(df, key, Some(to))(c => SequenceStep(c(field), windowSize, stride))
   }
 
   /** Per-column scalar coverage counts — reference CoverageStatsAccumulator:
@@ -111,20 +109,36 @@ object Assembly {
     * (pipelines/dataset/split.py:27): r = (first 8 bytes of
     * sha256(seed|token) mod 2^53) / 2^53, bucketed by cumulative ratios.
     * Bit-identical to the reference for the same token string.
+    *
+    * `df` plus column `to`: CASE WHEN r < t1 THEN l1 … ELSE last END, the
+    * first bucket whose cumulative ratio exceeds r; a NULL token (NULL r)
+    * and an r past the last threshold take the last label. r is its own
+    * projection below the CASE, so each token is hashed once however many
+    * labels there are (the optimizer keeps an expensive expression that is
+    * read more than once in its own projection).
     */
-  def hashSplitLabel(token: Column, ratios: Seq[(String, Double)],
-                     seed: Int = 42): Column = {
+  def hashSplitLabel(df: DataFrame, token: Column, ratios: Seq[(String, Double)],
+                     seed: Int, to: String): DataFrame = {
+    val cumulative = ratios.scanLeft(0.0)(_ + _._2).tail
+    val last = lit(ratios.last._1)
+    ratios.map(_._1).zip(cumulative).init match {
+      case Seq() => df.withColumn(to, last)
+      case (l0, t0) +: rest =>
+        val r = col("__split_r")
+        df.withColumn("__split_r", hashSplitDraw(token, seed))
+          .withColumn(to, rest.foldLeft(when(r < t0, l0)) {
+            case (acc, (label, thresh)) => acc.when(r < thresh, label)
+          }.otherwise(last))
+          .drop("__split_r")
+    }
+  }
+
+  /** The hash split's draw r in [0, 1) for `token`. */
+  def hashSplitDraw(token: Column, seed: Int): Column = {
     val hex = sha2(concat(lit(seed.toString), lit("|"), token.cast("string")), 256)
     // low 53 bits of the big-endian first 8 bytes = hex chars 3..16 masked
     val low56 = conv(substring(hex, 3, 14), 16, 10).cast("long")
-    val r = (low56.bitwiseAND(lit((1L << 53) - 1))).cast("double") /
-      lit((1L << 53).toDouble)
-    val cumulative = ratios.scanLeft(0.0)(_ + _._2).tail
-    val labeled = ratios.map(_._1).zip(cumulative).foldLeft(lit(null).cast("string")) {
-      case (acc, (label, thresh)) => when(acc.isNotNull, acc)
-        .otherwise(when(r < thresh, label))
-    }
-    coalesce(labeled, lit(ratios.last._1))
+    low56.bitwiseAND(lit((1L << 53) - 1)).cast("double") / lit((1L << 53).toDouble)
   }
 
   /** Time split — reference TimeLabeler: label_i for boundaries b with

@@ -11,13 +11,14 @@ import graft.functions.TimeFns
   * tiebreak columns (the reference relies on stable sort arrival order; a
   * distributed engine needs an explicit tiebreak for reproducibility).
   *
-  * Capability reference: /root/reference/docs/transforms/stream.md and
-  * /root/reference/src/datapipeline/transforms/stream/ (all ops). Re-expressed as
-  * Spark Window transforms: a chain of k ordered ops over the same StreamKey
-  * shares ONE exchange on the partition key and one sort, where the
-  * reference makes k sequential Python passes. Exceptions: `collapse`
-  * partitions by (partition, time) and shuffles on that; `rolling_slope`
-  * re-sorts on (partition, __run) inside the key's partitions.
+  * Capability reference: the reference's docs/transforms/stream.md and
+  * src/datapipeline/transforms/stream/ (all ops). The
+  * reference makes one Python pass per op over each partition's history;
+  * here every ordered op on one key is a step of ONE [[OrderedScan]]: one
+  * exchange on the partition key, one sort on (partition, time, tiebreak),
+  * and one pass that runs all the steps (collapse and rolling_slope
+  * included). `w` is the same order as a Spark window, for the ops that
+  * stay Window plans (ensure_cadence, ensure_ticks, validate_order).
   */
 final case class StreamKey(
     partitionBy: Seq[String],
@@ -31,9 +32,14 @@ final case class StreamKey(
 
 /** Ordered per-partition transforms (SURVEY.md §2.3).
   *
+  * Each ordered transform (lag, lead, rolling, forward_sum, fill,
+  * forward_fill, collapse, rolling_slope, sessionize) is a one-step
+  * [[OrderedScan]]; consecutive ones on the same key fuse into one scan
+  * ([[FuseOrderedScans]]). Building the plan runs no Spark job.
+  *
   * Missing-value contract (reference transforms/utils.py is_missing): both
-  * NULL and NaN are "missing". Every numeric op routes inputs through
-  * [[Ordered.cleanNum]] so NaN behaves as NULL, matching the reference.
+  * NULL and NaN are "missing". Every numeric op reads NaN as NULL
+  * ([[Ordered.cleanNum]] for the record-wise ops), matching the reference.
   */
 object Ordered {
 
@@ -41,75 +47,61 @@ object Ordered {
   def cleanNum(c: Column): Column =
     when(c.isNull || isnan(c), lit(null)).otherwise(c).cast("double")
 
+  /** The first out-of-range parameter of an ordered transform on `field`:
+    * `periods` ≥ 1 (a lag of -1 would serve the next tick: a leak of the
+    * future), `window` ≥ 1, and `min_samples` within 1..window (outside it
+    * every value is NULL).
+    */
+  def rangeError(op: String, field: String, periods: Option[Int] = None,
+                 window: Option[Int] = None,
+                 minSamples: Option[Int] = None): Option[String] = {
+    def bad(what: String) = Some(s"$op of '$field': $what")
+    (periods, window, minSamples) match {
+      case (Some(p), _, _) if p < 1 => bad(s"periods must be >= 1, got $p")
+      case (_, Some(w), _) if w < 1 => bad(s"window must be >= 1, got $w")
+      case (_, Some(w), Some(m)) if m < 1 || m > w =>
+        bad(s"min_samples must lie in 1..$w, got $m")
+      case _ => None
+    }
+  }
+
+  private def checkRange(op: String, field: String, periods: Option[Int] = None,
+                         window: Option[Int] = None, minSamples: Option[Int] = None): Unit =
+    rangeError(op, field, periods, window, minSamples)
+      .foreach(m => throw new IllegalArgumentException(m))
+
   // ---------------------------------------------------------------- lag/lead
 
   /** reference: transforms/stream/lag.py (LagTransform) */
   def lagPeriods(df: DataFrame, key: StreamKey, field: String, periods: Int,
-                 to: String): DataFrame =
-    df.withColumn(to, lag(col(field), periods).over(key.w))
+                 to: String): DataFrame = {
+    checkRange("lag", field, periods = Some(periods))
+    OrderedScan.withStep(df, key, Some(to))(c => ShiftStep(c(field), -periods))
+  }
 
   /** reference: transforms/stream/lead.py (LeadTransform) */
   def leadPeriods(df: DataFrame, key: StreamKey, field: String, periods: Int,
-                  to: String): DataFrame =
-    df.withColumn(to, lead(col(field), periods).over(key.w))
+                  to: String): DataFrame = {
+    checkRange("lead", field, periods = Some(periods))
+    OrderedScan.withStep(df, key, Some(to))(c => ShiftStep(c(field), periods))
+  }
 
   // ---------------------------------------------------------------- rolling
 
   /** reference: transforms/stream/rolling.py (RollingTransform) +
     * transforms/rolling_window.py. Missing ticks occupy a window position
-    * (row frame does exactly that) but only non-missing values count toward
-    * `minSamples` (default = window).
+    * but only non-missing values count toward `minSamples` (default =
+    * window). Statistics: mean, stdev, pstdev, max, min, median (the
+    * reference's even-window branch).
     */
   def rolling(df: DataFrame, key: StreamKey, field: String, window: Int,
               statistic: String, to: String,
               minSamples: Option[Int] = None): DataFrame = {
-    val frame = key.w.rowsBetween(-(window - 1), 0)
-    val v = cleanNum(col(field))
-    val minS = minSamples.getOrElse(window)
-    if (statistic == "median") {
-      // `window` OFFSET probes + a native codegen'd gather instead of a
-      // collect_list aggregate: the object-buffer window built and sorted
-      // a boxed list per ROW — at the 1000x decade that priced
-      // rolling_median ~3x its plan-identical rolling_mean sibling (and
-      // the HOF filter/array_sort replacement is CodegenFallback — no
-      // faster). lag() is a bare row-buffer read in WindowExec; NULL
-      // probes (missing values AND offsets past the partition head — the
-      // rows collect_list skipped) drop in the gather, the min_samples
-      // gate is the survivor count, and the ≤window doubles sort in the
-      // projection (functions/RollingMedianExpr.scala; OrderedSpec pins
-      // equality with the collect_list shape).
-      val probes = (0 until window).map(i =>
-        org.apache.spark.sql.GraftColumnBridge.expression(
-          lag(v, i).over(key.w)))
-      return df.withColumn(to, org.apache.spark.sql.GraftColumnBridge.column(
-        graft.functions.RollingMedianK(probes, minS)))
-    }
-    val samples = count(v).over(frame)
-    val stat: Column = statistic match {
-      case "mean"   => avg(v).over(frame)
-      case "stdev"  => stddev_samp(v).over(frame)
-      case "pstdev" => stddev_pop(v).over(frame)
-      case "max"    => max(v).over(frame)
-      case "min"    => min(v).over(frame)
-      case other =>
-        throw new IllegalArgumentException(s"Unknown rolling statistic: $other")
-    }
-    df.withColumn(to, when(samples >= minS, stat))
-  }
-
-  /** Median of an already-sorted array, reference RollingMedian semantics:
-    * odd → middle; even → lower + (upper - lower) / 2, except a
-    * zero-straddling pair uses (lower + upper) / 2 — mirrors the reference's
-    * exact branch; the two forms differ in floating point.
-    */
-  private def medianOf(sorted: Column): Column = {
-    val n = size(sorted)
-    val mid = (n / 2).cast("int") + 1 // element_at is 1-based
-    val lower = element_at(sorted, mid - 1)
-    val upper = element_at(sorted, mid)
-    val even = when(lower < 0.0 && upper > 0.0, (lower + upper) / 2.0)
-      .otherwise(lower + (upper - lower) / 2.0)
-    when(n % 2 === 1, element_at(sorted, mid)).otherwise(even)
+    checkRange("rolling", field, window = Some(window), minSamples = minSamples)
+    if (!Set("mean", "stdev", "pstdev", "max", "min", "median")(statistic))
+      throw new IllegalArgumentException(s"Unknown rolling statistic: $statistic")
+    OrderedScan.withStep(df, key, Some(to))(c =>
+      RollingStep(c(field), window, statistic, minSamples.getOrElse(window)))
   }
 
   // ------------------------------------------------------------ forward_sum
@@ -120,42 +112,32 @@ object Ordered {
     */
   def forwardSum(df: DataFrame, key: StreamKey, field: String, window: Int,
                  to: String): DataFrame = {
-    val frame = key.w.rowsBetween(1, window)
-    val v = cleanNum(col(field))
-    val complete = count(lit(1)).over(frame) === window &&
-      count(v).over(frame) === window
-    df.withColumn(to, when(complete, sum(v).over(frame)))
+    checkRange("forward_sum", field, window = Some(window))
+    OrderedScan.withStep(df, key, Some(to))(c => ForwardSumStep(c(field), window))
   }
 
   // ------------------------------------------------------------------- fill
 
   /** reference: transforms/stream/fill.py (StatisticalFillTransform) — impute
-    * missing values with a statistic of the previous `window` positions
-    * (missing positions occupy slots; current row excluded).
+    * missing values with a statistic (mean or median) of the previous
+    * `window` positions (missing positions occupy slots; current row
+    * excluded).
     */
   def fill(df: DataFrame, key: StreamKey, field: String, window: Int,
            statistic: String, to: String, minSamples: Int = 1): DataFrame = {
-    val frame = key.w.rowsBetween(-window, -1)
-    val v = cleanNum(col(field))
-    val samples = count(v).over(frame)
-    val stat = statistic match {
-      case "mean"   => avg(v).over(frame)
-      case "median" => medianOf(sort_array(collect_list(v).over(frame)))
-      case other =>
-        throw new IllegalArgumentException(s"Unknown fill statistic: $other")
-    }
-    val imputed = when(samples >= minSamples, stat)
-    df.withColumn(to, when(v.isNull, imputed).otherwise(v))
+    checkRange("fill", field, window = Some(window), minSamples = Some(minSamples))
+    if (statistic != "mean" && statistic != "median")
+      throw new IllegalArgumentException(s"Unknown fill statistic: $statistic")
+    OrderedScan.withStep(df, key, Some(to))(c =>
+      FillStep(c(field), window, statistic, minSamples))
   }
 
   /** reference: transforms/stream/fill.py (ForwardFillTransform) — carry the
     * last non-missing value within each partition.
     */
   def forwardFill(df: DataFrame, key: StreamKey, field: String,
-                  to: String): DataFrame = {
-    val frame = key.w.rowsBetween(Window.unboundedPreceding, 0)
-    df.withColumn(to, last(cleanNum(col(field)), ignoreNulls = true).over(frame))
-  }
+                  to: String): DataFrame =
+    OrderedScan.withStep(df, key, Some(to))(c => ForwardFillStep(c(field)))
 
   // ----------------------------------------------------------------- derive
 
@@ -198,28 +180,23 @@ object Ordered {
   def dedupe(df: DataFrame): DataFrame = df.dropDuplicates()
 
   /** reference: transforms/stream/collapse.py — keep the first or last record
-    * for each (partition, time). `keep` order is the deterministic tiebreak.
+    * for each (partition, time). `keep` order is the deterministic tiebreak:
+    * the first or last row of the (partition, time) run in the scan's
+    * (partition, time, tiebreak) order.
     */
   def collapse(df: DataFrame, key: StreamKey, keep: String): DataFrame = {
     // The reference keeps arrival order, which a distributed shuffle does not
-    // preserve — a deterministic tiebreak is mandatory here. Fail fast with a
-    // usable message instead of letting row_number() over an unordered window
-    // fail analysis downstream.
+    // preserve — a deterministic tiebreak is mandatory here.
     require(key.tiebreak.nonEmpty,
       "collapse requires a non-empty StreamKey.tiebreak: arrival order is not " +
         "defined on a distributed stream; pass the columns that make " +
         "(partition, time) groups deterministically ordered")
-    val order = keep match {
-      case "first" => key.tiebreak.map(col)
-      case "last"  => key.tiebreak.map(col(_).desc)
+    val keepLast = keep match {
+      case "first" => false
+      case "last"  => true
       case other   => throw new IllegalArgumentException(s"Unknown keep: $other")
     }
-    val w = Window
-      .partitionBy((key.partitionBy :+ key.timeCol).map(col): _*)
-      .orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
+    OrderedScan.withStep(df, key, None)(_ => CollapseStep(keepLast))
   }
 
   // ----------------------------------------------------------- ensure ticks
@@ -325,52 +302,25 @@ object Ordered {
 
   /** reference: transforms/rolling_slope.py + transforms/stream/rolling_slope.py
     * — least-squares slope of y on x over a strict rolling window; a missing
-    * (x, y) pair CLEARS the window. Re-expressed without state: segment each
-    * partition into runs of consecutive valid pairs (run id = running count of
-    * invalid rows), then slope over the last `window` rows of the run once the
-    * run holds `window` valid pairs.
+    * (x, y) pair CLEARS the window, so a slope needs `window` consecutive
+    * valid pairs.
     */
   def rollingSlope(df: DataFrame, key: StreamKey, x: String, y: String,
                    window: Int, to: String): DataFrame = {
     require(window >= 2, "rolling_slope window must be at least 2")
-    val xv = cleanNum(col(x))
-    val yv = cleanNum(col(y))
-    val invalid = (xv.isNull || yv.isNull).cast("int")
-    val runFrame = key.w.rowsBetween(Window.unboundedPreceding, 0)
-    val withRun = df
-      .withColumn("__xv", xv)
-      .withColumn("__yv", yv)
-      .withColumn("__run", sum(invalid).over(runFrame))
-    val runW = Window
-      .partitionBy((key.partitionBy :+ "__run").map(col): _*)
-      .orderBy(key.orderCols: _*)
-    // Count valid (x, y) PAIRS toward the window — a run's single boundary
-    // row (the invalid pair that cleared the window) must not count.
-    val validPair = col("__xv").isNotNull && col("__yv").isNotNull
-    val validPos = count(when(validPair, lit(1))).over(
-      runW.rowsBetween(Window.unboundedPreceding, 0))
-    val slope = regr_slope(col("__yv"), col("__xv"))
-      .over(runW.rowsBetween(-(window - 1), 0))
-    withRun
-      .withColumn(to, when(validPair && validPos >= window, slope))
-      .drop("__xv", "__yv", "__run")
+    OrderedScan.withStep(df, key, Some(to))(c => SlopeStep(c(x), c(y), window))
   }
 
   // ------------------------------------------------------------ sessionize
 
   /** Gap-based sessionization: a new session starts when the time since the
     * previous record in the partition exceeds `gap`. Emits the input plus a
-    * per-partition `session_id` (0-based). One window pass — same shuffle
-    * profile as every other ordered transform on the key.
+    * per-partition `session_id` (0-based), as one scan step.
     */
   def sessionize(df: DataFrame, key: StreamKey, gap: String,
                  to: String = "session_id"): DataFrame = {
     val gapUs = TimeFns.parseCadenceMillis(gap) * 1000L
-    val t = unix_micros(col(key.timeCol))
-    val prev = lag(t, 1).over(key.w)
-    val newSession = when(prev.isNull || (t - prev) > gapUs, 1).otherwise(0)
-    df.withColumn(to,
-      sum(newSession).over(key.w.rowsBetween(Window.unboundedPreceding, 0)) - 1)
+    OrderedScan.withStep(df, key, Some(to))(c => SessionStep(c(key.timeCol), gapUs))
   }
 
   // --------------------------------------------------------- order validate

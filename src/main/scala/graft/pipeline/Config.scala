@@ -5,6 +5,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
 
+import graft.operators.Ordered
+
 /** Declarative project configuration — the graft twin of the reference's
   * YAML-driven dataset project (docs/config.md; config/transforms.py,
   * config/sources.py, config/streams.py, the config/dataset package).
@@ -24,7 +26,7 @@ import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
   *  - `${env:...}` interpolation is rejected (zero-egress builds must not
   *    read ambient state); `${var}` resolves from the document's `globals`.
   *  - `sequence: {size, stride}` series policies become masked window
-  *    columns on the stream's own ordered window
+  *    columns on the stream's own ordered scan
   *    (`Assembly.sequenceWindow`, assembled by
   *    `ConfigRuntime.assembleSamples`); a NULL value keeps its position in
   *    the window. A sequenced vector's stream must be partitioned by the
@@ -651,8 +653,22 @@ object Config {
           "belong in preprocess")
       case _ => ()
     }
+    transforms.flatMap(rangeError).headOption.foreach(m => fail(s"$ctx: $m"))
     StreamDef(id, from, mapDef, partitionBy, strListOpt(t, "tiebreak"),
       preprocess, transforms)
+  }
+
+  /** An ordered transform's out-of-range parameter ([[Ordered.rangeError]]). */
+  private def rangeError(op: Pipeline.Op): Option[String] = op match {
+    case Pipeline.Lag(f, n, _) => Ordered.rangeError("lag", f, periods = Some(n))
+    case Pipeline.Lead(f, n, _) => Ordered.rangeError("lead", f, periods = Some(n))
+    case Pipeline.Rolling(f, _, w, _, m) =>
+      Ordered.rangeError("rolling", f, window = Some(w), minSamples = m)
+    case Pipeline.ForwardSum(f, w, _) =>
+      Ordered.rangeError("forward_sum", f, window = Some(w))
+    case Pipeline.Fill(f, w, _, _, m) =>
+      Ordered.rangeError("fill", f, window = Some(w), minSamples = Some(m))
+    case _ => None
   }
 
   private def parseVector(raw: Any, ctx: String): VectorDef = {

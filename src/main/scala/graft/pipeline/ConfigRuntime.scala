@@ -15,7 +15,7 @@ import graft.operators.{Assembly, Compose, StreamKey}
   * Scale posture: stream resolution is pure plan composition (no action);
   * source-backed streams read column-pruned scans, broadcast streams become
   * broadcast hash joins, aligned streams become sort-merge joins on
-  * (partition, time). Sample assembly rides each stream's own window pass
+  * (partition, time). Sample assembly rides each stream's own ordered pass
   * ([[assembleSamples]]); coverage metadata (≤ |vectors| rows, one job) and
   * per-fold scaler stats (|folds| rows) are the only driver-side
   * materializations, mirroring the reference's metadata.json /
@@ -162,6 +162,33 @@ object ConfigRuntime {
       }
     }
 
+    /** True when each (sample_time, partition) group of stream `id` holds at
+      * most one row, so sample assembly needs no aggregate. It does when the
+      * stream is source-backed, its last preprocess time op floors to a
+      * multiple of `cadence` (so flooring again to `cadence` changes no
+      * time), and it collapses (partition, time) with no later op that adds
+      * rows (ensure_cadence, a plugin). No transform may write the time or
+      * a partition column.
+      */
+    def oneRowPerSample(id: String, cadence: String): Boolean = {
+      val d = project.stream(id)
+      val keyCols = ("time" +: partitionBy(id)).map(_.toLowerCase)
+      val timeOps = d.preprocess.collect {
+        case op: Pipeline.FloorTime => Some(op.by)
+        case _: Pipeline.ShiftTime => None
+      }
+      val floored = timeOps.lastOption.flatten.exists(by =>
+        TimeFns.parseCadenceMillis(by) % TimeFns.parseCadenceMillis(cadence) == 0)
+      val collapsed = d.transforms.lastIndexWhere(_.isInstanceOf[Pipeline.Collapse])
+      val addsRows = d.transforms.drop(collapsed).exists {
+        case _: Pipeline.EnsureCadence | _: Pipeline.PluginStage => true
+        case _ => false
+      }
+      d.from.isInstanceOf[Config.FromSource] && floored && collapsed >= 0 &&
+        !addsRows && !d.transforms.flatMap(Pipeline.writes)
+          .exists(c => keyCols.contains(c.toLowerCase))
+    }
+
     /** The RECORDS stage (reference "records" = the full stream pipeline):
       * preprocess + ordered transforms over the canonical frame.
       */
@@ -252,13 +279,16 @@ object ConfigRuntime {
     * Each referenced stream is assembled in one pass. A suffix-free stream
     * is ONE aggregate grouped by (sample_time, keys): a scalar vector takes
     * the max of its field as double, a sequence vector the max of its
-    * window list. The window list is a masked column on the stream's own
-    * ordered window (reference SequenceConfig → sequence_series,
+    * window list. The window list is a step of the stream's own ordered
+    * scan (reference SequenceConfig → sequence_series,
     * pipelines/series/stages.py:33: windows per series entity before
     * bucketing; a window's time is its last record's time), so the stream
     * is already hash-partitioned on its keys and the aggregate plans no
-    * exchange of its own. A stream with only sequence vectors keeps the
-    * rows that emit a window: a sample exists only where one does.
+    * exchange of its own. Where each group provably holds one row
+    * ([[Resolver.oneRowPerSample]]) the aggregate is a projection: `max`
+    * over an array cannot hash-aggregate, so it would sort every row again.
+    * A stream with only sequence vectors keeps the rows that emit a window:
+    * a sample exists only where one does.
     *
     * A stream with partition fields beyond the sample keys projects long
     * series rows and pivots their suffixed ids (reference SeriesProjector);
@@ -295,18 +325,21 @@ object ConfigRuntime {
     val wide = plain.map { case (sid, vs) =>
       val (seqVs, scalarVs) = vs.partition(_.sequence.isDefined)
       val seqCols = seqVs.zipWithIndex.map { case (v, i) => v -> s"__seq$i" }
-      val windows = seqCols.map { case (v, c) =>
+      val rows0 = seqCols.foldLeft(res.stream(sid)) { case (d, (v, c)) =>
         val sq = v.sequence.get
-        Assembly.sequenceWindow(res.key(sid), col(v.field), sq.size, sq.stride)
-          .as(c)
+        Assembly.sequenceWindow(d, res.key(sid), v.field, sq.size, sq.stride, c)
       }
-      val rows0 = res.stream(sid).select(col("*") +: windows: _*)
       val rows =
         if (scalarVs.nonEmpty) rows0
         else rows0.where(seqCols.map(s => col(s._2).isNotNull).reduce(_ || _))
-      val aggs = scalarVs.map(v => max(col(v.field).cast("double")).as(v.id)) ++
-        seqCols.map { case (v, c) => max(col(c)).as(v.id) }
-      rows.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
+      val values = scalarVs.map(v => col(v.field).cast("double") -> v.id) ++
+        seqCols.map { case (v, c) => col(c) -> v.id }
+      if (res.oneRowPerSample(sid, ds.cadence))
+        rows.select(groupCols ++ values.map { case (c, id) => c.as(id) }: _*)
+      else {
+        val aggs = values.map { case (c, id) => max(c).as(id) }
+        rows.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
+      }
     }
 
     // the id and value columns of the long rows are renamed by position to
@@ -418,8 +451,7 @@ object ConfigRuntime {
         val token = concat_ws("|",
           (unix_micros(col("sample_time")).cast("string") +:
             ds.sampleKeys.map(k => col(k).cast("string"))): _*)
-        rowFiltered.withColumn("__label",
-          Assembly.hashSplitLabel(token, ratios, seed))
+        Assembly.hashSplitLabel(rowFiltered, token, ratios, seed, "__label")
       case Some(Config.TimeSplit(intervals, _)) =>
         rowFiltered.withColumn("__label",
           Assembly.timeSplitLabel(col("sample_time"), intervals))

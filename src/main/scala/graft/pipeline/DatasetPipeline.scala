@@ -92,8 +92,8 @@ object DatasetPipeline {
       cfg.rowThreshold)
 
     // --- split (reference HashLabeler over sample.key)
-    val labeled = filtered.withColumn("fold",
-      Assembly.hashSplitLabel(cfg.splitToken, cfg.ratios, cfg.seed))
+    val labeled = Assembly.hashSplitLabel(filtered, cfg.splitToken, cfg.ratios,
+      cfg.seed, "fold")
 
     // --- per-fold scaler: fit on the TRAIN label only (reference
     // FoldedScalerArtifact.for_fold → SampleScaler), apply in place to every

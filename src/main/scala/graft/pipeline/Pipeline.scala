@@ -11,11 +11,15 @@ import graft.operators.{Ordered, StreamKey}
   * statistic: mean, to: close_mean_20`).
   *
   * A reference user's YAML pipeline maps 1:1 onto a `Seq[Op]`; `Pipeline.run`
-  * folds it into ONE DataFrame plan, so a chain of k ordered transforms
-  * shares one exchange and sort on the stream key (the reference runs k
-  * sequential per-record passes). `collapse` adds an exchange on
-  * (partition, time) ahead of it, and `rolling_slope` re-sorts on
-  * (partition, __run) within the key's partitions.
+  * folds it into ONE DataFrame plan. Each ordered op (collapse, lag, lead,
+  * rolling, rolling_slope, forward_sum, fill, forward_fill, sessionize) is
+  * a step of an [[graft.operators.OrderedScan]], and consecutive steps on
+  * the stream key fuse into one scan: a chain of k ordered transforms costs
+  * one exchange on the partition key, one sort on (partition, time,
+  * tiebreak) and one pass (the reference runs k sequential per-record
+  * passes). A record-wise op between two ordered ones (where, derive, log,
+  * a plugin, …) splits the chain into two scans; the second needs no new
+  * exchange or sort, since a scan keeps its input's partitioning and order.
   */
 object Pipeline {
 
@@ -50,6 +54,23 @@ object Pipeline {
     * resolved at config-parse time and run at its declared position.
     */
   final case class PluginStage(name: String, op: graft.plugins.PluginOp) extends Op
+
+  /** The column `op` writes, if it writes one. */
+  def writes(op: Op): Option[String] = op match {
+    case Lag(_, _, to)             => Some(to)
+    case Lead(_, _, to)            => Some(to)
+    case Rolling(_, _, _, to, _)   => Some(to)
+    case RollingSlope(_, _, _, to) => Some(to)
+    case ForwardSum(_, _, to)      => Some(to)
+    case Fill(_, _, _, to, _)      => Some(to)
+    case ForwardFill(_, to)        => Some(to)
+    case Derive(_, _, to, _, _)    => Some(to)
+    case Log(_, to)                => Some(to)
+    case Log1p(_, to)              => Some(to)
+    case EncodeTime(_, to)         => Some(to)
+    case Sessionize(_, to)         => Some(to)
+    case _                         => None
+  }
 
   /** Fold the op list into one plan. */
   def run(df: DataFrame, key: StreamKey, ops: Seq[Op]): DataFrame =

@@ -53,6 +53,7 @@ object Posture {
 
   private def isSortFamily(p: SparkPlan): Boolean = p match {
     case _: WindowExec | _: WindowGroupLimitExec => true
+    case _: graft.operators.OrderedScanExec => true
     case _: SortExec => true // a global/top sort with no consumer above
     case _ => false
   }

@@ -208,9 +208,8 @@ object QueriesAssembly {
     // sha256(seed|token) 53-bit ratio bucketing — bit-identical to reference
     // HashLabeler (pipelines/dataset/split.py).
     "hash_split" -> { (s, d) =>
-      documents(s, d).select(col("doc_id"),
-        Assembly.hashSplitLabel(col("doc_id"),
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), seed = 42).as("fold"))
+      Assembly.hashSplitLabel(documents(s, d).select(col("doc_id")), col("doc_id"),
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), seed = 42, "fold")
     },
 
     "time_split" -> { (s, d) =>
@@ -225,9 +224,8 @@ object QueriesAssembly {
     // std is rounded to 6dp at fit time on both sides so the per-row
     // (x - mean) / std arithmetic is bit-identical across engines.
     "standard_scaler" -> { (s, d) =>
-      val e = events(s, d).withColumn("fold",
-        Assembly.hashSplitLabel(col("event_id"),
-          Seq("train" -> 0.8, "test" -> 0.2), seed = 7))
+      val e = Assembly.hashSplitLabel(events(s, d), col("event_id"),
+        Seq("train" -> 0.8, "test" -> 0.2), seed = 7, "fold")
       val train = e.filter(col("fold") === "train")
       val stats = train.agg(
         (sumDec(col("value")) / count(col("value"))).as("mean"),

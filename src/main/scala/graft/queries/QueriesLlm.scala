@@ -713,8 +713,8 @@ object QueriesLlm {
     // publishing a split. Leak-sized output, never pair-sized; a duplicated
     // corpus takes the exact-dup rep-collapse path behind the HLL probe.
     "split_leakage" -> { (s, d) =>
-      val docs = documents(s, d).withColumn("fold",
-        Assembly.hashSplitLabel(col("doc_id"), LeakFolds, LeakSeed))
+      val docs = Assembly.hashSplitLabel(documents(s, d), col("doc_id"),
+        LeakFolds, LeakSeed, "fold")
       Dedup.splitLeakage(docs, "text", "doc_id", "fold")
     },
 
@@ -1452,10 +1452,10 @@ object QueriesLlm {
     // lang-keyed exact-decimal aggregate; the two LM scalars (train token
     // count, vocab size) are a metadata-scale driver hop at plan build.
     "heldout_nll" -> { (s, d) =>
-      val docs = documents(s, d).select(col("lang"),
-        graft.operators.Assembly.hashSplitLabel(col("doc_id"),
-          HeldoutFolds, HeldoutSeed).as("fold"),
-        col("text"))
+      val docs = graft.operators.Assembly.hashSplitLabel(
+        documents(s, d).select(col("lang"), col("doc_id"), col("text")),
+        col("doc_id"), HeldoutFolds, HeldoutSeed, "fold")
+        .select(col("lang"), col("fold"), col("text"))
       val toks = docs.select(col("lang"), col("fold"),
         explode(Text.tokens(col("text"))).as("tok"))
       val train = toks.filter(col("fold") === "train")

@@ -10,9 +10,9 @@ import Q._
 /** §2.3 ordered per-partition transforms over the `events` stream
   * (partition_by = user_id, time = ts, tiebreak = event_id).
   *
-  * All of these share one Window partition profile, so a chain of them costs
-  * a single shuffle+sort (reference does one Python pass per transform —
-  * see /root/reference/src/datapipeline/transforms/stream/).
+  * Each ordered one is a step of an ordered scan on the key, so a chain of
+  * them costs a single shuffle+sort and one pass (reference does one Python
+  * pass per transform, in its src/datapipeline/transforms/stream/).
   *
   * `value_m` is a deterministic missing-value mask (every 7th event) used to
   * exercise the reference's missing-semantics: min_samples gating, fill,
@@ -142,8 +142,9 @@ object QueriesOrdered {
         round(col("r5"), 6).as("r5"))
     },
 
-    // Declarative pipeline chain (reference transforms: config list): four
-    // ordered ops fused by Catalyst into ONE shuffle+sort over the key.
+    // Declarative pipeline chain (reference transforms: config list): a
+    // filter, two ordered ops fused into ONE scan over one shuffle+sort on
+    // the key, then two record-wise ops.
     "pipeline_chain" -> { (s, d) =>
       import graft.pipeline.Pipeline
       import graft.pipeline.Pipeline._

@@ -26,9 +26,8 @@ class AssemblySpec extends SparkSpec {
 
   test("hashSplitLabel matches the reference sha256 bucketing bit-for-bit") {
     val tokens = (0L until 200L).toDF("id")
-    val got = tokens.select(col("id"),
-      Assembly.hashSplitLabel(col("id"),
-        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), seed = 42).as("fold"))
+    val got = Assembly.hashSplitLabel(tokens, col("id"),
+        Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), seed = 42, "fold")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val cum = Seq(0.8, 0.8 + 0.1, 1.0)
     (0L until 200L).foreach { id =>
@@ -36,6 +35,29 @@ class AssemblySpec extends SparkSpec {
       val expect =
         if (r < cum(0)) "train" else if (r < cum(1)) "val" else "test"
       assert(got(id) == expect, s"id=$id r=$r")
+    }
+  }
+
+  test("hashSplitLabel: one CASE over one hash equals the nested fold") {
+    val tokens = (0L until 10000L).map(i => if (i % 97 == 0) None else Some(s"t$i"))
+      .toDF("tok")
+    val ratioSets = Seq(
+      Seq("a" -> 1.0),
+      Seq("a" -> 0.7, "b" -> 0.3),
+      Seq("a" -> 0.25, "b" -> 0.25, "c" -> 0.25, "d" -> 0.25),
+      Seq("a" -> 0.2, "b" -> 0.3),                             // sums below 1
+      Seq("a" -> 0.5, "b" -> 0.4, "c" -> 0.3, "d" -> 0.1, "e" -> 0.05), // above 1
+      Seq("a" -> 0.1, "b" -> 0.1, "c" -> 0.2, "d" -> 0.2, "e" -> 0.2, "a" -> 0.2))
+    for (ratios <- ratioSets) {
+      val split = Assembly.hashSplitLabel(tokens, col("tok"), ratios, 7, "label")
+      val labeled = split.withColumn("fold", OrderedTwin.hashSplitFold(col("tok"), ratios, 7))
+      assert(labeled.where(!(col("label") <=> col("fold"))).count() == 0, ratios)
+      assert(labeled.where(col("label").isNull).count() == 0, ratios)
+      val sha2s = split.queryExecution.analyzed.collect {
+        case p => p.expressions.map(_.collect {
+          case s: org.apache.spark.sql.catalyst.expressions.Sha2 => s }.size).sum
+      }.sum
+      assert(sha2s == (if (ratios.size == 1) 0 else 1), s"$ratios: $sha2s sha2 calls")
     }
   }
 

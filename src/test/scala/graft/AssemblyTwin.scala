@@ -14,7 +14,7 @@ import graft.pipeline.{Config, ConfigRuntime, Series}
   * (one explode per stream), bucketed and pivoted wide: a static pivot on
   * the vector ids when every stream is suffix-free, Spark's dynamic pivot
   * otherwise. Each sequence vector re-runs its stream's ordered window on
-  * its own (`Assembly.sequenceWindows`) and aggregates per bucket. The
+  * its own (`OrderedTwin.sequenceWindow`, a Spark window) and aggregates per bucket. The
   * frames meet by a full outer join on `(sample_time, keys)`.
   */
 object AssemblyTwin {
@@ -57,8 +57,9 @@ object AssemblyTwin {
           "partitioned by the sample keys only")
       val sq = v.sequence.get
       val key = StreamKey(pb, "time", res.tiebreak(v.stream))
-      Assembly.sequenceWindows(res.stream(v.stream), key, v.field,
+      OrderedTwin.sequenceWindow(res.stream(v.stream), key, v.field,
         sq.size, sq.stride, "__seq")
+        .where(col("__seq").isNotNull)
         .withColumn("sample_time", TimeFns.floorTime(col("time"), ds.cadence))
         .groupBy((col("sample_time") +: ds.sampleKeys.map(col)): _*)
         .agg(max(col("__seq")).as(v.id))

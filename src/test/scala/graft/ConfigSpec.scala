@@ -249,6 +249,40 @@ class ConfigSpec extends SparkSpec {
     }
   }
 
+  /** A one-stream project whose transform list is `op`; parsing must fail
+    * naming the stream, the field and the broken range.
+    */
+  private def rejectsRange(op: String, needle: String): Unit = {
+    val yaml = s"""streams: [ { id: ticks.s, from: { source: x }, transforms: [ $op ] } ]"""
+    val e = intercept[IllegalArgumentException](Config.parseProject(yaml))
+    assert(e.getMessage.contains(s"stream 'ticks.s': $needle"), s"got: ${e.getMessage}")
+  }
+
+  test("ranges: lag and lead need periods >= 1 (a negative lag serves the future)") {
+    rejectsRange("{ operation: lag, field: value, periods: -1 }",
+      "lag of 'value': periods must be >= 1, got -1")
+    rejectsRange("{ operation: lead, field: value, periods: 0 }",
+      "lead of 'value': periods must be >= 1, got 0")
+  }
+
+  test("ranges: rolling, forward_sum and fill need window >= 1") {
+    rejectsRange("{ operation: rolling, field: value, window: 0, statistic: mean }",
+      "rolling of 'value': window must be >= 1, got 0")
+    rejectsRange("{ operation: forward_sum, field: volume, window: 0, to: f }",
+      "forward_sum of 'volume': window must be >= 1, got 0")
+    rejectsRange("{ operation: fill, field: value, window: 0, statistic: mean }",
+      "fill of 'value': window must be >= 1, got 0")
+  }
+
+  test("ranges: min_samples must lie in 1..window") {
+    rejectsRange("{ operation: rolling, field: value, window: 3, statistic: mean, min_samples: 4 }",
+      "rolling of 'value': min_samples must lie in 1..3, got 4")
+    rejectsRange("{ operation: rolling, field: value, window: 3, statistic: max, min_samples: 0 }",
+      "rolling of 'value': min_samples must lie in 1..3, got 0")
+    rejectsRange("{ operation: fill, field: value, window: 2, statistic: mean, min_samples: 3 }",
+      "fill of 'value': min_samples must lie in 1..2, got 3")
+  }
+
   test("strictness: unknown ops, unknown fields, env refs are rejected") {
     def bad(yaml: String, needle: String): Unit = {
       val e = intercept[IllegalArgumentException](Config.parseProject(yaml))

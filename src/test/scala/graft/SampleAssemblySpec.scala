@@ -172,6 +172,50 @@ class SampleAssemblySpec extends SparkSpec {
       s"twin exchanges: ${twinPlans.flatMap(SqlExecutions.exchanges)}")
   }
 
+  test("a collapsed stream assembles with one exchange and no aggregate") {
+    // floored to the sample cadence and collapsed, each (sample_time, user)
+    // holds one row: the samples are a projection of the stream's one scan
+    val p = Config.parseProject(
+      """sources:
+        |  - id: ticks
+        |    loader: { transport: fs, path: ticks.parquet, reader: { format: parquet } }
+        |streams:
+        |  - id: c
+        |    from: { source: ticks }
+        |    map: { time: ts }
+        |    partition_by: [user_id]
+        |    tiebreak: [seq]
+        |    preprocess:
+        |      - { operation: floor_time, cadence: 1h }
+        |    transforms:
+        |      - { operation: collapse, keep: last }
+        |      - { operation: forward_fill, field: value, to: ff }
+        |      - { operation: rolling, field: ff, window: 2, statistic: mean, to: r2 }
+        |dataset:
+        |  sample: { cadence: 1h, keys: [user_id] }
+        |  features:
+        |    - { id: ff, stream: c, field: ff }
+        |    - { id: r2, stream: c, field: r2 }
+        |    - { id: w, stream: c, field: vol, sequence: { size: 2, stride: 1 } }
+        |""".stripMargin)
+    val res = ConfigRuntime.resolver(spark, dataDir, p)
+    assert(res.oneRowPerSample("c", "1h") && res.oneRowPerSample("c", "30m"))
+    assert(!res.oneRowPerSample("c", "2h"), "a coarser cadence merges hours")
+    val got = ConfigRuntime.assembleSamples(res, p.dataset.get)
+    val (rows, plans) = SqlExecutions.recorded(spark)(got.collect())
+    val nodes = plans.flatMap(SqlExecutions.nodeNames)
+    assert(!nodes.exists(n => n == "SortAggregate" || n == "Window" ||
+      n.contains("HashAggregate")), nodes)
+    // the scan's sort, and the local one under its map-side collapse
+    assert(nodes.count(_ == "Sort") == 2, nodes)
+    assert(nodes.count(_ == "OrderedScan") == 1, nodes)
+    assert(nodes.count(_ == "OrderedScanPartial") == 1, nodes)
+    assert(plans.flatMap(SqlExecutions.exchanges).map(_.keys) == Seq(Seq("user_id")))
+    val twin = AssemblyTwin.assemble(res, p.dataset.get).collect()
+    assert(rows.map(_.toString).sorted.toSeq == twin.map(_.toString).sorted.toSeq)
+    assert(rows.length >= 5)
+  }
+
   test("column selection measures features and targets in one coverage job") {
     val p = Config.parseProject(Streams +
       """dataset:

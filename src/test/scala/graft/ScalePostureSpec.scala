@@ -47,10 +47,11 @@ class ScalePostureSpec extends SparkSpec {
   }
 
   test("a k-op ordered chain costs exactly one Exchange and one Sort") {
-    // SURVEY §5's headline claim: every §2.3 transform shares
-    // Window.partitionBy(key).orderBy(time), so Catalyst plans a chain of k
-    // of them as consecutive Window operators over ONE shuffle + ONE sort —
-    // where the reference runs k sequential per-record passes.
+    // SURVEY §5's headline claim: every §2.3 transform is a step of an
+    // ordered scan on the stream key, so a chain of k of them plans as
+    // scans over ONE shuffle + ONE sort (a record-wise op between two of
+    // them splits the scan, not the shuffle) — where the reference runs k
+    // sequential per-record passes.
     import graft.pipeline.Pipeline
     import graft.pipeline.Pipeline._
     import graft.operators.StreamKey

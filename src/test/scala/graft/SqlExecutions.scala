@@ -93,6 +93,12 @@ object SqlExecutions extends AdaptiveSparkPlanHelper {
         s.metrics("shuffleBytesWritten").value)
     }
 
+  /** Every operator of `plan`, subqueries and query stages included, by
+    * node name.
+    */
+  def nodeNames(plan: SparkPlan): Seq[String] =
+    collectWithSubqueries(plan) { case p => p.nodeName }
+
   /** Every join operator of `plan`, subqueries included, by node name. */
   def joins(plan: SparkPlan): Seq[String] =
     collectWithSubqueries(plan) { case j: BaseJoinExec => j.nodeName }

@@ -521,11 +521,10 @@ class TextDedupSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
       .union(Seq((900000L, "tiny")).toDF("doc_id", "text"))
     val Off = 1000000L
-    val tripled = base
+    val tripled = graft.operators.Assembly.hashSplitLabel(base
       .union(base.select(col("doc_id") + Off, col("text")))
-      .union(base.select(col("doc_id") + 2 * Off, col("text")))
-      .withColumn("fold", graft.operators.Assembly.hashSplitLabel(
-        col("doc_id"), Seq("train" -> 0.9, "test" -> 0.1), seed = 21))
+      .union(base.select(col("doc_id") + 2 * Off, col("text"))),
+      col("doc_id"), Seq("train" -> 0.9, "test" -> 0.1), seed = 21, "fold")
     def run(collapse: Boolean) =
       Dedup.splitLeakage(tripled, "text", "doc_id", "fold",
         collapseOverride = Some(collapse))
@@ -1045,11 +1044,10 @@ class TextDedupSpec extends SparkSpec {
     val got = SparkEntry.queries("heldout_nll")(spark, sf)
       .collect().map(r => r.getString(0) ->
         ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select(col("lang"),
-        graft.operators.Assembly.hashSplitLabel(col("doc_id"),
-          Seq("train" -> 0.8, "test" -> 0.2), 42).as("fold"),
-        col("text"))
+    val docs = graft.operators.Assembly.hashSplitLabel(
+        graft.sources.Tables.documents(spark, sf), col("doc_id"),
+        Seq("train" -> 0.8, "test" -> 0.2), 42, "fold")
+      .select(col("lang"), col("fold"), col("text"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
     def toks(t: String) = t.toLowerCase.split("\\s+").toSeq
     val trainToks = docs.filter(_._2 == "train").flatMap(d => toks(d._3))
